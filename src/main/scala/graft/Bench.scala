@@ -292,26 +292,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     awaitQuietStart()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // SPARK_GRAFT_ONLY: comma-separated name-prefix filter for LOCAL
     // iteration on a query subset with the full bench methodology
     // (quiet-wait, warm-up, best-of-3, corroboration). The driver never
     // sets it; the artifact it produces is partial by construction and
     // is never committed as a round bench.
-    val keep: String => Boolean = sys.env.get("SPARK_GRAFT_ONLY") match {
-      case Some(p) => n => p.split(",").exists(n.startsWith)
-      case None    => _ => true
-    }
-    val qs = SparkEntry.queries.toSeq.filter(q => keep(q._1)).sortBy(_._1)
+    val qs = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY")).toSeq.sortBy(_._1)
     runPass(spark, sfDir, qs) // warm-up pass at the sf under test (untimed)
     // Tainted-retry (VERDICT-r13 task 2): a measurement that self-flags
     // tainted is invalid by its own tool — BENCH_r13 shipped with skew

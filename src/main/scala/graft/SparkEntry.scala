@@ -25,6 +25,15 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Q.queryMap(allQueries)
 
+  /** The queries whose names start with one of the comma-separated
+    * `prefixes`; all of them when `prefixes` is None. For local iteration
+    * on a subset — the driver always runs the full set. */
+  def selected(prefixes: Option[String]): Map[String, (SparkSession, String) => DataFrame] =
+    prefixes.fold(queries) { p =>
+      val ps = p.split(",")
+      queries.filter { case (n, _) => ps.exists(n.startsWith) }
+    }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -14,28 +13,19 @@ import java.nio.file.{Files, Paths}
   *  - the per-query dumps run from a small thread pool (guide §2.6 —
   *    independent actions back-fill each other's stragglers; the wall
   *    was per-query driver latency, not executor saturation). Safe
-  *    because session memos build once behind computeIfAbsent, published
-  *    index artifacts are content-keyed (fingerprint, not "latest"), and
-  *    GenSnap.noAqe is depth-counted for concurrent fixpoint loops. */
+  *    because queries share no mutable session state: session memos
+  *    build once behind computeIfAbsent, published index artifacts are
+  *    content-keyed (fingerprint, not "latest"), staged leaves are
+  *    immutable once built, and the only conf a query sets is one
+  *    constant (autoBucketedScan off), so interleaved sets cannot leave
+  *    another query under a wrong value. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated name-prefix filter for fast local
     // iteration on a single query (the driver always runs the full set)
-    val keep: String => Boolean = args.lift(2) match {
-      case Some(p) => n => p.split(",").exists(n.startsWith)
-      case None    => _ => true
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet is TIMESTAMP(NANOS) — see Events.eventsUs
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val qs = SparkEntry.selected(args.lift(2))
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -49,7 +39,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
+    val json = SparkEntry.oracleSql.filter(kv => qs.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Parallel dump: 8 in-flight queries hide each other's per-job driver
@@ -58,12 +48,12 @@ object Verify {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     val t0 = System.nanoTime()
     val done = new java.util.concurrent.atomic.AtomicInteger(0)
-    val names = SparkEntry.queries.keys.filter(keep).toSeq
+    val names = qs.keys.toSeq
     names.foreach { name =>
       pool.execute { () =>
         try {
           spark.sparkContext.setJobDescription(s"verify: $name")
-          SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
+          qs(name)(spark, sfDir).coalesce(1).write
             .mode("overwrite").parquet(s"$outDir/$name")
           val n = done.incrementAndGet()
           if (n % 50 == 0) System.err.println(

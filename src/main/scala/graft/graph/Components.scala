@@ -837,8 +837,8 @@ object Components {
     val BcastMax = 1000000L
     def bcastIf(rows: Long, df: DataFrame): DataFrame =
       if (rows <= BcastMax) broadcast(df) else df
-    // noAqe wrap REVERTED (r18): the interrupted session wrapped this
-    // loop unbenched; the full bench measured it 3.37 -> 4.64 s (0.73x).
+    // This loop keeps AQE: running it AQE-off measured 3.37 -> 4.64 s
+    // (0.73x) on the full bench (OPTIMIZATION_r18.md).
     // Without AQE the per-round exchanges stay at 32 partitions and the
     // coalesced-to-few task shape AQE gives these tiny frontier
     // aggregations is worth more than the per-exchange job-wave it costs.
@@ -993,18 +993,11 @@ object Components {
         // minLabel's component-minimum, but the forest output is
         // label-invariant: picks and pair-minima depend only on the
         // component PARTITION, never on which id names it.
-        // Generation snapshot for the jump loop: a bare localCheckpoint
-        // would carry originStats forward, and a SELF-join SQUARES
-        // sizeInBytes every generation — by round 4 the stats visitor
-        // is multiplying million-digit BigInts and the driver burns
-        // ~40 s in SizeInBytesOnlyStatsPlanVisitor (measured; jstack'd
-        // round 12). [[GenSnap.snap]] is that finding generalized: it
-        // caps the carried estimate so the product can never compound,
-        // without the round-12 createDataFrame re-wrap's
-        // InternalRow→Row→InternalRow round-trip.
-        def snap(df: DataFrame): DataFrame = GenSnap.snap(df)
+        // Generation snapshots for the jump loop: a bare localCheckpoint
+        // would carry originStats forward, and this SELF-join squares
+        // sizeInBytes every generation; GenSnap.snap caps it.
         val pk = pick.select(col("c"), col("other").as("o"))
-        var par = snap(pk
+        var par = GenSnap.snap(pk
           .join(pk.select(col("c").as("oc"), col("o").as("oo")),
             col("o") === col("oc"), "left")
           .select(col("c"),
@@ -1014,7 +1007,7 @@ object Components {
         var jumps = 0
         while (jumping) {
           jumps += 1
-          val j = snap(par
+          val j = GenSnap.snap(par
             .join(par.select(col("c").as("pc"), col("p").as("pp")),
               col("p") === col("pc"))
             .select(col("c"), col("pp").as("p"),

@@ -5,7 +5,7 @@ import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy, VertexId}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GenSnap
+import org.apache.spark.sql.graft.{GenSnap, Layout}
 
 /** The reference's property-graph data model, Spark-first. The reference
   * stores Image/Centroid nodes and CLOSEST_TO edges in Neo4j
@@ -93,23 +93,8 @@ object PropertyGraph {
   // session reuses ONE materialization instead of recomputing the
   // distinct per query. At 100 TB this is a persisted edge table written
   // once. The map is bounded by (#sessions × #sf dirs) — a handful in
-  // any harness run.
-  //
-  // STAGING FORM (r17 optimization round): an eagerly-materialized
-  // localCheckpoint LEAF, not cache(). Measured at sf0.1, the cache()
-  // form cost every fixpoint superstep ~0.2 s/task re-reading the
-  // "cached" edges — the per-query listener showed InMemoryTableScan
-  // stages burning 70-110 s of summed executor CPU per query
-  // (graph_temporal_reach 100 s, lpa_converged 80 s, hits 13 s for a
-  // 320 k-row edge list), consistent with the scan recomputing the
-  // cached child rather than reading built blocks. Swapping the memo to
-  // a materialized checkpoint leaf dropped graph_temporal_reach's
-  // executor CPU 100 s → 2.6 s and wall 11.6 → 5.0 s with zero plan
-  // changes downstream. The leaf is the same shape a persisted
-  // adjacency table has at 100 TB (a concrete stored table, scanned,
-  // never re-derived); guide §1.2 step 1 / §2.4.
-  private def stage(df: DataFrame): DataFrame = GenSnap.staged(df)
-
+  // any harness run. Staged leaves are checkpoints, not cache() — see
+  // GenSnap's invariants.
   private val graphMemo = graft.SessionMemo[PropertyGraph]()
 
   // ── THE master edge leaf (r17 storage consolidation) ────────────────
@@ -157,9 +142,9 @@ object PropertyGraph {
           col("t").cast("int").as("t"),
           col("deg").cast("int").as("deg"))
         // HOT: every fixpoint superstep scans this leaf (a 30-round SSSP
-        // alone reads it 30×) — columnar-cached, disk-backed (GenSnap
-        // stagedByHot scaladoc has the measured SER-scan-tax numbers)
-        .transform(org.apache.spark.sql.graft.GenSnap.stagedByHot(_, col("src")))
+        // alone reads it 30×) — columnar-cached, disk-backed (GenSnap's
+        // hot-leaf invariant has the measured SER-scan-tax numbers)
+        .transform(GenSnap.stage(_, Layout.By(col("src")), hot = true))
     }
 
   /** The master leaf re-widened to the LONG schema consumers expect. */
@@ -239,7 +224,7 @@ object PropertyGraph {
       supplierPartGraph(s, d).nodes.select(col("id"))
         // HOT: the loop-invariant LEFT side of every power-iteration
         // merge — scanned once per superstep by pagerank/ppr/katz
-        .transform(org.apache.spark.sql.graft.GenSnap.stagedHot)
+        .transform(GenSnap.stage(_, hot = true))
     }
 
   private val weightedUeMemo = graft.SessionMemo[DataFrame]()
@@ -293,7 +278,7 @@ object PropertyGraph {
   private[graft] def closenessDist(s: SparkSession, d: String): DataFrame =
     closenessDistMemo.getOrCompute(s, d) {
       Components.multiBfs(undirectedEdges(s, d), ClosenessSeeds, SpMaxDepth)
-        .transform(org.apache.spark.sql.graft.GenSnap.stagedWideHot)
+        .transform(GenSnap.stage(_, Layout.Wide, hot = true))
     }
 
   /** Unroll depth for `graph_path_counts`' per-level MATERIALIZED-CTE
@@ -517,7 +502,7 @@ object PropertyGraph {
           col("a.sk") === col("b.sk") && col("b.rn") === col("a.rn") + 1)
         .filter(col("a.p") =!= col("b.p"))
         .select(col("a.p").as("src"), col("b.p").as("dst")).distinct()
-        .transform(stage)
+        .transform(GenSnap.stage(_))
     }
 
   private val sccLabelsMemo = graft.SessionMemo[DataFrame]()
@@ -533,7 +518,7 @@ object PropertyGraph {
         .union(de.select(col("dst").as("id"))).distinct()
       val (scc, rounds) = Components.sccColoring(nodes, de, SccMaxRounds)
       require(rounds <= SccMaxRounds, s"SCC peel used $rounds rounds")
-      scc.transform(stage)
+      scc.transform(GenSnap.stage(_))
     }
 
   /** The chain-graph + definitional-SCC CTEs shared by both oracles:
@@ -597,7 +582,7 @@ object PropertyGraph {
         // substrate 12×/query (nbr + adj per step), and its consumer
         // stages were width-starved at the natural (AQE-coalesced) leaf
         // width — the r17 regression VERDICT task 1 names
-        .transform(org.apache.spark.sql.graft.GenSnap.stagedByHot(_, col("src")))
+        .transform(GenSnap.stage(_, Layout.By(col("src")), hot = true))
         .select(col("src").cast("long").as("src"),
           col("dst").cast("long").as("dst"), col("rn"),
           col("deg").cast("long").as("deg"))
@@ -631,7 +616,7 @@ object PropertyGraph {
       // hash(walker) exchange at build time collapses the cache to the
       // session partition count AND co-locates each walker's steps for
       // the skip-gram self-join.
-      steps.reduce(_ unionByName _).transform(org.apache.spark.sql.graft.GenSnap.stagedByHot(_, col("walker")))
+      steps.reduce(_ unionByName _).transform(GenSnap.stage(_, Layout.By(col("walker")), hot = true))
     }
 
   /** The walk unroll as a complete SELECT — shared by
@@ -673,7 +658,7 @@ object PropertyGraph {
       Components.lpa(supplierPartGraph(s, d).nodes.select(col("id")),
           undirectedEdges(s, d), LpaIters, stageEdges = false)
         .select(col("id"), col("l").as("community"))
-        .transform(stage)
+        .transform(GenSnap.stage(_))
     }
 
   // ── Louvain shared machinery (graph_louvain_one_level / _two_level) ─
@@ -781,7 +766,7 @@ object PropertyGraph {
       // half-step of the level, and the level-2 quotient is
       // session-retained via louvainL2Memo — the r18 audit read the SER
       // snap at 32.7 MB; columnar is both smaller and ~5× cheaper/scan
-      .transform(GenSnap.stagedHot)
+      .transform(GenSnap.stage(_, hot = true))
 
   /** Hierarchy level cap (level 1 = bipartite sweeps + up to 7 quotient
     * levels). Usage probed ("louvain_levels") and margin-pinned at
@@ -802,7 +787,7 @@ object PropertyGraph {
     louvainL2Memo.getOrCompute(s, d) {
       val (_, c1) = louvainLevel1(s, d)
       val qe = louvainContract(weightedUndirectedEdges(s, d), c1)
-      (qe, louvainQuotientSweeps(qe, "level-2").transform(stage))
+      (qe, louvainQuotientSweeps(qe, "level-2").transform(GenSnap.stage(_)))
     }
 
   private val louvainFinalMemo = graft.SessionMemo[(DataFrame, Int)]()
@@ -817,7 +802,7 @@ object PropertyGraph {
   private[graft] def louvainHierarchyFinal(s: SparkSession, d: String): (DataFrame, Int) =
     louvainFinalMemo.getOrCompute(s, d) {
       val t = louvainHierarchyTrail(s, d)
-      (t.last.transform(stage), t.length)
+      (t.last.transform(GenSnap.stage(_)), t.length)
     }
 
   /** The composed (original id → community) label frame after each
@@ -878,7 +863,7 @@ object PropertyGraph {
         comm = louvainSweep(ue, deg, twoM, comm,
           idCol => (idCol >= PartIdOffset) === lit(moverIsPart))
       }
-      (deg, comm.transform(stage))
+      (deg, comm.transform(GenSnap.stage(_)))
     }
 
   /** One Louvain half-step as chained CTEs — the oracle twin of
@@ -954,7 +939,7 @@ object PropertyGraph {
   private def sigmaTower(s: SparkSession, d: String): DataFrame =
     sigmaMemo.getOrCompute(s, d) {
       Components.multiBfsCounts(undirectedEdges(s, d), SpLandmarks, SigmaUnroll)
-        .transform(org.apache.spark.sql.graft.GenSnap.stagedWideHot)
+        .transform(GenSnap.stage(_, Layout.Wide, hot = true))
     }
 
   /** The σ tower (multi-source shortest-path counts) as DuckDB CTEs —
@@ -1579,7 +1564,7 @@ object PropertyGraph {
         // per (session, dir) instead of re-running the forward BFS
         val tower = sampledTowerMemo.getOrCompute(s, d) {
           Components.multiBfsCounts(undirectedEdges(s, d), seeds, SigmaUnroll)
-            .transform(org.apache.spark.sql.graft.GenSnap.stagedWideHot)
+            .transform(GenSnap.stage(_, Layout.Wide, hot = true))
         }
         Components.betweenness(undirectedEdges(s, d), seeds, SigmaUnroll,
             tower = Some(tower))
@@ -3078,7 +3063,7 @@ object PropertyGraph {
             .select(col("cs").as("src"), col("cd").as("dst")).distinct()
             .transform(GenSnap.snap)
           val cnodes = lbl.select(col("scc").as("id")).distinct()
-          Components.dagLayers(cnodes, cond, SccMaxRounds * 4).transform(stage)
+          Components.dagLayers(cnodes, cond, SccMaxRounds * 4).transform(GenSnap.stage(_))
         }
         val sizes = sccLabels(s, d).groupBy("scc").agg(count(lit(1)).as("size"))
         layers.join(sizes, col("id") === col("scc"))
@@ -3210,7 +3195,7 @@ object PropertyGraph {
               .when(col("isIn") === 1, "in")
               .when(col("isOut") === 1, "out")
               .otherwise("other").as("component_class"))
-            .transform(stage)
+            .transform(GenSnap.stage(_))
         }
         classes
           .groupBy("component_class").agg(count(lit(1)).as("n_vertices"))

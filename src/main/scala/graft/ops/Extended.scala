@@ -552,7 +552,7 @@ object Extended {
       "sink_graph_roundtrip",
       (s, d) => {
         val g = graft.graph.ClusterGraph.build(s, d, k = 8)
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_sink_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
+        val dir = graft.tools.Staging.dir("sink", d)
         g.nodes.write.mode("overwrite").partitionBy("label").parquet(s"$dir/nodes")
         g.edges.write.mode("overwrite").parquet(s"$dir/edges")
         val nodes = s.read.parquet(s"$dir/nodes")
@@ -577,7 +577,7 @@ object Extended {
       "src_json_csv_roundtrip",
       (s, d) => {
         val base = documents(s, d).select("doc_id", "lang", "n_chars")
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_src_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
+        val dir = graft.tools.Staging.dir("src", d)
         base.write.mode("overwrite").json(s"$dir/json")
         base.write.mode("overwrite").option("header", "true").csv(s"$dir/csv")
         val fromJson = s.read.schema(base.schema).json(s"$dir/json")

@@ -53,7 +53,7 @@ object Recall {
   private def tierTopk(s: org.apache.spark.sql.SparkSession, d: String) =
     tierMemo.getOrCompute(s, d) {
       (MrrMethods.map(_._2) :+ "ann_bruteforce_topk").distinct
-        .map(qn => qn -> org.apache.spark.sql.graft.GenSnap.staged(fns(qn)(s, d))).toMap
+        .map(qn => qn -> GenSnap.stage(fns(qn)(s, d))).toMap
     }
 
   /** (method, query, score column, ascending?) — each tier's OWN final

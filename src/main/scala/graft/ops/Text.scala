@@ -254,7 +254,7 @@ object Text {
   private def cachedSketch(s: SparkSession, d: String): DataFrame =
     sketchMemo.getOrCompute(s, d) {
       sketchBuilds.incrementAndGet()
-      docSketch(s, d).transform(GenSnap.staged)
+      docSketch(s, d).transform(GenSnap.stage(_))
     }
 
   // The ≥0.5-Jaccard near-dup pair set — the SPINE of the dedup
@@ -282,7 +282,7 @@ object Text {
     dupEdgesMemo.getOrCompute(s, d) {
       dupPairBuilds.incrementAndGet()
       minhashPairs(s, d).filter(col("jaccard") >= 0.5)
-        .select("id_a", "id_b").transform(GenSnap.staged)
+        .select("id_a", "id_b").transform(GenSnap.stage(_))
     }
 
   // ── persisted pair spine: build once, serve many (the ANN-index
@@ -478,7 +478,7 @@ object Text {
         .join(dup.toDF("x", "z"), Seq("x", "z"))
         .select(explode(array(col("x"), col("y"), col("z"))).as("doc_id"))
         .groupBy("doc_id").agg(count(lit(1)).as("triangles"))
-        .transform(GenSnap.staged)
+        .transform(GenSnap.stage(_))
     }
 
   // Near-dup cluster labels (doc_id → component min-label) — ONE
@@ -509,7 +509,7 @@ object Text {
   private val simhashMemo = graft.SessionMemo[DataFrame]()
 
   private def cachedSimhash(s: SparkSession, d: String): DataFrame =
-    simhashMemo.getOrCompute(s, d) { simhashSigs(s, d).transform(GenSnap.staged) }
+    simhashMemo.getOrCompute(s, d) { simhashSigs(s, d).transform(GenSnap.stage(_)) }
 
   /** Unroll depth for `dedup_kcore`'s oracle — must be ≥ the peel
     * rounds the Spark fixpoint actually needed (require'd in the
@@ -594,7 +594,7 @@ object Text {
     bpeMemo.getOrCompute(s, d) {
       val dir = bpePersistedTokenizer(s, d)
       val words = s.read.parquet(s"$dir/words")
-        .select("word", "w", "cnt").transform(GenSnap.staged)
+        .select("word", "w", "cnt").transform(GenSnap.stage(_))
       val merges = s.read.parquet(s"$dir/merges")
         .select("r", "a", "b", "f").orderBy("r").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
@@ -830,9 +830,9 @@ object Text {
     unigramMemo.getOrCompute(s, d) {
       val dir = uniPersistedTokenizer(s, d)
       val vocab = s.read.parquet(s"$dir/vocab")
-        .select("piece", "cnt", "cost").transform(GenSnap.staged)
+        .select("piece", "cnt", "cost").transform(GenSnap.stage(_))
       val seg = s.read.parquet(s"$dir/seg")
-        .select("word", "cnt", "dpcost", "seg").transform(GenSnap.staged)
+        .select("word", "cnt", "dpcost", "seg").transform(GenSnap.stage(_))
       (vocab, seg)
     }
 

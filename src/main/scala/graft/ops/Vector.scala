@@ -123,7 +123,7 @@ object Vector {
           g = scored.filter(col("rk") <= NnKb).select("src", "dst")
             .transform(GenSnap.snap)
         else gOld = scored.filter(col("rk") <= NnKb)
-          .select("src", "dst", "sim").transform(GenSnap.staged)
+          .select("src", "dst", "sim").transform(GenSnap.stage(_))
       }
       (e, n, gOld)
     }
@@ -207,7 +207,7 @@ object Vector {
       if (r < NnRounds)
         b = scored.filter(col("rk") <= NnKb).select("src", "dst")
           .transform(GenSnap.snap)
-      else adj = scored.filter(col("rk") <= NnKb).select("src", "dst").transform(GenSnap.staged)
+      else adj = scored.filter(col("rk") <= NnKb).select("src", "dst").transform(GenSnap.stage(_))
     }
     (e, n, adj)
   }
@@ -229,11 +229,11 @@ object Vector {
       val n = s.read.parquet(s"$base/meta").head().getAs[Long]("n")
       val e = embeddings(s, d)
         .select(col("vec_id").as("id"), vec(col("embedding")).as("v"))
-        .transform(GenSnap.staged)
+        .transform(GenSnap.stage(_))
       // HOT: every beam hop of every serve query scans the adjacency
       // (~10 hops × 8 queries per pass) — columnar int columns
       val adj = gsAdjTable(s, base).select("src", "dst")
-        .transform(GenSnap.stagedHot)
+        .transform(GenSnap.stage(_, hot = true))
       (e, n, adj)
     }
 
@@ -537,7 +537,7 @@ object Vector {
   private[graft] def gsRepairedIndex(s: SparkSession, d: String): (DataFrame, Long, DataFrame) =
     gsRepairMemo.getOrCompute(s, d) {
       val (eS, n, adj2) = gsRepairBuild(s, d)
-      (eS.transform(GenSnap.staged), n, adj2.transform(GenSnap.staged))
+      (eS.transform(GenSnap.stage(_)), n, adj2.transform(GenSnap.stage(_)))
     }
 
   private def gsRepairBuild(s: SparkSession, d: String): (DataFrame, Long, DataFrame) = {
@@ -578,7 +578,7 @@ object Vector {
   private[graft] def gsRebuiltRecallFloor(s: SparkSession, d: String): Long = {
     val (e, n, _) = nnSearchIndex(s, d)
     val eS = e.join(e.select("id").filter(gsTombPred(col("id"))), Seq("id"), "left_anti")
-      .transform(GenSnap.staged)
+      .transform(GenSnap.stage(_))
     var b = strideSeeds(eS, n).transform(GenSnap.snap)
     var adj: DataFrame = null
     for (r <- 1 to NnRounds) {
@@ -734,7 +734,7 @@ object Vector {
         .withColumn("rk", row_number().over(
           Window.partitionBy("src").orderBy(col("sim").desc, col("dst").asc)))
         .filter(col("rk") <= NnK)
-        .transform(GenSnap.staged)
+        .transform(GenSnap.stage(_))
     }
 
   /** Spec probe: how many times this process published a post-insert
@@ -1312,7 +1312,7 @@ object Vector {
   private val sq8Memo = graft.SessionMemo[DataFrame]()
 
   private[graft] def sq8(s: SparkSession, d: String): DataFrame =
-    sq8Memo.getOrCompute(s, d) { sq8Build(s, d).transform(GenSnap.staged) }
+    sq8Memo.getOrCompute(s, d) { sq8Build(s, d).transform(GenSnap.stage(_)) }
 
   private def sq8Build(s: SparkSession, d: String): DataFrame = {
     val e = embeddings(s, d)
@@ -1814,9 +1814,9 @@ object Vector {
           .select(col("vec_id").as("id"), vec(col("embedding")).as("v"))
           .transform(GenSnap.snap) // id+vector staging read by every round
         val n = e.count() // 1-value driver boundary: corpus size for the mod-N seeds
-        // noAqe over the descent rounds: TRIED AND REVERTED (r18). The
-        // wrap (with an in-wrap materialization so the rounds actually
-        // plan AQE-off) cut the job count 28 → 11, but static planning
+        // Planning the descent rounds AQE-off (with an in-scope
+        // materialization so the rounds actually plan AQE-off) was
+        // measured: it cut the job count 28 → 11, but static planning
         // replaced the scoring joins' runtime corpus broadcast with
         // sort-merge joins — summed executor CPU 7 → 61 s, tasks
         // 63 → 653, wall flat. The descent keeps AQE; its remaining

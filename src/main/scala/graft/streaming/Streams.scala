@@ -91,14 +91,6 @@ object Streams {
       .select(col("w.start").as("bar_start"), col("o.value").as("open"),
         col("high"), col("low"), col("c.value").as("close"), col("n"))
 
-  /** Watermarked sliding windows (1 hour every 15 minutes). */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("w.start").as("window_start"), col("cnt"))
-
   /** Streaming exact dedup by event_id. dropDuplicatesWithinWatermark
     * keys state on event_id and evicts each key once the watermark
     * passes it — bounded state on an unbounded stream, unlike plain

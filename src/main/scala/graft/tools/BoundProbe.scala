@@ -29,10 +29,5 @@ object BoundProbe {
 
   def maxUsed(kernel: String): Option[(Int, Int)] = Option(used.get(kernel))
 
-  def snapshot(): Map[String, (Int, Int)] = {
-    import scala.jdk.CollectionConverters._
-    used.asScala.toMap
-  }
-
   def clear(): Unit = used.clear()
 }

@@ -1,6 +1,5 @@
 package graft.tools
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -55,16 +54,7 @@ object Probe {
     val (sfDir, names) =
       if (args.nonEmpty && args.head.startsWith("/")) (args.head, args.tail)
       else ("/root/testdata/sf0.1", args)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // throwaway experiment knobs (PROBE_CONF="k=v,k=v")
-      .config(sys.env.get("PROBE_CONF").map(_.split(",").map(_.split("=", 2))
-        .collect { case Array(k, v) => (k, v) }.toMap).getOrElse(Map.empty[String, String]))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)
     // best-of-N (PROBE_PASSES, default 2): the box's external tenant

@@ -9,8 +9,9 @@ import java.util.concurrent.atomic.AtomicBoolean
   *
   * Two artifact classes with different lifetimes:
   *
-  *  - [[dir]] (`graft_pat_*`): pattern-write roundtrip staging
-  *    (graph_pattern_create / _delete / _detach_delete). A REAL sink
+  *  - [[dir]] (`graft_pat_*`): write→read roundtrip staging
+  *    (graph_pattern_create / _delete / _detach_delete,
+  *    sink_graph_roundtrip, src_json_csv_roundtrip). A REAL sink
   *    write, intentionally inside the timed bench pass (the write→read
   *    cycle IS the operator under test) — consumed only by the writing
   *    process, so every dir is registered with a JVM shutdown hook that

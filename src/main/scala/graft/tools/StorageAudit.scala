@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc storage audit (not part of the driver contract): run every
   * SparkEntry query once at the given sf, then dump the block-manager
@@ -10,12 +9,7 @@ import org.apache.spark.sql.SparkSession
 object StorageAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     val passes = args.lift(1).map(_.toInt).getOrElse(1)
     def dump(tag: String): Unit = {
       val st = spark.sparkContext.getRDDStorageInfo.sortBy(-_.memSize)
@@ -32,11 +26,9 @@ object StorageAudit {
         println(f"${i.memSize / 1048576.0}%9.1f MB  id=${i.id}%-6d $site")
       }
     }
+    val qs = graft.SparkEntry.queries.toSeq.sortBy(_._1)
     for (p <- 1 to passes) {
-      for ((n, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)) {
-        try fn(spark, sfDir).count()
-        catch { case e: Throwable => println(s"AUDIT-ERR $n: ${e.getMessage}") }
-      }
+      graft.Bench.runPass(spark, sfDir, qs)
       dump(s"post-pass-$p")
     }
     // localCheckpoint RDDs unpersist via the ContextCleaner once their

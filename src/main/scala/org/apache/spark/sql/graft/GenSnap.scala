@@ -1,288 +1,131 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Stats-capped generation snapshot for driver-counted fixpoint kernels.
+/** Row layout of a [[GenSnap.stage]]d leaf. A leaf's partition count is
+  * frozen at materialization and cannot be re-widened by AQE downstream,
+  * so width is a per-artifact choice:
+  *  - [[Layout.Natural]] keeps the build's own (often AQE-coalesced)
+  *    width — for point-scan/serving artifacts and substrates scanned
+  *    many times per query, where a wide leaf taxes every tiny scan;
+  *  - [[Layout.Wide]] repartitions round-robin to the session shuffle
+  *    parallelism — for substrates whose consumers do CPU-dense work
+  *    directly over the leaf scan;
+  *  - [[Layout.By]] hash-clusters rows by `keys` at the session shuffle
+  *    parallelism — keeps co-located keys for consumers' map-side
+  *    partial aggregations.
+  * Measurements for both directions: OPTIMIZATION_r17.md, batch 3. */
+sealed trait Layout
+object Layout {
+  case object Natural extends Layout
+  case object Wide extends Layout
+  final case class By(keys: Column*) extends Layout
+}
+
+/** Materialization at step boundaries: [[snap]] for per-generation
+  * fixpoint snapshots, [[stage]] for session-lifetime artifacts.
   *
-  * `Dataset.localCheckpoint` truncates lineage to a [[LogicalRDD]] but
-  * copies the pre-checkpoint plan's estimated `Statistics` into the new
-  * leaf (`originStats`). A fixpoint kernel whose next generation JOINS
-  * the previous one against a frame derived from it (minLabel's merge,
-  * Borůvka's pointer-jump self-join, NN-descent's neighbor-of-neighbor
-  * join) makes the size-only stats visitor MULTIPLY that leaf estimate
-  * by itself — so sizeInBytes SQUARES per generation, the BigInt's digit
-  * count doubles per round, and after enough rounds the driver burns
-  * seconds multiplying million-digit integers inside
-  * SizeInBytesOnlyStatsPlanVisitor (measured via jstack on
-  * graph_mst_boruvka, round 12: ~40 s of driver CPU, zero executor
-  * work). This helper generalizes the Borůvka fix to every generation
-  * snapshot: lazily localCheckpoint, then if the carried estimate
-  * exceeds [[CapBytes]] rebuild the [[LogicalRDD]] with the SAME rdd /
-  * partitioning / ordering but a capped `originStats`. Below the cap the
-  * frame is returned untouched, so honest small-frame estimates (and
-  * broadcast decisions) are preserved; above it the estimate is pinned,
-  * so a self-join can square it at most once before the next snap
-  * re-pins — planning cost stays O(1) across generations instead of
-  * doubly exponential. Unlike the round-12 `createDataFrame` re-wrap,
-  * no InternalRow→Row→InternalRow round-trip is paid.
+  * Invariants (measurements in OPTIMIZATION_r17.md and
+  * OPTIMIZATION_r18.md):
   *
-  * The cap is 64 GiB: far above any honest generation estimate at test
-  * scale (so it only engages once compounding has begun), far above the
-  * 10 MB broadcast threshold (a capped generation can never be wrongly
-  * broadcast — and an uncapped compounding estimate was never
-  * broadcastable either, so capping changes no join strategy), and small
-  * enough that cap² ≈ 2^72 is a two-word BigInt.
+  *  - '''Capped stats.''' `localCheckpoint` copies the producer plan's
+  *    estimated `Statistics` onto its leaf, and a generation that
+  *    self-joins squares that estimate, so after a few rounds the
+  *    driver multiplies million-digit BigInts while planning (~40 s on
+  *    graph_mst_boruvka). A leaf whose estimate exceeds [[CapBytes]]
+  *    (64 GiB) is re-wrapped over the SAME rdd with the estimate pinned
+  *    to the cap: far above the 10 MB broadcast threshold (a capped leaf
+  *    is never broadcast, and an uncapped compounding one never was
+  *    either), and cap² is still a two-word BigInt. Below the cap the
+  *    leaf is untouched, so honest small estimates keep broadcast
+  *    eligibility. Re-wraps forward the leaf's constraints.
+  *  - '''Unknown partitioning.''' Every leaf advertises the
+  *    UnknownPartitioning the AQE-planned checkpoint records. Claiming
+  *    the true hash partitioning (AQE-off builds) or the coalesced
+  *    adaptive partitioning both lost on the bench: static sort-merge
+  *    joins re-sorted the edge side every superstep, or coalesced
+  *    widths serialized downstream stages. A per-consumer Exchange of
+  *    the leaf is the cheaper side.
+  *  - '''Cold leaves persist MEMORY_AND_DISK_SER.''' Deserialized
+  *    UnsafeRows cost ~100-160 B each and broke the post-suite storage
+  *    budget; serialized rows are ~30-40 B and scan at a byte copy.
+  *  - '''Hot leaves are a columnar cache over a DISK_ONLY checkpoint,
+  *    advertising honest row-count stats.''' Substrates that fixpoint
+  *    supersteps scan every round pay ~10× the columnar scan cost
+  *    through the SER level. The columnar cache is built once over the
+  *    materialized leaf (no exchanges for AQE to re-plan), and the
+  *    checkpoint drops to DISK_ONLY so it holds no block-manager
+  *    memory. The returned leaf advertises `rowCount` = the measured
+  *    count and `sizeInBytes` = row width × rows — not the compressed
+  *    columnar size, which put multi-million-row substrates under the
+  *    10 MB threshold and broadcast them, and not the build plan's
+  *    estimate, which under-counted narrowed columns.
   *
-  * DEAD END, measured and documented (r13): under AQE the checkpoint
-  * records UnknownPartitioning(0) on the LogicalRDD (the physical root
-  * is AdaptiveSparkPlanExec, which hides the final plan's partitioning),
-  * so each downstream merge on the generation key re-pays one Exchange.
-  * Two recovery attempts both LOST on the bench: (a) planning the
-  * checkpoint with AQE disabled records the true hash partitioning but
-  * costs the PRODUCER plan its runtime re-optimization
-  * (ml_isotonic_calibration 2 s → 47 s when its corpus-sized upstream
-  * lost AQE); (b) grafting the finalized adaptive plan's
-  * outputPartitioning back onto the leaf claims the AQE-COALESCED
-  * partitioning (often 1-4 partitions at test scale), which downstream
-  * stages then inherit without re-expanding — serializing work that the
-  * "redundant" Exchange would have re-parallelized
-  * (graph_betweenness_sampled 4.2 s → 9.8 s). The per-round Exchange of
-  * a generation-sized (node-count, not edge-count) frame is the cheaper
-  * side of both trades; at 100 TB the same holds because the exchange
-  * volume is the frontier, never the adjacency.
-  */
+  * Leaves are checkpoints rather than `cache()`d plans because a cached
+  * plan with exchanges was re-evaluated per scan (OPTIMIZATION_r17.md,
+  * headline finding). */
 object GenSnap {
   val CapBytes: BigInt = BigInt(1L) << 36
 
-  /** Run `body` with AQE disabled on `s`'s session conf, restoring the
-    * previous value after (r18 optimization round, guide §1.2-3 +
-    * VERDICT-r17 task 3). Scope: the driver-synced FIXPOINT loops whose
-    * per-superstep exchanges AQE cannot improve — every exchange in a
-    * superstep has a statically known, frontier/label-sized shape (the
-    * adjacency side is a materialized leaf of known size; the join
-    * strategies are already pinned by explicit broadcast hints or
-    * leaf-size estimates), so runtime re-planning changes no decision
-    * and its only observable effect is one extra driver-synced job
-    * submission per exchange materialization. Measured at sf0.1 that
-    * job wave is the WALL of the whole iterative family (probe:
-    * graph_mst_boruvka 117 jobs for 19 s summed executor CPU;
-    * graph_weighted_sssp 52 jobs for a kernel whose warm per-round ops
-    * cost 0.27 s) — and the 8-core bench beating the 32-core bench
-    * (BENCH_r17_c8 204 s vs 242 s) says the same: per-stage driver
-    * latency, not compute, bounds these queries. This is NOT a
-    * local-mode-only setting: the superstep exchanges stay at the
-    * session shuffle parallelism (the conf, not a constant), and the
-    * per-exchange job-wave cost this removes exists on a cluster too.
-    * AQE stays ON everywhere else — artifact builds and one-shot
-    * queries keep runtime re-optimization (the r17 dead-end where an
-    * AQE-off BUILD cost ml_isotonic_calibration 2 s → 47 s is exactly
-    * why this helper scopes to the loop, never the producer). */
-  // Depth-counted so CONCURRENT noAqe bodies (Verify's parallel dump
-  // pool runs several fixpoint queries at once) restore correctly: a
-  // naive save/restore pair interleaved across two threads re-reads
-  // "false" as the "previous" value and leaves AQE off for the rest of
-  // the session. The conf flips off at the first enter and back to the
-  // true prior value at the last exit. One session per process (Bench /
-  // Verify / Probe all build exactly one), so a single counter suffices.
-  private val aqeOffDepth = new java.util.concurrent.atomic.AtomicInteger(0)
-  private var aqeSavedPrev: String = "true"
-  private val aqeLock = new Object
-  def noAqe[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    if (sys.env.contains("GRAFT_NOAQE_OFF")) return body // probe A/B escape hatch
-    val k = "spark.sql.adaptive.enabled"
-    aqeLock.synchronized {
-      if (aqeOffDepth.getAndIncrement() == 0) {
-        aqeSavedPrev = try s.conf.get(k) catch { case _: Throwable => "true" }
-        s.conf.set(k, "false")
-      }
+  /** Eagerly materialize `df` as a session-lifetime leaf in `layout`;
+    * `hot` selects the columnar-cache form for substrates scanned every
+    * superstep. */
+  def stage(df: DataFrame, layout: Layout = Layout.Natural,
+      hot: Boolean = false): DataFrame = {
+    val width = df.sparkSession.sessionState.conf.numShufflePartitions
+    val laid = layout match {
+      case Layout.Natural       => df
+      case Layout.Wide          => df.repartition(width)
+      case Layout.By(keys @ _*) => df.repartition(width, keys: _*)
     }
-    try body finally aqeLock.synchronized {
-      if (aqeOffDepth.decrementAndGet() == 0) s.conf.set(k, aqeSavedPrev)
-    }
-  }
-
-  /** Eagerly-materialized snapshot for session-memoized ARTIFACTS (the
-    * staged adjacencies, parsed-embedding tables, sketch tables — built
-    * once per session, scanned by every consumer). Replaces the former
-    * `.cache()` staging (r17 optimization round): measured at sf0.1,
-    * scanning one of these via InMemoryTableScan cost ~0.2 s per task
-    * PER SCAN — iterative consumers (fixpoint supersteps, beam hops)
-    * burned 70-110 s of summed executor CPU per query re-reading a
-    * 320 k-row "cached" edge list, consistent with the cached child
-    * being re-evaluated rather than served from built blocks. A
-    * materialized checkpoint leaf scans at plain-RDD cost (the same
-    * queries dropped to 2-6 s executor CPU) and is the honest 100 TB
-    * shape anyway: a persisted table, written once, read many times.
-    *
-    * Partitioning note (r17, measured twice): the staged leaf records
-    * UnknownPartitioning — and that is the RIGHT trade. An AQE-off
-    * build that records the true hash partitioning was tried mid-round:
-    * the claimed co-partitioning makes the planner keep sort-merge
-    * joins STATICALLY (no exchange ⇒ no runtime stats ⇒ no AQE
-    * broadcast conversion), so every fixpoint superstep re-SORTED the
-    * edge side — graph_temporal_reach summed executor CPU 2.6 → 46 s,
-    * graph_hits 3 → 18 s. The per-consumer Exchange of the leaf is the
-    * cheaper side, exactly as the snap() DEAD-END note concluded for
-    * per-generation checkpoints.
-    *
-    * Width note (r17, measured on the checkpoint bench, BOTH ways): a
-    * staged leaf's partition count is FROZEN at materialization, and
-    * the build's final exchange is AQE-coalesced — a 600 k-row artifact
-    * checkpoints at ~4 partitions, so a CPU-DENSE consumer stage rooted
-    * at the leaf (the common-neighbors pair explosion, the
-    * jaccard/butterfly wedge joins, the Brandes backward sweep) runs on
-    * 4 of 32 cores (graph_common_neighbors_salted 2.19 → 5.01 s). Leaf
-    * scans cannot be re-widened by AQE downstream. The inverse also
-    * measured: widening EVERY leaf taxes the many-tiny-scans consumers
-    * (a beam hop scans its adjacency 10×/query; ann_graph_search_batch
-    * 3.5 → 5.8 s at uniform width 32). So width is a PER-ARTIFACT
-    * choice: [[stagedWide]]/[[stagedBy]] repartition the build to the
-    * SESSION SHUFFLE PARALLELISM (scale-adaptive — the conf, not a
-    * constant) for substrates with CPU-dense consumers; plain
-    * [[staged]] keeps the build's natural width for
-    * point-scan/serving artifacts. */
-  def staged(df: DataFrame): DataFrame = eagerSnap(df, hot = false)
-
-  /** [[staged]] at the session shuffle parallelism (round-robin) — for
-    * artifacts whose consumers do CPU-dense work directly over the leaf
-    * scan. */
-  def stagedWide(df: DataFrame): DataFrame =
-    eagerSnap(df.repartition(numShufflePartitions(df)), hot = false)
-
-  /** [[stagedWide]] with the leaf rows CLUSTERED by `keys` (hash layout
-    * at the session parallelism) — keeps co-located keys for consumers'
-    * map-side partial aggregations where the old cache() sites
-    * repartitioned by key. The leaf still advertises
-    * UnknownPartitioning (see the partitioning note). */
-  def stagedBy(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
-    eagerSnap(df.repartition(numShufflePartitions(df), keys: _*), hot = false)
-
-  // ── HOT variants: columnar-cached leaves for scan-hot substrates ────
-  // (r18 optimization round, guide §1.2-2/§5.) The SER level taxes every
-  // scan with a per-row Externalizable UnsafeRow read + object churn:
-  // measured on a synthetic 1.3 M × 5-int leaf (tools/Scratch), a
-  // steady-state full scan costs 0.9-1.1 s executor CPU serialized vs
-  // ~0.1 s deserialized — and the fixpoint family scans its substrate
-  // leaves EVERY superstep (a 30-round SSSP scans the 2.6 M-row edge
-  // leaf 30×/query; the probe showed those scan stages at ~250 ms/task,
-  // ~10× the deserialized cost, with matching GC). Deserialized rows are
-  // no answer either (133 MB vs 82 MB SER for that frame — the budget
-  // breaks). The measured winner is a COLUMNAR cache() LAYERED OVER the
-  // checkpoint leaf: 17.7 MB resident (compressed int columns), scans at
-  // 0.06 s wall / 0.2 s CPU (tools/Scratch "cache-over-leaf"). The r17
-  // cache() pathology (cached child re-evaluated per scan) does not
-  // apply — the cached child here is the materialized LEAF, a plan with
-  // no exchanges for AQE to re-plan, so the columnar build happens once
-  // and every scan reads built batches. The leaf itself drops to
-  // DISK_ONLY: after the columnar build it is read again only if the
-  // cache is evicted, so it stops occupying block-manager memory
-  // entirely (the post-suite storage budget counts memory; the disk
-  // copy is the honest persisted-table backing a 100 TB substrate has
-  // anyway). Consumers' plans still root at the leaf (cache() does not
-  // rewrite the logical plan), so Components' staged-edge preconditions
-  // keep holding.
-  def stagedHot(df: DataFrame): DataFrame = eagerSnap(df, hot = true)
-
-  def stagedWideHot(df: DataFrame): DataFrame =
-    eagerSnap(df.repartition(numShufflePartitions(df)), hot = true)
-
-  def stagedByHot(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
-    eagerSnap(df.repartition(numShufflePartitions(df), keys: _*), hot = true)
-
-  private def numShufflePartitions(df: DataFrame): Int =
-    df.sparkSession.sessionState.conf.numShufflePartitions
-
-  /** Session-lifetime artifacts persist SERIALIZED (r17): the
-    * deserialized default kept each UnsafeRow as a separate object
-    * (~100-160 B for a 2-4 long row — the post-suite block-manager
-    * audit read 696 MB against the 200 MB budget after the cache()→
-    * checkpoint swap, vs ~30-40 B/row serialized). Scans pay one
-    * Externalizable UnsafeRow read per row — a byte copy, measured in
-    * the noise for every consumer family — and the artifact footprint
-    * drops ~2.5-3×. Per-generation [[snap]]s stay at the default level:
-    * they are reclaimed within a pass, so only peak (not retained)
-    * memory would change. */
-  private def eagerSnap(df: DataFrame, hot: Boolean): DataFrame =
     if (hot) {
-      // Hot = columnar cache re-wrapped as a stats-honest LEAF. Two
-      // rejected designs, both measured on the mini-bench:
-      //  1. returning the cache()d frame directly: once built,
-      //     InMemoryRelation.computeStats advertises the COMPRESSED
-      //     batch size (8.8 MB for the 2.6 M-row master edge leaf) —
-      //     under the 10 MB auto-broadcast threshold, so superstep
-      //     joins flipped to broadcasting millions of edge rows
-      //     (graph_temporal_reach 4.6 → 14.3 s, fixpoint family
-      //     +30-100%);
-      //  2. fencing with an internal NO_BROADCAST_HASH ResolvedHint:
-      //     EliminateResolvedHint attaches the hint to the nearest JOIN
-      //     ABOVE the leaf, so every derived frame transitively
-      //     containing the substrate — including tiny aggregated
-      //     frontiers — lost broadcast eligibility and forced SMJ
-      //     (graph_betweenness 4.4 → 7.6 s on the same box window).
-      // The leaf wrap gives the planner the same honest row-size stats
-      // the SER leaf had (no join-strategy change anywhere) while every
-      // scan decodes the columnar cache (~0.1 s CPU vs 0.9-1.1 s SER
-      // per 1.3 M-row scan, tools/Scratch). The wrapped RDD is the
-      // cached plan's executed RDD — reading it re-decodes built
-      // batches; the InMemoryRelation stays referenced through it.
-      val leaf = snapAt(df,
-        Some(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+      val leaf = snapAt(laid, Some(StorageLevel.DISK_ONLY))
       val cached = leaf.cache()
       val rowCount = cached.count() // one pass: disk leaf + columnar build
       val lr = leaf.queryExecution.logical.asInstanceOf[LogicalRDD]
-      val rdd = cached.queryExecution.executedPlan.execute()
-      // HONEST stats from the MEASURED row count × schema row width —
-      // neither the build plan's estimate (r17's int narrowing shrank
-      // the ranked-adjacency estimate under the 10 MB auto-broadcast
-      // threshold, so every node2vec step BROADCAST the 2.6 M-row
-      // adjacency: 12 broadcast-exchange stages per query in the probe,
-      // and the likely cause of its 4.1 → 6.7 s r17 regression) nor the
-      // compressed columnar size (the mini-bench disaster above). A
-      // big substrate advertises big; a genuinely small artifact keeps
-      // its honest small size and stays broadcastable.
-      val sizePerRow = org.apache.spark.sql.catalyst.plans.logical
-        .statsEstimation.EstimationUtils.getSizePerRow(lr.output)
-      val out = new LogicalRDD(
-        lr.output, rdd, lr.outputPartitioning, lr.outputOrdering,
-        lr.isStreaming, lr.stream)(
-        df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-        Some(Statistics(sizeInBytes = sizePerRow * rowCount,
-          rowCount = Some(rowCount))),
-        Some(lr.constraints))
-      Bridge.ofRows(df.sparkSession, out)
+      // scanning the cached plan's executed RDD decodes built batches;
+      // the InMemoryRelation stays referenced through it
+      val sizePerRow = EstimationUtils.getSizePerRow(lr.output)
+      rewrap(df, lr, cached.queryExecution.executedPlan.execute(),
+        Statistics(sizeInBytes = sizePerRow * rowCount, rowCount = Some(rowCount)))
     } else {
-      val s = snapAt(df,
-        Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+      val s = snapAt(laid, Some(StorageLevel.MEMORY_AND_DISK_SER))
       s.count()
       s
     }
+  }
 
+  /** Lazily checkpoint one fixpoint generation, capping its stats. Kept
+    * at the default storage level: generations are reclaimed within a
+    * pass, so only peak memory would change. */
   def snap(df: DataFrame): DataFrame = snapAt(df, None)
 
-  private def snapAt(df: DataFrame,
-      level: Option[org.apache.spark.storage.StorageLevel]): DataFrame = {
+  private def snapAt(df: DataFrame, level: Option[StorageLevel]): DataFrame = {
     val ck = level match {
       case Some(l) => df.localCheckpoint(eager = false, l)
       case None    => df.localCheckpoint(eager = false)
     }
     ck.queryExecution.logical match {
       case lr: LogicalRDD if lr.stats.sizeInBytes > CapBytes =>
-        val rowCount = lr.stats.rowCount.filter(_ <= BigInt(Long.MaxValue))
-        // Forward the checkpoint leaf's effective constraints (lr.constraints
-        // resolves its originConstraints): the plain localCheckpoint leaf
-        // carries the producer plan's constraints, and dropping them on the
-        // capped re-wrap cost above-cap generations non-null inference —
-        // redundant IsNotNull filters in downstream plans (ADVICE r13).
-        val capped = new LogicalRDD(
-          lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
-          lr.isStreaming, lr.stream)(
-          df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-          Some(Statistics(sizeInBytes = CapBytes, rowCount = rowCount)),
-          Some(lr.constraints))
-        Bridge.ofRows(df.sparkSession, capped)
+        rewrap(df, lr, lr.rdd, Statistics(sizeInBytes = CapBytes,
+          rowCount = lr.stats.rowCount.filter(_ <= BigInt(Long.MaxValue))))
       case _ => ck
     }
   }
+
+  /** `lr`'s leaf over `rdd` with `stats`, keeping its output,
+    * partitioning, ordering and constraints. */
+  private def rewrap(df: DataFrame, lr: LogicalRDD, rdd: RDD[InternalRow],
+      stats: Statistics): DataFrame =
+    Bridge.ofRows(df.sparkSession, new LogicalRDD(
+      lr.output, rdd, lr.outputPartitioning, lr.outputOrdering,
+      lr.isStreaming, lr.stream)(
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      Some(stats), Some(lr.constraints)))
 }

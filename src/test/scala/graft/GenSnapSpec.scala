@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GenSnap
+import org.apache.spark.sql.graft.{GenSnap, Layout}
+import org.apache.spark.storage.StorageLevel
 
-/** Pins the r13 generalization of the Borůvka originStats finding
-  * (VERDICT r12 task 3): every driver-counted fixpoint kernel snapshots
-  * its generations through [[GenSnap.snap]], whose contract is
+/** Pins both GenSnap entry points.
+  *
+  * Every driver-counted fixpoint kernel snapshots its generations
+  * through [[GenSnap.snap]], whose contract is
   *
   *  1. the carried stats estimate never exceeds the cap, no matter how
   *     many self-joining generations compound it (uncapped, sizeInBytes
@@ -17,6 +19,9 @@ import org.apache.spark.sql.graft.GenSnap
   *     paid one);
   *  3. below the cap the frame is untouched — honest small-frame
   *     estimates (and broadcast eligibility) are preserved.
+  *
+  * Session artifacts go through [[GenSnap.stage]], whose contract is the
+  * storage level, width and stats of the leaf it returns.
   */
 class GenSnapSpec extends SparkSpec {
   import org.apache.spark.sql.execution.LogicalRDD
@@ -140,5 +145,70 @@ class GenSnapSpec extends SparkSpec {
     assert(lrSnap.constraints.nonEmpty,
       "capped re-wrap dropped the producer plan's constraints")
     assert(plain.count() == 1000)
+  }
+
+  private def leaf(df: DataFrame): LogicalRDD =
+    df.queryExecution.logical.collectFirst { case lr: LogicalRDD => lr }
+      .getOrElse(fail("expected a LogicalRDD leaf after stage"))
+
+  /** Every RDD `rdd` reads from, itself included. */
+  private def lineage(rdd: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+    rdd +: rdd.dependencies.flatMap(d => lineage(d.rdd))
+
+  test("a hot leaf advertises the measured row count × row width, so a big substrate is not broadcast") {
+    // 1 M two-int rows: 16 B/row honest (16 MB, over the 10 MB broadcast
+    // threshold) but a few MB as compressed columnar batches
+    val n = 1000000L
+    val hot = GenSnap.stage(spark.range(n)
+      .select((col("id") % 1000).cast("int").as("k"), (col("id") % 7).cast("int").as("v")),
+      hot = true)
+    val lr = leaf(hot)
+    val width = org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+      .EstimationUtils.getSizePerRow(lr.output)
+    assert(lr.stats.rowCount.contains(BigInt(n)))
+    assert(lr.stats.sizeInBytes == width * n)
+    val threshold = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    assert(lr.stats.sizeInBytes > threshold)
+    // the planner's static join choice reads those stats: with both sides
+    // over the threshold, neither is planned as a broadcast build side
+    val big = spark.range(3000000).select((col("id") % 1000).cast("int").as("k"), col("id"))
+    val planned = big.join(hot, "k").queryExecution.sparkPlan.toString
+    assert(!planned.contains("BroadcastHashJoin"), s"hot substrate broadcast:\n$planned")
+    assert(hot.count() == n)
+  }
+
+  test("Wide and By leaves have spark.sql.shuffle.partitions partitions; Natural keeps the build's") {
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val src = spark.range(0, 1000, 1, width + 3)
+      .select(col("id"), (col("id") % 10).as("k"))
+    for (hot <- Seq(false, true)) {
+      def parts(layout: Layout): Int = leaf(GenSnap.stage(src, layout, hot)).rdd.getNumPartitions
+      assert(parts(Layout.Natural) == width + 3, s"hot=$hot")
+      assert(parts(Layout.Wide) == width, s"hot=$hot")
+      assert(parts(Layout.By(col("k"))) == width, s"hot=$hot")
+      // By clusters each key into one partition
+      val byKey = GenSnap.stage(src, Layout.By(col("k")), hot)
+        .select(col("k"), spark_partition_id().as("pid"))
+        .groupBy("k").agg(countDistinct(col("pid")).as("p"))
+      assert(byKey.filter(col("p") =!= 1).count() == 0, s"hot=$hot")
+    }
+  }
+
+  test("a cold leaf persists MEMORY_AND_DISK_SER") {
+    val cold = GenSnap.stage(spark.range(1000).toDF())
+    assert(leaf(cold).rdd.getStorageLevel == StorageLevel.MEMORY_AND_DISK_SER)
+    assert(cold.count() == 1000)
+  }
+
+  test("a hot leaf scans a columnar cache whose backing checkpoint is DISK_ONLY") {
+    val hot = GenSnap.stage(spark.range(1000).toDF(), hot = true)
+    val scan = leaf(hot).rdd
+    assert(scan.getStorageLevel == StorageLevel.NONE,
+      "the leaf's own scan must decode the cache, not re-read the checkpoint")
+    val levels = lineage(scan).map(_.getStorageLevel)
+    assert(levels.contains(StorageLevel.DISK_ONLY), s"no DISK_ONLY checkpoint under the cache: $levels")
+    assert(levels.exists(_.useMemory), s"no in-memory columnar cache over the checkpoint: $levels")
+    assert(hot.count() == 1000)
   }
 }

@@ -192,7 +192,7 @@ class Round14Spec extends SparkSpec {
     closeness.count(); ecc.count()
     for ((name, df) <- Seq("closeness" -> closeness, "eccentricity" -> ecc)) {
       // the tower is a materialized staging LEAF since the r17 staging
-      // swap (GenSnap.staged, not cache()): both consumers must read
+      // swap (GenSnap.stage, not cache()): both consumers must read
       // that leaf — a plain ExistingRDD scan with NO join anywhere (a
       // tower rebuild would need one equi-join per BFS hop)
       val plan = df.queryExecution.executedPlan.toString
