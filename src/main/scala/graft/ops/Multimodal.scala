@@ -177,6 +177,24 @@ object Multimodal {
     (ro, go, bo)
   }
 
+  /** The queries that read [[JpegDir]] through [[jpegBytes]]: the live
+    * S4 decode (`mm_decode_real`, below) and the seven live S5 pixel
+    * kernels in Image.scala. No other query reads the corpus, so every
+    * other query can be built and run without it (perfbench's
+    * `workloads.json` excludes the same eight names for that reason). */
+  val CorpusQueries: Set[String] = Set(
+    "img_ahash", "img_blur_stats", "img_contour_features", "img_find_edges",
+    "img_glcm_texture", "img_hsv_histogram", "img_whash", "mm_decode_real")
+
+  /** Default JPEG corpus: the reference repo's own 20 test images
+    * (`Cat1..10.jpeg`, `Dog1..10.jpeg`; read-only). The directory lies
+    * outside this repository; [[CorpusQueries]] are the queries that
+    * read it. Where it is absent, building any of them raises
+    * `AnalysisException` `[PATH_NOT_FOUND]` naming this path (the
+    * `binaryFile` source checks its path when the DataFrame is built,
+    * before any action); PlanSpec's window sweep asserts that. */
+  val JpegDir = "/root/reference/data"
+
   final case class ImageStats(file: String, n_pixels: Long, mean: Double,
                               std: Double, median: Double, vmin: Double, vmax: Double)
 
@@ -190,10 +208,6 @@ object Multimodal {
       if (n % 2 == 0) (sorted(n / 2 - 1) + sorted(n / 2)) / 2.0 else sorted(n / 2)
     ImageStats(name, n.toLong, mean, std, median, sorted.head, sorted.last)
   }
-
-  /** Default JPEG corpus: the reference repo's own test images
-    * (read-only; 20 files). */
-  val JpegDir = "/root/reference/data"
 
   /** The (file, bytes) JPEG source stage — the ONE place the corpus
     * dir, glob, and filename extraction live (Image.scala's pixel

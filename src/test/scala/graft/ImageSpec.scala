@@ -100,8 +100,7 @@ class ImageSpec extends SparkSpec {
   }
 
   test("live img queries run over the JPEG corpus and match local kernels") {
-    val files = new java.io.File(Multimodal.JpegDir).listFiles()
-      .filter(_.getName.endsWith(".jpeg")).sortBy(_.getName)
+    val files = jpegCorpus()
     val f = files.head
     val gray = Multimodal.decodeJpegGray32(java.nio.file.Files.readAllBytes(f.toPath))
 
@@ -187,8 +186,7 @@ class ImageSpec extends SparkSpec {
   }
 
   test("img_find_edges and img_hsv_histogram match local kernels on the corpus") {
-    val files = new java.io.File(Multimodal.JpegDir).listFiles()
-      .filter(_.getName.endsWith(".jpeg")).sortBy(_.getName)
+    val files = jpegCorpus()
     val f = files.head
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
 
@@ -224,8 +222,7 @@ class ImageSpec extends SparkSpec {
     val (f1, f2) = I.aHash64(Array.fill(1024)(77))
     assert(f1 === 0L && f2 === 0L)
 
-    val files = new java.io.File(Multimodal.JpegDir).listFiles()
-      .filter(_.getName.endsWith(".jpeg")).sortBy(_.getName)
+    val files = jpegCorpus()
     val rows = SparkEntry.queries("img_ahash")(spark, sf).collect()
     assert(rows.length === files.length)
     val f = files.head
@@ -262,8 +259,7 @@ class ImageSpec extends SparkSpec {
     assert(sig === want)
     assert(sig !== 0, "a hard split must excite some low-sequency sign")
 
-    val files = new java.io.File(Multimodal.JpegDir).listFiles()
-      .filter(_.getName.endsWith(".jpeg")).sortBy(_.getName)
+    val files = jpegCorpus()
     val rows = SparkEntry.queries("img_whash")(spark, sf).collect()
     assert(rows.length === files.length)
     val f = files.head

@@ -33,9 +33,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("real JPEG decode: distributed stats equal a local decode of the same file") {
-    val files = new java.io.File(Multimodal.JpegDir).listFiles()
-      .filter(_.getName.endsWith(".jpeg")).sortBy(_.getName)
-    assert(files.nonEmpty)
+    val files = jpegCorpus()
     val rows = SparkEntry.queries("mm_decode_real")(spark, sf).collect()
     assert(rows.length === files.length)
     rows.foreach { r =>

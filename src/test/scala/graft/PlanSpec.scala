@@ -607,16 +607,32 @@ class PlanSpec extends SparkSpec {
   // window to an audited allowlist, so the class of regressions that
   // produced evt_rfm/rel_skyline (r11 verdict) cannot re-enter silently
   // — the DriverShapeSpec convention applied to plan shape.
+  // Without the JPEG corpus (Multimodal.JpegDir, outside the repo) the
+  // Multimodal.CorpusQueries cannot be built; each of them must then
+  // fail for exactly that reason, and every other query is swept.
   test("sweep: un-partitioned Windows appear ONLY over audited bounded inputs") {
+    import graft.ops.Multimodal
+    import org.apache.spark.sql.AnalysisException
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     // name -> why its global window input is bounded/reduced (audited)
     val allow: Map[String, String] = PlanSpec.GlobalWindowAllowlist
+    val corpus = TestSpark.jpegCorpusPresent
+    assert(Multimodal.CorpusQueries.subsetOf(SparkEntry.queries.keySet),
+      s"CorpusQueries names unknown queries: ${Multimodal.CorpusQueries -- SparkEntry.queries.keySet}")
     val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val df = SparkEntry.queries(name)(spark, sf)
-      val ws = df.queryExecution.optimizedPlan.collect {
-        case w: LWindow if w.partitionSpec.isEmpty => w
+      if (!corpus && Multimodal.CorpusQueries(name)) {
+        val e = intercept[AnalysisException](SparkEntry.queries(name)(spark, sf))
+        assert(e.getMessage.contains("PATH_NOT_FOUND") &&
+          e.getMessage.contains(Multimodal.JpegDir),
+          s"$name is in CorpusQueries but did not fail on the absent corpus: ${e.getMessage}")
+        None
+      } else {
+        val df = SparkEntry.queries(name)(spark, sf)
+        val ws = df.queryExecution.optimizedPlan.collect {
+          case w: LWindow if w.partitionSpec.isEmpty => w
+        }
+        if (ws.nonEmpty) Some(name) else None
       }
-      if (ws.nonEmpty) Some(name) else None
     }
     val unexpected = offenders.filterNot(allow.contains)
     val stale = allow.keySet -- offenders.toSet

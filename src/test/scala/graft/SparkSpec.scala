@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.Multimodal
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   lazy val spark: SparkSession = GraftSession.local(4)
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Whether the reference JPEG corpus ([[Multimodal.JpegDir]], outside
+    * the repository) is on this machine. */
+  def jpegCorpusPresent: Boolean =
+    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(Multimodal.JpegDir))
 }
 
 abstract class SparkSpec extends AnyFunSuite {
@@ -27,5 +33,17 @@ abstract class SparkSpec extends AnyFunSuite {
           .forEach(f => Files.deleteIfExists(f))
     }
     p.toString
+  }
+
+  /** The `.jpeg` files of the reference corpus, sorted by name. Where the
+    * corpus directory is absent the calling test is canceled, not failed;
+    * a directory that is present but holds no `.jpeg` fails. */
+  protected def jpegCorpus(): Seq[java.io.File] = {
+    assume(TestSpark.jpegCorpusPresent,
+      s"JPEG corpus directory ${Multimodal.JpegDir} is absent")
+    val files = new java.io.File(Multimodal.JpegDir).listFiles()
+      .filter(_.getName.endsWith(".jpeg")).sortBy(_.getName).toSeq
+    assert(files.nonEmpty, s"no .jpeg file in ${Multimodal.JpegDir}")
+    files
   }
 }
