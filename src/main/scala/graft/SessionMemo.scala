@@ -6,14 +6,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Session-scoped memo for shared query artifacts (corpus sketch, dup
-  * pair set, staged graph adjacency, …) keyed on (session, data dir).
+  * pair set, staged graph adjacency, harness-table schemas, …) keyed on
+  * (session, data dir or file path).
   *
   * One shared implementation replacing the nine hand-rolled
   * `ConcurrentHashMap[(SparkSession, String), _]` fields that had
   * accumulated across ops/Text, ops/Extended and graph/PropertyGraph
   * (r8 advice). Two hygiene fixes over the hand-rolled form:
   *
-  *  - the dir key is path-normalized, so `sf0.1` and `sf0.1/` (or a
+  *  - the key is path-normalized, so `sf0.1` and `sf0.1/` (or a
   *    relative spelling of the same directory) cannot double-cache the
   *    same artifact;
   *  - on application end each session's entries are evicted from every
