@@ -5,8 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** The one way the engine's mains (Bench, Verify, the dev tools) and the
   * test suite build a session. The conf is part of the results'
   * contract: shuffle partitions track the core count, timestamps are
-  * UTC, events.parquet's TIMESTAMP(NANOS) column reads as a long (see
-  * Events.eventsUs), and the UI stays off. */
+  * UTC, a TIMESTAMP(NANOS) parquet column reads as a long, and the UI
+  * stays off. The harness `events.ts` is TIMESTAMP(MICROS, not
+  * UTC-adjusted) and reads as TimestampNTZType; the nanos conf stays
+  * because Events.eventsUs also accepts an events file whose column is
+  * TIMESTAMP(NANOS). */
 object GraftSession {
   /** A `local[cpus]` session; `cpus` defaults to `SPARK_GRAFT_CPUS`, or
     * 4 when unset. */

@@ -4,36 +4,36 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GenSnap
+import org.apache.spark.storage.StorageLevel
 
-/** Min-label connected components over an undirected edge list, run
-  * distributed to a driver-counted fixpoint — the shared kernel behind
-  * `dedup_cluster_canonical` (near-dup clusters over the MinHash pair
-  * graph) and the grid fixpoint in `vec_contours`. The reference's
-  * equivalent is Neo4j-side traversal; here each iteration is ONE
-  * equi-join on the (cached) edges plus ONE partial min-agg — the
-  * per-superstep shape Pregel runs at 100 TB.
+/** The graph kernels: min-label components, reachability, DAG
+  * layering, SCC coloring, label propagation, k-core peeling,
+  * multi-source BFS and betweenness, Luby MIS, min-plus shortest paths
+  * and Borůvka MST, each run distributed to a driver-counted fixpoint.
+  * The reference's equivalent is Neo4j-side traversal; here a superstep
+  * is a few equi-joins plus partial aggregations, the per-superstep
+  * shape Pregel runs at 100 TB.
   *
-  * Every generation is snapshot through [[GenSnap.snap]] (a lazy
-  * `localCheckpoint` whose carried stats estimate is capped — the
-  * convergence count materializes it in the same job): the hop is
-  * materialized AND its lineage truncated to a LogicalRDD, so plan depth
-  * stays O(1) per iteration instead of nesting one join per generation —
-  * a deep-diameter graph (chain corpus, long near-dup chains) converges
-  * without planner blowup (EdgeCaseSpec drives a 30-link chain). The
-  * stats cap keeps PLANNING cost O(1) too: each merge joins the
-  * generation against a frame derived from itself, which squares the
-  * size-only estimate per round — uncapped, the BigInt digit count
-  * doubles per generation (see GenSnap's Scaladoc for the measured
-  * Borůvka blowup).
+  * Every superstep loop goes through [[Fixpoint.run]]: each round's
+  * generation is snapshot through [[GenSnap.snap]] (a lazy
+  * `localCheckpoint` whose carried stats estimate is capped), and the
+  * round's one driver `count()` materializes it and truncates its
+  * lineage to a LogicalRDD. Plan depth therefore stays O(1) per round
+  * (EdgeCaseSpec drives a 30-link chain), and the stats cap keeps
+  * PLANNING cost O(1) too: a merge that joins a generation against a
+  * frame derived from itself squares the size-only estimate per round
+  * (see GenSnap's Scaladoc for the measured Borůvka blowup). One job
+  * per round is the minimum for a driver-counted fixpoint: skipping a
+  * count would leave a generation unmaterialized, and eager
+  * checkpoints cost two jobs per round. Round caps are loud
+  * `require`s, never silent truncation, and every loop records its
+  * rounds in [[graft.tools.BoundProbe]]. Superseded generations are
+  * dereferenced and reclaimed by the ContextCleaner; the caller owns
+  * the edge cache.
   *
-  * The per-round driver `count()` is NOT removable by checking
-  * convergence every second round: the count is the one full action
-  * that materializes the LAZY localCheckpoint, so skipping it would
-  * either leave a generation unmaterialized (plan depth grows again) or
-  * force eager checkpoints (two jobs per round — strictly worse). One
-  * job per round is already the minimum for a driver-counted fixpoint.
-  * Superseded generations are dereferenced and reclaimed by the
-  * ContextCleaner; the caller owns the edge cache.
+  * [[lpa]] and [[betweenness]] run a fixed depth and [[lpaConverged]]
+  * stops quietly at its cap or on oscillation, so those three loops are
+  * written out by hand.
   */
 object Components {
 
@@ -70,6 +70,13 @@ object Components {
       case _ => false
     }
 
+  /** Whether the frame ITSELF is a persisted artifact: cache()'d, or a
+    * checkpoint leaf at the plan root ([[stagedView]]). A lineage-wide
+    * search would accept any unpersisted derivative of a checkpointed
+    * frame and silently reintroduce the per-superstep edge shuffle. */
+  private def persisted(df: DataFrame): Boolean =
+    df.storageLevel != StorageLevel.NONE || stagedView(df.queryExecution.analyzed)
+
   private def requireVoteDomain(nodes: DataFrame, who: String): Unit = {
     val r = nodes.agg(max(col("id"))).head()
     if (!r.isNullAt(0))
@@ -78,67 +85,41 @@ object Components {
           "widen the vote encoding before ids this large")
   }
 
-  /** @param ue undirected edges (src, dst) — both directions present.
+  /** [[minLabelDirected]] over the symmetric edge list, whose vertex set
+    * is its `src` set.
+    *
+    * @param ue undirected edges (src, dst) — both directions present.
     * @return (id, l) — one row per vertex that appears in `ue`, with
     *         l = min vertex id reachable (the component label). */
-  def minLabel(ue: DataFrame): DataFrame = {
-    // zero-exchange generation discipline (see [[lpaConverged]]): labels
-    // are hash(id)-partitioned once up front; the propagation agg output
-    // is hash(dst) (≡ id after the alias), so the merge left-join, the
-    // next round's frontier join (when ue is src-partitioned), and the
-    // generation's own partitioning plan without exchanges — each round
-    // pays the one min-agg shuffle. Change detection is fused into the
-    // merge as a boolean, so the per-round driver count is a filter over
-    // the just-materialized generation, not a join job.
+  def minLabel(ue: DataFrame): DataFrame =
     // the distinct's own agg exchange already leaves this hash(id)
-    val nodes = ue.select(col("src").as("id")).distinct()
-    var lbl = nodes.select(col("id"), col("id").as("l"), lit(false).as("ch"))
-      .transform(GenSnap.snap)
-    var changed = 1L
-    var iters = 0
-    while (changed > 0) {
-      val prop = ue
-        .join(lbl.select(col("id").as("src"), col("l").as("nl")), "src")
-        .groupBy(col("dst")).agg(min("nl").as("ml"))
-      // LAZY checkpoint: the convergence count below is a full action
-      // over every partition, so it both materializes the generation and
-      // truncates its lineage — one job per iteration, not two. (Lazy is
-      // safe only because count() is a full scan; partial actions like
-      // isEmpty would checkpoint a partition subset.)
-      lbl = lbl.join(prop, col("id") === col("dst"), "left")
-        .select(col("id"),
-          least(col("l"), coalesce(col("ml"), col("l"))).as("l"),
-          (col("ml") < col("l")).as("chRaw"))
-        .select(col("id"), col("l"), coalesce(col("chRaw"), lit(false)).as("ch"))
-        .transform(GenSnap.snap)
-      changed = lbl.filter(col("ch")).count()
-      iters += 1
-    }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[minLabel] iters=$iters")
-    lbl.select(col("id"), col("l"))
-  }
+    minLabelDirected(ue.select(col("src").as("id")).distinct(), ue)
 
-  /** [[minLabel]] lifted to a DIRECTED edge list with an explicit vertex
-    * set: l(v) converges to min{u : u reaches v along edge direction}
-    * (including v itself). The explicit `nodes` frame matters because a
-    * directed graph has sink-only vertices that never appear as `src`;
-    * propagation, merge, change-fusion, and the lazy-localCheckpoint +
-    * drain-count discipline are exactly [[minLabel]]'s — one equi-join +
-    * one partial min-agg + one count job per round, O(1) plan depth.
-    * Convergence takes one round per hop of the longest shortest
-    * label-carrying path (the directed diameter), so callers should keep
-    * that bounded by graph design (the SCC chain graph measures ~15
-    * rounds at sf0.1).
+  /** Min-label propagation over a DIRECTED edge list with an explicit
+    * vertex set: l(v) converges to min{u : u reaches v along edge
+    * direction} (including v itself). The explicit `nodes` frame
+    * matters because a directed graph has sink-only vertices that never
+    * appear as `src`. One equi-join + one partial min-agg + one count
+    * job per round. Convergence takes one round per hop of the longest
+    * shortest label-carrying path (the directed diameter), so callers
+    * should keep that bounded by graph design (the SCC chain graph
+    * measures ~15 rounds at sf0.1).
     *
     * @param nodes (id) — every vertex of the subgraph.
     * @param de    directed edges (src, dst) — NOT symmetrized.
     * @return (id, l) with l = min forward-reaching vertex id. */
   def minLabelDirected(nodes: DataFrame, de: DataFrame): DataFrame = {
+    // zero-exchange generation discipline (see [[lpaConverged]]): the
+    // propagation agg output is hash(dst) (≡ id after the alias), so
+    // with hash(id)-partitioned labels the merge left-join, the next
+    // round's frontier join (when de is src-partitioned), and the
+    // generation's own partitioning plan without exchanges — each round
+    // pays the one min-agg shuffle. Change detection is fused into the
+    // merge as a boolean, so the per-round count is a filter over the
+    // just-materialized generation, not a join job.
     var lbl = nodes.select(col("id"), col("id").as("l"), lit(false).as("ch"))
       .transform(GenSnap.snap)
-    var changed = 1L
-    while (changed > 0) {
+    Fixpoint.run("min_label") { _ =>
       val prop = de
         .join(lbl.select(col("id").as("src"), col("l").as("nl")), "src")
         .groupBy(col("dst")).agg(min("nl").as("ml"))
@@ -148,7 +129,7 @@ object Components {
           (col("ml") < col("l")).as("chRaw"))
         .select(col("id"), col("l"), coalesce(col("chRaw"), lit(false)).as("ch"))
         .transform(GenSnap.snap)
-      changed = lbl.filter(col("ch")).count()
+      Fixpoint.Round(lbl.filter(col("ch")))
     }
     lbl.select(col("id"), col("l"))
   }
@@ -157,29 +138,23 @@ object Components {
     * directed edges (seeds included) — plain frontier BFS with a settled
     * anti-join, all seeds in one dataflow (no per-seed keying, unlike
     * [[multiBfs]] — the result is the UNION of cones, which is what
-    * bowtie/impact analyses consume). Lazy-localCheckpoint + drain-count
-    * discipline; `maxHops` is a loud diameter bound, never a silent
-    * truncation. */
+    * bowtie/impact analyses consume). `maxHops` is a loud diameter
+    * bound. */
   def reachableFrom(seeds: DataFrame, de: DataFrame, maxHops: Int): DataFrame = {
     var settled = seeds.select(col("id")).distinct().transform(GenSnap.snap)
     var frontier = settled
-    var hops = 0
-    var drained = frontier.isEmpty
-    while (!drained) {
-      hops += 1
-      require(hops <= maxHops,
-        s"reachability frontier still live past $maxHops hops — raise the bound")
-      val next = de
-        .join(frontier.select(col("id").as("src")), Seq("src"))
-        .select(col("dst").as("id")).distinct()
-        .join(settled, Seq("id"), "left_anti")
-        .transform(GenSnap.snap)
-      if (next.count() == 0L) drained = true
-      else {
-        settled = settled.union(next).transform(GenSnap.snap)
-        frontier = next
+    if (!frontier.isEmpty)
+      Fixpoint.run("reachable_from", maxHops) { _ =>
+        val next = de
+          .join(frontier.select(col("id").as("src")), Seq("src"))
+          .select(col("dst").as("id")).distinct()
+          .join(settled, Seq("id"), "left_anti")
+          .transform(GenSnap.snap)
+        Fixpoint.Round(next, advance = _ => {
+          settled = settled.union(next).transform(GenSnap.snap)
+          frontier = next
+        })
       }
-    }
     settled
   }
 
@@ -188,21 +163,16 @@ object Components {
     * a topological schedule executes, computed by (max, +1) relaxation
     * to a driver-counted fixpoint (the [[minLabelDirected]] kernel in
     * the tropical semiring; converges in ≤ DAG-depth rounds). The
-    * `maxIters` require doubles as the ACYCLICITY check: a cycle
-    * relaxes forever, so hitting the bound is a loud contract failure,
-    * never an infinite loop.
+    * `maxIters` cap doubles as the ACYCLICITY check: a cycle relaxes
+    * forever, so hitting the bound is a loud contract failure, never an
+    * infinite loop.
     *
     * @return (id, layer) for every vertex in `nodes`. */
   def dagLayers(nodes: DataFrame, de: DataFrame, maxIters: Int): DataFrame = {
     var lbl = nodes.select(col("id"), lit(0).as("l"), lit(false).as("ch"))
       .transform(GenSnap.snap)
-    var changed = 1L
-    var iters = 0
-    while (changed > 0) {
-      iters += 1
-      require(iters <= maxIters,
-        s"DAG layering still relaxing after $maxIters rounds — " +
-          "the input has a cycle or the depth bound is too low")
+    Fixpoint.run("dag_layers", maxIters,
+        hint = "the input has a cycle or the depth bound is too low") { _ =>
       val prop = de
         .join(lbl.select(col("id").as("src"), col("l").as("nl")), "src")
         .groupBy(col("dst")).agg((max("nl") + 1).as("ml"))
@@ -212,9 +182,8 @@ object Components {
           (col("ml") > col("l")).as("chRaw"))
         .select(col("id"), col("l"), coalesce(col("chRaw"), lit(false)).as("ch"))
         .transform(GenSnap.snap)
-      changed = lbl.filter(col("ch")).count()
+      Fixpoint.Round(lbl.filter(col("ch")))
     }
-    graft.tools.BoundProbe.record("dag_layers", iters, maxIters)
     lbl.select(col("id"), col("l").as("layer"))
   }
 
@@ -251,12 +220,7 @@ object Components {
     var rem = nodes.select(col("id")).transform(GenSnap.snap)
     var edges = de.select(col("src"), col("dst")).transform(GenSnap.snap)
     var out: DataFrame = null
-    var rounds = 0
-    var live = rem.count() > 0
-    while (live) {
-      rounds += 1
-      require(rounds <= maxRounds,
-        s"SCC coloring still live past $maxRounds peel rounds — raise the bound")
+    val rounds = Fixpoint.run("scc_coloring", maxRounds, init = Some(rem)) { _ =>
       val lbl = minLabelDirected(rem, edges) // (id, l): forward min color
       // same-color edges, reversed: BFS follows them from the roots; the
       // join keys the frontier on the ORIGINAL dst, so settle state is
@@ -271,8 +235,8 @@ object Components {
         .select(col("id"), col("l").as("c"))
         .transform(GenSnap.snap)
       var frontier = settled
-      var drained = frontier.count() == 0 // roots always exist while rem ≠ ∅
-      while (!drained) {
+      // roots always exist while rem ≠ ∅
+      Fixpoint.run("scc_backward_bfs", init = Some(frontier)) { _ =>
         // join on dst alone: ec carries c = color(dst) already (both
         // endpoints share a color by construction), so the frontier side
         // needs only its vertex ids
@@ -281,31 +245,62 @@ object Components {
           .select(col("src").as("id"), col("c")).distinct()
           .join(settled.select(col("id")), Seq("id"), "left_anti")
           .transform(GenSnap.snap)
-        if (next.count() == 0L) drained = true
-        else {
+        Fixpoint.Round(next, advance = _ => {
           settled = settled.union(next).transform(GenSnap.snap)
           frontier = next
-        }
+        })
       }
       val assigned = settled.select(col("id"), col("c").as("scc"))
       out = if (out == null) assigned else out.union(assigned)
       rem = rem.join(assigned.select(col("id")), Seq("id"), "left_anti")
         .transform(GenSnap.snap)
-      live = rem.count() > 0
-      if (live)
+      Fixpoint.Round(rem, advance = _ =>
         edges = edges
           .join(assigned.select(col("id").as("src")), Seq("src"), "left_anti")
           .join(assigned.select(col("id").as("dst")), Seq("dst"), "left_anti")
-          .transform(GenSnap.snap)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[scc] round=$rounds")
+          .transform(GenSnap.snap))
     }
-    graft.tools.BoundProbe.record("scc_coloring", rounds, maxRounds)
     val res =
       if (out == null) nodes.select(col("id"), col("id").as("scc")).limit(0)
       else out
     (res, rounds)
   }
+
+  /** LPA's loop-invariant edge list on the vote-join key. With
+    * `stageEdges` it is shuffled onto src once and snapped (the
+    * persisted-adjacency shape graph_pagerank_exact uses: later
+    * supersteps shuffle only the |V|-row label frontier, not the |E|
+    * edges; measured 7.0 s → ~4.3 s warm at sf0.1). Without it the
+    * caller's frame must already be a persisted, src-partitioned
+    * artifact (r8 advice): an unstaged frame would give correct results
+    * while silently reintroducing the per-superstep full-edge shuffle,
+    * so it fails loudly instead. */
+  private def votingEdges(ue: DataFrame, stageEdges: Boolean, who: String): DataFrame =
+    if (stageEdges) ue.repartition(col("src")).transform(GenSnap.snap)
+    else {
+      require(persisted(ue),
+        s"$who(stageEdges = false) requires a persisted, src-partitioned edge list " +
+          "(cache() or localCheckpoint it, e.g. PropertyGraph.undirectedEdges)")
+      ue
+    }
+
+  /** One LPA vote: (id, bl) for every dst of `edges`, bl = the most
+    * frequent label among its in-neighbors in `lbl` (id, l), ties
+    * toward the smallest label. ONE exchange per vote (r18, guide
+    * §2.4): hash(dst) satisfies the clustered distribution of BOTH the
+    * (dst, nl) count and the by-dst packed argmax, so the explicit dst
+    * repartition lets the two aggregations run partition-local over a
+    * single shuffle instead of one exchange each. The output comes out
+    * hash(dst) ≡ hash(id), so merging it into an id-partitioned label
+    * frame plans with no exchange. PlanSpec pins this shape. */
+  private[graft] def voteWinners(edges: DataFrame, lbl: DataFrame): DataFrame =
+    edges
+      .join(lbl.select(col("id").as("src"), col("l").as("nl")), "src")
+      .repartition(col("dst"))
+      .groupBy(col("dst"), col("nl")).agg(count(lit(1)).as("cnt"))
+      .groupBy(col("dst"))
+      .agg(max(votePack(col("cnt"), col("nl"))).as("pk"))
+      .select(col("dst").as("id"), voteUnpack(col("pk")).as("bl"))
 
   /** Synchronous label-propagation (Raghavan et al. 2007), made fully
     * deterministic: each round every vertex adopts the most frequent
@@ -315,9 +310,8 @@ object Components {
     * (no convergence test): synchronous LPA can oscillate (notably on
     * bipartite graphs), so a fixed depth is both the determinism the
     * oracle needs and the standard mitigation. Per superstep: one
-    * equi-join + two partial-agg'd hash aggregations, frontier lazily
-    * localCheckpoint'd — the same O(1)-plan-depth superstep shape as
-    * [[minLabel]].
+    * equi-join + two partial-agg'd hash aggregations over one exchange
+    * ([[voteWinners]]), the label generation snapped per superstep.
     *
     * @param nodes      (id) — every vertex, including isolated ones
     *                   (they keep their own label).
@@ -332,34 +326,7 @@ object Components {
     * @return (id, l) after exactly `iters` supersteps. */
   def lpa(nodes: DataFrame, ue: DataFrame, iters: Int,
           stageEdges: Boolean = true): DataFrame = {
-    // the edge list is loop-invariant: shuffle it onto the JOIN key once
-    // and localCheckpoint (lazily — the first superstep's join
-    // materializes it). LogicalRDD keeps the hash partitioning, so every
-    // later superstep shuffles only the label frontier (|V| rows), not
-    // the edges (|E| rows) — the persisted-adjacency shape
-    // graph_pagerank_exact uses, measured 7.0 s → ~4.3 s warm at sf0.1
-    // under concurrent external load (per-superstep cost is then on par
-    // with a pagerank_exact superstep, which is the floor this shape
-    // targets).
-    val ueBySrc =
-      if (stageEdges) ue.repartition(col("src")).transform(GenSnap.snap)
-      else {
-        // precondition (r8 advice): a caller claiming pre-staged edges
-        // must pass a persisted artifact (cache()'d or a checkpoint
-        // LogicalRDD) — an unstaged frame would give correct results
-        // while silently reintroducing the per-superstep full-edge
-        // shuffle this flag exists to avoid, so fail loudly instead.
-        // the frame itself must be the persisted artifact: cache()'d, or a
-        // checkpoint LogicalRDD at the plan ROOT — a lineage-wide exists()
-        // would accept any unpersisted derivative of a checkpointed frame
-        // and silently reintroduce the per-superstep full-edge shuffle
-        val persisted = ue.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
-          stagedView(ue.queryExecution.analyzed)
-        require(persisted,
-          "lpa(stageEdges = false) requires a persisted, src-partitioned edge list " +
-            "(cache() or localCheckpoint it, e.g. PropertyGraph.undirectedEdges)")
-        ue
-      }
+    val ueBySrc = votingEdges(ue, stageEdges, "lpa")
     // zero-exchange generation discipline (see [[lpaConverged]]): the
     // label frame is hash(id)-partitioned once; `best` comes out of its
     // by-dst agg hash(dst) (≡ id after the alias), so the merge
@@ -373,20 +340,7 @@ object Components {
       .transform(GenSnap.snap)
     requireVoteDomain(nodes, "lpa")
     for (_ <- 1 to iters) {
-      // ONE exchange per vote (r18, guide §2.4): hash(dst) satisfies
-      // the clustered distribution of BOTH the (dst, nl) count and the
-      // by-dst argmax, so an explicit dst repartition lets the two
-      // aggregations run partition-local over a single shuffle instead
-      // of one exchange each. Counts and the packed max are unchanged.
-      val votes = ueBySrc
-        .join(lbl.select(col("id").as("src"), col("l").as("nl")), "src")
-        .repartition(col("dst"))
-        .groupBy(col("dst"), col("nl")).agg(count(lit(1)).as("cnt"))
-      val best = votes.groupBy(col("dst"))
-        .agg(max(votePack(col("cnt"), col("nl"))).as("pk"))
-        .select(col("dst").as("id"), voteUnpack(col("pk")).as("bl"))
-      // kernel-plan dump (VERDICT-r17 task 8): the one-exchange vote claim
-      if (sys.env.contains("GRAFT_EXPLAIN_KERNELS")) best.explain("formatted")
+      val best = voteWinners(ueBySrc, lbl)
       lbl = lbl.join(best, Seq("id"), "left")
         .select(col("id"), coalesce(col("bl"), col("l")).as("l"))
         .transform(GenSnap.snap)
@@ -438,7 +392,7 @@ object Components {
     * carries unvoted vertices, resetting stale flags in half-step 1), so
     * the per-superstep driver count is a filter over the
     * just-materialized generation, not a separate join job — one action
-    * per superstep, O(1) plan depth, the [[minLabel]] discipline.
+    * per superstep.
     *
     * @param color 0/1 color of a vertex id column; DEFAULT id parity
     *              (improper in general — the caps then bound the run);
@@ -448,20 +402,7 @@ object Components {
   def lpaConverged(nodes: DataFrame, ue: DataFrame, maxIters: Int = 30,
       color: Column => Column = pmod(_, lit(2)),
       stageEdges: Boolean = true): LpaRun = {
-    val ueBySrc =
-      if (stageEdges) ue.repartition(col("src")).transform(GenSnap.snap)
-      else {
-        // the frame itself must be the persisted artifact: cache()'d, or a
-        // checkpoint LogicalRDD at the plan ROOT — a lineage-wide exists()
-        // would accept any unpersisted derivative of a checkpointed frame
-        // and silently reintroduce the per-superstep full-edge shuffle
-        val persisted = ue.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
-          stagedView(ue.queryExecution.analyzed)
-        require(persisted,
-          "lpaConverged(stageEdges = false) requires a persisted, src-partitioned " +
-            "edge list (cache() or localCheckpoint it, e.g. PropertyGraph.undirectedEdges)")
-        ue
-      }
+    val ueBySrc = votingEdges(ue, stageEdges, "lpaConverged")
     var lbl = nodes.select(col("id"), col("id").as("l"), lit(false).as("ch"))
       .repartition(col("id"))
       .transform(GenSnap.snap)
@@ -470,14 +411,7 @@ object Components {
     var live = true
     while (live && history.size < maxIters) {
       for (c <- 0 to 1) {
-        // same one-exchange vote shape as [[lpa]] (r18, guide §2.4)
-        val votes = ueBySrc.filter(color(col("dst")) === c)
-          .join(lbl.select(col("id").as("src"), col("l").as("nl")), "src")
-          .repartition(col("dst"))
-          .groupBy(col("dst"), col("nl")).agg(count(lit(1)).as("cnt"))
-        val best = votes.groupBy(col("dst"))
-          .agg(max(votePack(col("cnt"), col("nl"))).as("pk"))
-          .select(col("dst").as("id"), voteUnpack(col("pk")).as("bl"))
+        val best = voteWinners(ueBySrc.filter(color(col("dst")) === c), lbl)
         // merge = one zero-exchange left join: vertices best covers (the
         // updating color's non-isolated set) take the vote winner; every
         // other vertex — the other color AND this color's isolated
@@ -498,8 +432,6 @@ object Components {
           s"LPA change count exploded (${history.last} -> $changed): the " +
             "coloring is fighting the vote rule; pass a proper coloring")
       history += changed
-      if (sys.env.contains("LPA_DEBUG"))
-        System.err.println(s"[lpaConverged] superstep=${history.size} changed=$changed")
       val oscillating = history.size >= 3 &&
         changed > 0 && changed >= history(history.size - 2) &&
         history(history.size - 2) >= history(history.size - 3)
@@ -508,59 +440,37 @@ object Components {
     LpaRun(lbl.select(col("id"), col("l")), history.toSeq)
   }
 
-  /** Min-plus single-source shortest paths over a weighted undirected
-    * edge list — the same relaxation kernel as [[minLabel]] lifted from
-    * the (min, id) semiring to (min, +): Bellman-Ford frontier rounds to
-    * a driver-counted fixpoint, one equi-join + one partial min-agg per
-    * round, every generation lazily localCheckpoint'd and materialized
-    * by the convergence count (one job per round, O(1) plan depth).
-    * The distance frontier stays SPARSE (only reached vertices carry a
-    * row) so there is no +∞ sentinel to overflow.
-    *
-    * @param ue weighted undirected edges (src, dst, w) — both
-    *           directions present, w a non-negative integer (long).
-    * @return (dist, rounds): dist = (id, d) exact shortest distances
-    *         for every vertex reachable from `src`; rounds = relaxation
-    *         rounds until no distance improved (callers with an
-    *         unrolled-CTE oracle must assert rounds ≤ their unroll
-    *         depth, or the oracle under-relaxes). */
   /** k-core decomposition by iterative degree peeling — a third
     * fixpoint shape next to [[minLabel]] (label spreading) and
     * [[minDist]] (min-plus relaxation): here the EDGE SET itself
     * shrinks monotonically. Each round: one partial-agg degree count,
     * drop every vertex with degree < k (two anti joins, build side
     * broadcast when small), repeat until no vertex falls below k.
-    * Same lazy-localCheckpoint discipline — each generation's lineage
-    * truncates, and the next round's driver count materializes it —
-    * so plan depth stays O(1) at any peel depth.
     *
-    * @param ue undirected edges (src, dst), both directions present.
-    * @return (edges, rounds): the surviving k-core edge set (still both
-    *         directions) and the peel rounds to convergence (callers
-    *         with an unrolled-CTE oracle must assert rounds ≤ unroll).
-    */
-  def kCorePeel(ue: DataFrame, k: Int): (DataFrame, Int) = {
+    * @param ue    undirected edges (src, dst), both directions present.
+    * @param cap   peel rounds allowed, the converging round included
+    *              (callers with an unrolled-CTE oracle pass its unroll).
+    * @param probe the BoundProbe name of the rounds used.
+    * @return the surviving k-core edge set (still both directions). */
+  def kCorePeel(ue: DataFrame, k: Int, cap: Int = Fixpoint.Uncapped,
+                probe: String = "kcore_peel"): DataFrame = {
     val BcastMax = 1000000L
     var edges = ue.transform(GenSnap.snap)
-    var rounds = 0
-    var live = true
-    while (live) {
-      rounds += 1
+    Fixpoint.run(probe, cap) { _ =>
       val bad = edges.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") < k).select(col("src").as("v"))
         .transform(GenSnap.snap)
-      val nBad = bad.count() // materializes bad AND the current edge gen
-      if (nBad == 0) live = false
-      else {
+      // the count materializes bad AND the current edge generation
+      Fixpoint.Round(bad, advance = nBad => {
         val b = if (nBad <= BcastMax) broadcast(bad) else bad
         edges = edges
           .join(b.select(col("v").as("src")), Seq("src"), "left_anti")
           .join(b.select(col("v").as("dst")), Seq("dst"), "left_anti")
           .select("src", "dst")
           .transform(GenSnap.snap)
-      }
+      })
     }
-    (edges, rounds)
+    edges
   }
 
   /** Multi-source BFS: run |seeds| breadth-first searches in ONE
@@ -569,9 +479,7 @@ object Components {
     * how many sources run together. This is the shape that makes
     * landmark-distance / closeness-centrality sampling affordable at
     * 100 TB: S sources cost one superstep sequence, not S of them
-    * (Eppstein–Wang style sampling composes directly on top). Same
-    * lazy-localCheckpoint + drain-count discipline as [[minLabel]]:
-    * one job per hop, O(1) plan depth.
+    * (Eppstein–Wang style sampling composes directly on top).
     *
     * @param ue       undirected edges (src, dst), both directions.
     * @param seeds    source vertex ids (the `lm` key of the result).
@@ -584,26 +492,15 @@ object Components {
     val spark = ue.sparkSession
     import spark.implicits._
     var frontiers = List(seeds.map(lm => (lm, lm, 0)).toDF("lm", "id", "d"))
-    var depth = 0
-    var drained = false
-    while (!drained && depth < maxDepth) {
-      depth += 1
+    Fixpoint.run("multi_bfs", maxDepth) { depth =>
       val settled = frontiers.reduce(_ union _).select("lm", "id")
-      // LAZY localCheckpoint + count: the drain check is a full scan, so
-      // it materializes the hop AND truncates its lineage to a
-      // LogicalRDD in ONE job per hop — plan depth stays O(1) per hop
-      // instead of nesting every prior anti-join.
       val next = frontiers.head.join(ue, frontiers.head("id") === ue("src"))
         .select(col("lm"), ue("dst").as("id")).distinct()
         .join(settled, Seq("lm", "id"), "left_anti")
         .select(col("lm"), col("id"), lit(depth).as("d"))
         .transform(GenSnap.snap)
-      if (next.count() == 0L) drained = true
-      else frontiers ::= next
+      Fixpoint.Round(next, advance = _ => frontiers ::= next)
     }
-    require(drained, s"BFS frontier still live at depth bound $maxDepth — " +
-      "oracle would under-report; raise the bound")
-    graft.tools.BoundProbe.record("multi_bfs", depth, maxDepth)
     frontiers.reduce(_ union _)
   }
 
@@ -624,10 +521,7 @@ object Components {
     val spark = ue.sparkSession
     import spark.implicits._
     var frontiers = List(seeds.map(lm => (lm, lm, 0, 1L)).toDF("lm", "id", "d", "sigma"))
-    var depth = 0
-    var drained = false
-    while (!drained && depth < maxDepth) {
-      depth += 1
+    Fixpoint.run("multi_bfs_counts", maxDepth) { depth =>
       val settled = frontiers.reduce(_ union _).select("lm", "id")
       val next = frontiers.head.join(ue, frontiers.head("id") === ue("src"))
         .select(col("lm"), ue("dst").as("id"), col("sigma"))
@@ -635,12 +529,8 @@ object Components {
         .groupBy("lm", "id").agg(sum("sigma").as("sigma"))
         .select(col("lm"), col("id"), lit(depth).as("d"), col("sigma"))
         .transform(GenSnap.snap)
-      if (next.count() == 0L) drained = true
-      else frontiers ::= next
+      Fixpoint.Round(next, advance = _ => frontiers ::= next)
     }
-    require(drained, s"σ frontier still live at depth bound $maxDepth — " +
-      "an unrolled oracle would under-count; raise the bound")
-    graft.tools.BoundProbe.record("multi_bfs_counts", depth, maxDepth)
     val all = frontiers.reduce(_ union _)
     val maxSigma = all.agg(max("sigma")).head().getLong(0)
     require(maxSigma < (1L << 40),
@@ -689,30 +579,7 @@ object Components {
         .select(col("lm").as("vlm"), col("id").as("vid"), col("sigma").as("sv"))
       val succ = levels.head.select(col("lm").as("slm"), col("id").as("w"),
         col("sigma").as("sw"), col("delta").as("dw"))
-      // The sorted-successor float fold as a WINDOW running sum (r18):
-      // sort_array(collect_list(struct)) + an interpreted aggregate HOF
-      // planned as ObjectHashAggregate and was the query family's top
-      // CPU (two ~0.7 s/task stages, ~38 s summed executor CPU at
-      // sf0.1). A running sum over (vlm, vid) ordered by w adds the
-      // SAME doubles in the SAME left-fold order (w is unique within a
-      // group — distinct successors — and every contribution is
-      // positive, so the running maximum IS the final fold value), in
-      // codegen. The trailing max rides the window's partitioning, so
-      // no exchange is added. Bit-identical to the HOF fold and the
-      // oracle's list_reduce.
-      val wf = Window.partitionBy("vlm", "vid").orderBy("w")
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val contrib = vk.join(ue, col("vid") === ue("src"))
-        .join(succ, col("slm") === col("vlm") && ue("dst") === col("w"))
-        .select(col("vlm"), col("vid"), col("w"),
-          ((col("sv").cast("double") / col("sw").cast("double"))
-            * (lit(1.0) + col("dw"))).as("c"))
-        .withColumn("cum", sum("c").over(wf))
-        .groupBy(col("vlm"), col("vid")).agg(max("cum").as("delta"))
-      // kernel-plan dump (VERDICT-r17 task 8: per-superstep plans hide
-      // behind checkpoint leaves — dump the aggregation's OWN shape)
-      if (k == dmax - 1 && sys.env.contains("GRAFT_EXPLAIN_KERNELS"))
-        contrib.explain("formatted")
+      val contrib = brandesContrib(vk, ue, succ)
       levels ::= vk.join(contrib, Seq("vlm", "vid"), "left")
         .select(col("vlm").as("lm"), col("vid").as("id"),
           col("sv").as("sigma"), coalesce(col("delta"), lit(0.0)).as("delta"))
@@ -733,6 +600,34 @@ object Components {
     alld.groupBy("id").agg(bc.as("bc"))
   }
 
+  /** One backward level of Brandes' sweep: δ(v) for every (vlm, vid)
+    * of `vk` with a successor in `succ` (slm, w, sw, dw) along `ue`, as
+    * (vlm, vid, delta).
+    *
+    * The sorted-successor float fold runs as a WINDOW running sum (r18):
+    * sort_array(collect_list(struct)) + an interpreted aggregate HOF
+    * planned as ObjectHashAggregate and was the query family's top CPU
+    * (two ~0.7 s/task stages, ~38 s summed executor CPU at sf0.1). A
+    * running sum over (vlm, vid) ordered by w adds the SAME doubles in
+    * the SAME left-fold order (w is unique within a group — distinct
+    * successors — and every contribution is positive, so the running
+    * maximum IS the final fold value), in codegen. The trailing max
+    * rides the window's partitioning, so no exchange is added.
+    * Bit-identical to the HOF fold and the oracle's list_reduce.
+    * PlanSpec pins the shape: a Window, no ObjectHashAggregate. */
+  private[graft] def brandesContrib(vk: DataFrame, ue: DataFrame,
+                                    succ: DataFrame): DataFrame = {
+    val wf = Window.partitionBy("vlm", "vid").orderBy("w")
+      .rowsBetween(Window.unboundedPreceding, 0)
+    vk.join(ue, col("vid") === ue("src"))
+      .join(succ, col("slm") === col("vlm") && ue("dst") === col("w"))
+      .select(col("vlm"), col("vid"), col("w"),
+        ((col("sv").cast("double") / col("sw").cast("double"))
+          * (lit(1.0) + col("dw"))).as("c"))
+      .withColumn("cum", sum("c").over(wf))
+      .groupBy(col("vlm"), col("vid")).agg(max("cum").as("delta"))
+  }
+
   /** Luby's maximal-independent-set, derandomized: in each round a
     * remaining vertex joins the MIS iff its priority is strictly
     * smaller than every remaining neighbor's, where priority
@@ -744,9 +639,9 @@ object Components {
     * O(log n) rounds w.h.p.; per round one equi-join + one partial
     * min-agg + the removal anti-joins — the textbook distributed MIS.
     *
-    * @return (mis, rounds): the MIS vertex ids and the rounds used
-    *         (callers with an unrolled oracle `require` rounds ≤
-    *         unroll). */
+    * @param maxRounds rounds allowed (callers with an unrolled oracle
+    *                  pass its unroll).
+    * @return (mis, rounds): the MIS vertex ids and the rounds used. */
   def misLuby(nodes: DataFrame, ue: DataFrame, maxRounds: Int): (DataFrame, Int) = {
     // empty node set: the MIS of the empty graph is empty in 0 rounds —
     // short-circuit here because max(id) aggregates to NULL below and
@@ -765,18 +660,10 @@ object Components {
     // an already-staged substrate (the session leaf view) skips the
     // initial 2.6 M-row checkpoint write; an ad-hoc caller frame still
     // snaps so the round chain starts from a materialized leaf
-    var edges =
-      if (ue.storageLevel != org.apache.spark.storage.StorageLevel.NONE ||
-        stagedView(ue.queryExecution.analyzed)) ue
-      else ue.transform(GenSnap.snap)
+    var edges = if (persisted(ue)) ue else ue.transform(GenSnap.snap)
     var mis: DataFrame = null
-    var rounds = 0
-    var live = rem.count() > 0
-    while (live) {
-      rounds += 1
-      require(rounds <= maxRounds,
-        s"Luby MIS still live past $maxRounds rounds — raise the bound")
-      val p = rem.select(col("id"), pri(rounds).as("p"))
+    val rounds = Fixpoint.run("mis_luby", maxRounds, init = Some(rem)) { r =>
+      val p = rem.select(col("id"), pri(r).as("p"))
       val nmin = edges
         .join(p.select(col("id").as("src"), col("p")), "src")
         .groupBy(col("dst").as("id")).agg(min("p").as("np"))
@@ -791,10 +678,6 @@ object Components {
         .distinct()
         .transform(GenSnap.snap)
       rem = rem.join(rm, Seq("id"), "left_anti").transform(GenSnap.snap)
-      edges = edges
-        .join(rm.select(col("id").as("src")), Seq("src"), "left_anti")
-        .join(rm.select(col("id").as("dst")), Seq("dst"), "left_anti")
-        .select("src", "dst")
       // r18: the per-round edges CHECKPOINT dropped — writing the
       // (shrinking, but round-1 2.6 M-row) edge set to the block store
       // every round was the query's top-3 stages (~25 s execRun at
@@ -805,13 +688,30 @@ object Components {
       // multi-second materialization. The removal sets (rm) stay
       // snapped, so the chain's build side is always a materialized
       // leaf and plan depth grows only linearly in the O(log n) rounds.
-      live = rem.count() > 0
+      edges = edges
+        .join(rm.select(col("id").as("src")), Seq("src"), "left_anti")
+        .join(rm.select(col("id").as("dst")), Seq("dst"), "left_anti")
+        .select("src", "dst")
+      Fixpoint.Round(rem)
     }
-    graft.tools.BoundProbe.record("mis_luby", rounds, maxRounds)
     (mis, rounds)
   }
 
-  def minDist(ue: DataFrame, src: Long): (DataFrame, Int) = {
+  /** Min-plus single-source shortest paths over a weighted undirected
+    * edge list — the same relaxation kernel as [[minLabel]] lifted from
+    * the (min, id) semiring to (min, +): Bellman-Ford frontier rounds to
+    * a driver-counted fixpoint, one equi-join + one partial min-agg per
+    * round. The distance frontier stays SPARSE (only reached vertices
+    * carry a row) so there is no +∞ sentinel to overflow.
+    *
+    * @param ue  weighted undirected edges (src, dst, w) — both
+    *            directions present, w a non-negative integer (long).
+    * @param cap relaxation rounds allowed, the converging round
+    *            included (callers with an unrolled-CTE oracle pass its
+    *            unroll depth, or the oracle under-relaxes).
+    * @return (id, d) exact shortest distances for every vertex reachable
+    *         from `src`. */
+  def minDist(ue: DataFrame, src: Long, cap: Int = Fixpoint.Uncapped): DataFrame = {
     val spark = ue.sparkSession
     import spark.implicits._
     // FRONTIER relaxation (the Bellman-Ford queue optimization): only
@@ -827,8 +727,6 @@ object Components {
     var frontier = dist
     var frontierRows = 1L
     var distRowsUB = 1L // monotone upper bound: grows by ≤ frontierRows/round
-    var rounds = 0
-    var live = true
     // broadcast guards: neither the frontier nor the distance map is
     // bounded small by the algorithm — past these row counts fall back
     // to shuffle joins (the correct 100 TB shape; the hints are a local
@@ -842,8 +740,7 @@ object Components {
     // Without AQE the per-round exchanges stay at 32 partitions and the
     // coalesced-to-few task shape AQE gives these tiny frontier
     // aggregations is worth more than the per-exchange job-wave it costs.
-    while (live) {
-      rounds += 1
+    Fixpoint.run("weighted_sssp", cap) { _ =>
       val cand = ue
         .join(bcastIf(frontierRows,
           frontier.select(col("id").as("src"), col("d").as("sd"))), "src")
@@ -856,12 +753,9 @@ object Components {
         .filter(col("old").isNull || col("d") < col("old"))
         .select(col("id"), col("d"))
         .transform(GenSnap.snap)
-      frontierRows = imp.count()
-      if (sys.env.contains("MINDIST_DEBUG"))
-        System.err.println(s"[minDist] round=$rounds frontier=$frontierRows")
-      if (frontierRows == 0) live = false
-      else {
-        distRowsUB += frontierRows
+      Fixpoint.Round(imp, advance = n => {
+        frontierRows = n
+        distRowsUB += n
         frontier = imp
         // merge = improvements ∪ (unimproved distances): the anti join
         // broadcasts the improvement set (guarded), so the merge adds no
@@ -870,9 +764,9 @@ object Components {
             dist.join(bcastIf(frontierRows, imp.select(col("id"))),
               Seq("id"), "left_anti"))
           .transform(GenSnap.snap)
-      }
+      })
     }
-    (dist, rounds)
+    dist
   }
 
   /** Borůvka's minimum-spanning-forest, the parallel-native MST (each
@@ -883,13 +777,16 @@ object Components {
     * (w, lo, hi), which is unique per canonical edge, so the forest — and
     * therefore the oracle's replay — is deterministic regardless of data
     * ties in w. Per round: ONE edge×labels equi-join + ONE per-component
-    * lexicographic argmin (min over a struct), then contraction of the
-    * picked component-graph via [[minLabel]] — a graph whose size is the
+    * lexicographic argmin (a packed BIGINT min), then contraction of the
+    * picked component-graph by pointer jumping — a graph whose size is the
     * CURRENT component count, not the vertex count, so the fixpoint
     * shrinks geometrically. Everything is hash-partitioned equi-joins;
     * nothing driver-side but the round counter.
     *
     * @param ue weighted undirected edges (src, dst, w) — both directions.
+    * @param cap picking rounds allowed; the final round that finds no
+    *        pick does not count (callers with an unrolled oracle pass
+    *        its unroll).
     * @param uniquePairs caller asserts ue has EXACTLY ONE row per
     *        directed (src, dst) pair with w already the pair minimum —
     *        true for the session substrate, whose build IS a
@@ -902,7 +799,8 @@ object Components {
     *        forest is bit-identical.
     * @return ((round, lo, hi, w) — the forest edges, tagged with the
     *         round that picked them; rounds run). */
-  def boruvkaMst(ue: DataFrame, uniquePairs: Boolean = false): (DataFrame, Int) = {
+  def boruvkaMst(ue: DataFrame, cap: Int = Fixpoint.Uncapped,
+                 uniquePairs: Boolean = false): (DataFrame, Int) = {
     // Contracted representation: one canonical row per CURRENT component
     // pair, carrying the lightest original edge (w, lo, hi) between them
     // — the textbook Borůvka contraction. The work set shrinks
@@ -956,9 +854,7 @@ object Components {
         col("b").as("hi"))
     }.transform(GenSnap.snap)
     var mst: DataFrame = null
-    var rounds = 0
-    var live = true
-    while (live) {
+    val rounds = Fixpoint.run("mst_boruvka", cap, countsLast = false) { round =>
       val cand = edges
         .select(col("a").as("c"), pack(col("w"), col("lo"), col("hi")).as("pk"),
           col("b").as("other"))
@@ -969,16 +865,11 @@ object Components {
         .select(col("c"), unpackW.as("w"), unpackLo.as("lo"),
           unpackHi.as("hi"), col("other"))
         .transform(GenSnap.snap)
-      val nPick = pick.count()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[boruvka] round=${rounds + 1} picks=$nPick")
-      if (nPick == 0) live = false
-      else {
-        rounds += 1
+      Fixpoint.Round(pick, advance = _ => {
         val chosen = pick
           .select(col("lo"), col("hi"), col("w"))
           .distinct()
-          .select(lit(rounds).as("round"), col("lo"), col("hi"), col("w"))
+          .select(lit(round).as("round"), col("lo"), col("hi"), col("w"))
           .transform(GenSnap.snap)
         mst = if (mst == null) chosen else mst.union(chosen)
         // contract: the picks form a PSEUDO-FOREST — under the (w,lo,hi)
@@ -1003,20 +894,15 @@ object Components {
           .select(col("c"),
             when(col("oo") === col("c") && col("c") < col("o"), col("c"))
               .otherwise(col("o")).as("p")))
-        var jumping = true
-        var jumps = 0
-        while (jumping) {
-          jumps += 1
+        Fixpoint.run("mst_boruvka_jumps") { _ =>
           val j = GenSnap.snap(par
             .join(par.select(col("c").as("pc"), col("p").as("pp")),
               col("p") === col("pc"))
             .select(col("c"), col("pp").as("p"),
               (col("pp") =!= col("p")).as("ch")))
-          jumping = j.filter(col("ch")).count() > 0
           par = j.select("c", "p")
+          Fixpoint.Round(j.filter(col("ch")))
         }
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(s"[boruvka] contraction pointer-jumped in $jumps")
         val relab = par.select(col("c").as("id"), col("p").as("l"))
         edges = edges
           .join(relab.select(col("id").as("a"), col("l").as("la")), Seq("a"), "left")
@@ -1031,7 +917,7 @@ object Components {
           .select(col("a"), col("b"), unpackW.as("w"), unpackLo.as("lo"),
             unpackHi.as("hi"))
           .transform(GenSnap.snap)
-      }
+      })
     }
     val out =
       if (mst == null)

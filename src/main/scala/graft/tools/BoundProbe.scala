@@ -10,8 +10,10 @@ import java.util.concurrent.ConcurrentHashMap
   * DATA-DEPENDENT: it can pass at sf0.01 and throw at sf0.1 — exactly
   * how graph_temporal_reach's r12 crash stayed invisible for a round
   * (CORRECTNESS runs at the small sf; the bench swallowed the throw).
-  * Each bounded kernel calls [[record]] when it drains; Sf01BoundsSpec
-  * then drives every kernel at sf0.1 and asserts the recorded usage
+  * Every `graph.Fixpoint` loop (an uncapped one with bound
+  * Int.MaxValue) and every other bounded kernel calls [[record]] when
+  * it drains; Sf01BoundsSpec then drives every capped kernel at sf0.1
+  * and asserts the recorded usage
   * leaves documented margin under its bound, so a diameter creeping
   * toward a bound is a failing test long before it is a thrown query.
   *

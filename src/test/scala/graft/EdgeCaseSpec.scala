@@ -263,7 +263,7 @@ class EdgeCaseSpec extends SparkSpec {
   test("k-core peel: chains vanish, cliques survive, pendant tails drop") {
     def core(links: Seq[(Long, Long)], k: Int): Map[Long, Long] = {
       val ue = (links ++ links.map(_.swap)).toDF("src", "dst")
-      val (edges, _) = graph.Components.kCorePeel(ue, k)
+      val edges = graph.Components.kCorePeel(ue, k)
       edges.groupBy("src").count().collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     }

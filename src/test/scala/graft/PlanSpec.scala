@@ -683,6 +683,53 @@ class PlanSpec extends SparkSpec {
       assert(joinFed.isEmpty, s"$q: a join output feeds an exchange")
     }
   }
+
+  /** Physical operators of a frame's plan, under the AQE wrapper. */
+  private def operators(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    (df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case o => o
+    }).collect { case p => p }
+
+  test("LPA vote plans ONE exchange under partition-local hash aggregates") {
+    // r18: hash(dst) satisfies both the (dst, label) count and the by-dst
+    // packed argmax, so the two aggregations share one shuffle; the
+    // packed BIGINT max keeps them hash- (not sort-) aggregated
+    import spark.implicits._
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val ue = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)).toDF("src", "dst")
+    val lbl = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("id", "l")
+    val vote = graph.Components.voteWinners(ue, lbl)
+    val ops = operators(vote)
+    val shuffles = ops.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, s"the vote plans ${shuffles.size} exchanges:\n$ops")
+    assert(ops.count(_.isInstanceOf[HashAggregateExec]) == 4 &&
+      !ops.exists(_.isInstanceOf[SortAggregateExec]), s"vote aggregates:\n$ops")
+    // 2's neighbors 1 and 3 tie one vote each: the smaller label wins
+    assert(vote.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 2L, 2L -> 1L, 3L -> 2L))
+  }
+
+  test("Brandes contribution fold plans a Window, never an ObjectHashAggregate") {
+    // r18: the sorted-successor fold as a window running sum replaced
+    // sort_array(collect_list) + an interpreted aggregate HOF
+    import spark.implicits._
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val ue = Seq((1L, 2L), (1L, 3L), (2L, 1L), (3L, 1L)).toDF("src", "dst")
+    val vk = Seq((1L, 1L, 1L)).toDF("vlm", "vid", "sv")
+    val succ = Seq((1L, 2L, 1L, 0.5), (1L, 3L, 2L, 1.0)).toDF("slm", "w", "sw", "dw")
+    val contrib = graph.Components.brandesContrib(vk, ue, succ)
+    val ops = operators(contrib)
+    assert(ops.exists(_.isInstanceOf[WindowExec]), s"no window:\n$ops")
+    assert(!ops.exists(_.isInstanceOf[ObjectHashAggregateExec]),
+      s"the fold planned an ObjectHashAggregate:\n$ops")
+    // δ(1) = (1/1)(1 + 0.5) + (1/2)(1 + 1.0), folded in successor order
+    assert(contrib.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq ==
+      Seq((1L, 1L, 1.5 + 1.0)))
+  }
 }
 
 object PlanSpec {

@@ -230,7 +230,7 @@ class PropertiesSpec extends SparkSpec {
       val ue = edges.flatMap { case (a, b, w) =>
         Seq((a.toLong, b.toLong, w), (b.toLong, a.toLong, w))
       }.toDF("src", "dst", "w")
-      val (got, _) = graft.graph.Components.minDist(ue, 0L)
+      val got = graft.graph.Components.minDist(ue, 0L)
       val gotMap = got.collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
       val want = dijkstra(n, edges, 0)
       // minDist reports vertices REACHED from src; Dijkstra the same set

@@ -41,6 +41,8 @@ class Sf01BoundsSpec extends SparkSpec {
     ("temporal_reach",   "graph_temporal_reach",  6),
     ("kcore_peel",       "dedup_kcore",           2),
     ("ktruss_peel",      "dedup_ktruss",          2),
+    ("core_numbers_levels", "dedup_core_numbers", 2),
+    ("core_numbers_peel", "dedup_core_numbers",   2),
     ("graph_beam_search", "ann_graph_search",     2),
     ("graph_beam_search_batch", "ann_graph_search_batch", 2),
     ("graph_beam_search_persisted", "ann_graph_search_persisted", 2),
