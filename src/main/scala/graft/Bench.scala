@@ -159,20 +159,16 @@ object Bench {
   }
 
   /** One full timed measurement: 3 passes, per-query best-of merge,
-    * TARGETED re-timing of uncorroborated queries (VERDICT-r15 task 2),
+    * TARGETED re-timing of uncorroborated queries,
     * contamination annotations. Taint is decided per QUERY: the
     * artifact is tainted only when some query's minimum could not be
     * corroborated within [[MaxRetimePasses]] extra targeted passes —
     * pass-level totals (dispersion/skew) and box-load numbers stay as
     * annotations. Kept as a unit so the tainted-retry loop in main()
-    * can re-run the WHOLE measurement as the last resort. */
-  private final case class Measurement(
-    results: Seq[QTime], wallTimed: Double, passTotals: Seq[Double],
-    skew: Double, otherCpuCores: Double, loadStart: Double, loadEnd: Double,
-    tainted: Boolean, requeried: Int, unconverged: Seq[String])
-
+    * can re-run the WHOLE measurement as the last resort. Its storage
+    * fields are left at 0 for `main` to fill after the timed passes. */
   private def measure(spark: SparkSession, sfDir: String,
-                      qs: Seq[(String, (SparkSession, String) => DataFrame)]): Measurement = {
+                      qs: Seq[(String, (SparkSession, String) => DataFrame)]): Measurement0 = {
     val loadStart = loadAvg1m()
     // best-of-3 timed passes: single-pass timings on this shared box
     // swing ±30-50% (same bytecode, both directions — scheduling/JIT/
@@ -237,9 +233,10 @@ object Bench {
     // "corroborated" at the inflated level. other_cpu_cores measures
     // ONLY other processes' CPU by construction (busy-jiffies minus this
     // JVM's), so it cannot re-introduce the r15 self-load false positive.
-    Measurement(results, wallTimed, passTotals, skew, otherCpuCores,
+    Measurement0(results, wallTimed, passTotals, skew, otherCpuCores,
       loadStart, loadEnd,
       tainted = need.nonEmpty || otherCpuCores > LoadThreshold,
+      storageMb = 0L, storageDiskMb = 0L,
       requeried = retimed.size,
       unconverged = need)
   }
@@ -281,8 +278,9 @@ object Bench {
     s"""{"metric":"total","value":${ms(total)},"unit":"sec","errors":${errQ.size},"errors_detail":$errDetail,"timed":${okQ.size},"attempts":$attempts,"requeried":${m.requeried}$unconv,"load_start":${ms(m.loadStart)},"load_end":${ms(m.loadEnd)},"other_cpu_cores":${ms(m.otherCpuCores)},"wall_timed":${ms(m.wallTimed)},"pass_totals":[${m.passTotals.map(ms).mkString(",")}],"skew":${ms(m.skew)},"pass_dispersion":${ms(passDispersion(m.passTotals))},"tainted":${m.tainted},"storage_mb":${m.storageMb},"storage_disk_mb":${m.storageDiskMb},"storage_ok":${m.storageMb <= StorageBudgetMb}$storTop,"queries":$qjson,"sf":"$sfDir"}"""
   }
 
-  /** The render-facing slice of a measurement (storage read separately so
-    * the spec can synthesize one without a full timed phase). */
+  /** One measurement as rendered: the timings of [[measure]] and the
+    * post-suite storage reading (separate, so the spec can synthesize
+    * one without a full timed phase). */
   final case class Measurement0(
     results: Seq[QTime], wallTimed: Double, passTotals: Seq[Double],
     skew: Double, otherCpuCores: Double, loadStart: Double, loadEnd: Double,
@@ -307,7 +305,7 @@ object Bench {
     // re-runs. Re-measure up to 2 more times (re-awaiting a quiet
     // window between attempts) before accepting a tainted result.
     var attempts = 0
-    var m = null.asInstanceOf[Measurement]
+    var m = null.asInstanceOf[Measurement0]
     var accepted = false
     while (!accepted) {
       m = measure(spark, sfDir, qs)
@@ -361,9 +359,7 @@ object Bench {
         s"$StorageBudgetMb MB post-suite budget even after a cleaner " +
         s"drain — top residents: ${storageTop.mkString("; ")}")
     val line = renderJson(
-      Measurement0(m.results, m.wallTimed, m.passTotals, m.skew, m.otherCpuCores,
-        m.loadStart, m.loadEnd, m.tainted, storUsedMb, storDiskMb,
-        m.requeried, m.unconverged, storageTop),
+      m.copy(storageMb = storUsedMb, storageDiskMb = storDiskMb, storageTop = storageTop),
       sfDir, attempts)
     println(line)
     // also land the line in a file: stdout goes through sbt's [info]

@@ -90,7 +90,7 @@ object KMeans {
 
   /** Assignment over a pre-projected corpus (vec_id, label, v). */
   private def assignCore(corpus: DataFrame, centroids: DataFrame,
-                         maxSim: Boolean = true): DataFrame = {
+                         maxSim: Boolean): DataFrame = {
     val sim = cosine(col("v"), col("cv"))
     val ord = if (maxSim) col("sim").desc else col("sim").asc
     val w = Window.partitionBy("vec_id").orderBy(ord, col("cid").asc)
@@ -516,7 +516,6 @@ object KMeans {
       Some {
         val k = 8
         val cents = sqlCentroids(k)
-        val c = sqlCosine(sqlVec("e.embedding"), "c.cv")
         s"""WITH cents AS $cents,
            |scored AS (${sqlAssign(k)}),
            |assigned AS (SELECT vec_id, cid, ${sqlVec("embedding")} AS v FROM scored WHERE rk = 1),

@@ -1183,11 +1183,6 @@ object Motif {
       edgesRel: String = "edges"): String = {
     val refs = referencedProps(p)
     val (_, fromAll, where, exprOf) = matchSql(p, refs, nodesRel, edgesRel)
-    def operand(o: Operand): String = o match {
-      case Ref(r) => exprOf(r)
-      case other => litSql(other)
-    }
-
     val aggs = p.items.collect { case a: AggItem => a }
     val selItems = p.items.map {
       case ColItem(r, a) => s"${exprOf(r)} AS $a"

@@ -2,7 +2,7 @@ package graft.graph
 
 import graft.{Q, Tables}
 import org.apache.spark.graphx.{Edge, Graph, PartitionStrategy, VertexId}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{GenSnap, Layout}

@@ -238,12 +238,11 @@ object Vector {
     }
 
   /** Beam width / hop bound / hash-fixed entry seeds for the greedy
-    * best-first graph search. Hop usage is BoundProbe'd ("graph_beam_
-    * search") and margin-pinned at sf0.1 in Sf01BoundsSpec; the beam at
-    * 24 > 2×k keeps recall@10 at 1.0 on the gate corpus (pinned ≥ the
-    * IVF tier in Round15Spec via ann_recall_report). */
+    * best-first graph search. The beam at 24 > 2×k keeps recall@10 at
+    * 1.0 on the gate corpus (pinned ≥ the IVF tier in Round15Spec via
+    * ann_recall_report). */
   private val GsBeam = 24
-  private val GsHops = 10 // sf0.1 usage: 5 single-probe, 7 batch (one far probe) — margin ≥ 3, Sf01BoundsSpec-pinned
+  private[graft] val GsHops = 10 // sf0.1 usage: 5 single-probe, 7 batch (one far probe) — margin ≥ 3, Sf01BoundsSpec-pinned
   private val GsEntrySeeds = Seq(48L, 85L, 122L, 159L)
   private val GsSweepWidths = Seq(8, 16, 24) // efSearch-style serving knob
   // filtered search runs WIDER (the filtered-HNSW/ACORN rule of thumb:
@@ -251,118 +250,110 @@ object Vector {
   // doubles to keep the survivor pool ≥ k with margin)
   private val GsFilteredBeam = 48
 
-  /** One deterministic single-probe beam-search unroll over the memoized
-    * index at the given beam WIDTH: hash-fixed entries scored, each hop
-    * expands only the previous hop's new entrants, unseen candidates
-    * are scored and the top `width` re-cut by (sim DESC, id ASC).
-    * Returns the final (id, sim, eh) beam — shared by ann_graph_search
-    * (width 24) and ann_beam_sweep (the width tuning curve). */
-  private def gsBeamUnroll(e: DataFrame, adj: DataFrame, n: Long,
-      width: Int): DataFrame = gsBeamUnrollScored(e, adj, n, width)._1
+  /** The hash-fixed entry ids of an `n`-vector corpus. */
+  private def gsEntryIds(n: Long): Seq[Long] =
+    GsEntrySeeds.map(sj => (sj * 2654435761L) % n).distinct
 
-  /** The unroll plus every candidate it ever SCORED — (id, sim, eh),
-    * entry scores included, pre-cut. The filtered search ranks
-    * predicate survivors out of this visited set (the ACORN/
-    * filtered-HNSW shape), not just the surviving beam: filtering the
-    * GRAPH would disconnect it, and filtering only the final beam
-    * starves when survivors of a width cut are < k. Lazily unioned —
-    * each hop's scored frame is one shallow join off an already-snapped
-    * beam, so the single materialization in the filtered query re-pays
-    * each hop's candidate-sized scoring once, never the unroll. */
-  private def gsBeamUnrollScored(e: DataFrame, adj: DataFrame, n: Long,
-      width: Int): (DataFrame, DataFrame) = {
-    val entryIds = GsEntrySeeds.map(sj => (sj * 2654435761L) % n)
-      .distinct.filterNot(_ == 0L)
-    gsBeamFrom(e, adj, e.select("id").filter(col("id").isin(entryIds: _*)), width)
+  /** The single-probe search's entries: the hash-fixed ids but vector 0. */
+  private def gsEntries(e: DataFrame, n: Long): DataFrame =
+    e.select("id").filter(col("id").isin(gsEntryIds(n).filterNot(_ == 0L): _*))
+
+  /** The single-probe search's query: vector 0 as `qv`. */
+  private def gsQuery(e: DataFrame): DataFrame =
+    e.filter(col("id") === 0L).select(col("v").as("qv"))
+
+  /** Scores candidate rows (`keys` ++ id) against their probe's `qv`. */
+  private def gsScore(e: DataFrame, q: DataFrame, keys: Seq[String])(
+      ids: DataFrame): DataFrame = {
+    val withQ =
+      if (keys.isEmpty) ids.join(e, "id").crossJoin(broadcast(q))
+      else ids.join(e, "id").join(broadcast(q), keys)
+    withQ.select(keys.map(col) :+ col("id") :+
+      cosine(col("v"), col("qv")).as("sim"): _*)
   }
 
-  /** The unroll body with a caller-supplied ENTRY frame (ids) — the
-    * hash-fixed callers pass the seed set; ann_graph_search_routed
-    * passes the upper-layer winners. */
-  private def gsBeamFrom(e: DataFrame, adj: DataFrame, entries: DataFrame,
-      width: Int): (DataFrame, DataFrame) = {
-    val q = e.filter(col("id") === 0L).select(col("v").as("qv"))
-    def score(ids: DataFrame): DataFrame =
-      ids.join(e, "id").crossJoin(broadcast(q))
-        .select(col("id"), cosine(col("v"), col("qv")).as("sim"))
-    val w = Window.orderBy(col("sim").desc, col("id").asc)
-    val s0 = score(entries)
-      .withColumn("eh", lit(0))
-    var scoredAll = s0
-    var beam = s0
-      .withColumn("rk", row_number().over(w))
+  /** The re-cut of a beam to its top `width` per probe by (sim DESC,
+    * id ASC), snapped per hop (the MMR 2^hops lesson). */
+  private def gsCut(width: Int, keys: Seq[String])(beam: DataFrame): DataFrame =
+    beam.withColumn("rk", row_number().over(Window.partitionBy(keys.map(col): _*)
+        .orderBy(col("sim").desc, col("id").asc)))
       .filter(col("rk") <= width).drop("rk")
-      .transform(GenSnap.snap) // per-hop snap: the MMR 2^hops lesson
-    // EARLY EXIT (r17 optimization round): a hop whose cut admits no
-    // new entrant leaves the beam — and therefore every later hop — a
-    // no-op, so the unroll stops there (the gsBeamServe convention,
-    // extended to the memo-index unrolls). The per-hop count is a full
-    // scan of the just-snapped beam (safe for the lazy checkpoint, the
-    // minLabel discipline) and replaces the ~6 AQE stage-jobs each dead
-    // trailing hop used to cost; the search uses 5-7 of the 10 bounded
-    // hops at sf0.1, so 3-5 dead unrolls drop per query. Results are
-    // identical; the convergence require still reads max(eh).
-    var h = 1
-    var live = true
-    while (live && h <= GsHops) {
-      val frontier = beam.filter(col("eh") === h - 1)
-        .select(col("id").as("src"))
-      val cand = frontier.join(adj, "src").select(col("dst").as("id"))
-        .filter(col("id") =!= 0L).distinct()
-        .join(beam.select("id"), Seq("id"), "left_anti")
+      .transform(GenSnap.snap)
+
+  /** The deterministic greedy beam search, every probe at once.
+    *
+    * The scored entries form hop 0's beam; hop h expands only the
+    * entrants of hop h − 1 through `adj`, scores the candidates not yet
+    * in the probe's beam (never the probe itself) and re-cuts the beam
+    * to `width`. The beam's k-th similarity is monotone non-decreasing,
+    * so an evicted node never re-enters and the frontier empties. Each
+    * hop is one [[graft.graph.Fixpoint]] round whose one count is the
+    * hop's entrants: the hop that admits none stops the search, and the
+    * hops used (the newest entrant's hop + 1) are recorded under
+    * `kernel`. `GsHops` is the oracle's unroll depth (`sqlGsHops`):
+    * past it the search throws, or with `quiet` stops there.
+    *
+    * @param q       one row per probe: `keys` and its vector `qv`.
+    * @param entries `keys` and `id`, without the probe's own id.
+    * @param keys    the probe key: Nil for the single probe, vector 0.
+    * @return the final beam (keys, id, sim, eh) and every row scored
+    *         on the way, entries included: a lazy union of shallow joins
+    *         off snapped beams, so reading it re-pays each hop's
+    *         candidate-sized scoring once, never the search. */
+  private[graft] def gsBeam(e: DataFrame, adj: DataFrame, q: DataFrame,
+      entries: DataFrame, width: Int, kernel: String, keys: Seq[String] = Nil,
+      quiet: Boolean = false): (DataFrame, DataFrame) = {
+    val key = keys.map(col)
+    val self = keys.headOption.fold(lit(0L))(col)
+    val score = gsScore(e, q, keys) _
+    val cut = gsCut(width, keys) _
+    var scoredAll = score(entries).withColumn("eh", lit(0))
+    var beam = cut(scoredAll)
+    graft.graph.Fixpoint.run(kernel, GsHops,
+        hint = "raise GsHops (and the oracle unroll)") { h =>
+      val cand = beam.filter(col("eh") === h - 1)
+        .select(key :+ col("id").as("src"): _*)
+        .join(adj, "src").select(key :+ col("dst").as("id"): _*)
+        .filter(col("id") =!= self).distinct()
+        .join(beam.select(key :+ col("id"): _*), keys :+ "id", "left_anti")
       val scored = score(cand).withColumn("eh", lit(h))
       scoredAll = scoredAll.unionByName(scored)
-      beam = beam.unionByName(scored)
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= width).drop("rk")
-        .transform(GenSnap.snap)
-      if (beam.filter(col("eh") === h).count() == 0L) live = false
-      h += 1
+      beam = cut(beam.unionByName(scored))
+      graft.graph.Fixpoint.Round(beam.filter(col("eh") === h),
+        done = c => c == 0L || quiet && h == GsHops)
     }
     (beam, scoredAll)
   }
 
-  /** The STORAGE-SERVING unroll: identical semantics to [[gsBeamFrom]]
-    * with the hash-fixed entries, but the adjacency is the published
-    * BUCKETED artifact table and each hop's frontier ids (≤ beam rows —
-    * a bounded driver boundary, the beam is in serving memory by
-    * construction) are pushed as a LITERAL `src IN (...)` so the scan
-    * prunes to the frontier's buckets instead of reading the whole
-    * artifact per hop — at 100 TB a hop reads a few of thousands of
-    * storage buckets (SelectedBucketsCount plan-pinned in Round17Spec).
-    * An empty frontier short-circuits the remaining hops (the beam is
-    * provably fixed once no hop adds entrants), which the final
-    * convergence require still checks via max(eh). */
+  /** The single-probe search served from a published BUCKETED adjacency
+    * table: [[gsBeam]]'s hops and result, but each hop's frontier ids
+    * (≤ width rows, a bounded driver collect) are pushed as a literal
+    * `src IN (...)`, so the scan prunes to the frontier's buckets
+    * instead of reading the artifact per hop (SelectedBucketsCount
+    * plan-pinned in Round17Spec). The collect is the hop's one driver
+    * action; the hops used are recorded and capped as in [[gsBeam]]. */
   private def gsBeamServe(e: DataFrame, adjT: DataFrame, n: Long,
-      width: Int): DataFrame = {
-    val entryIds = GsEntrySeeds.map(sj => (sj * 2654435761L) % n)
-      .distinct.filterNot(_ == 0L)
-    val q = e.filter(col("id") === 0L).select(col("v").as("qv"))
-    def score(ids: DataFrame): DataFrame =
-      ids.join(e, "id").crossJoin(broadcast(q))
-        .select(col("id"), cosine(col("v"), col("qv")).as("sim"))
-    val w = Window.orderBy(col("sim").desc, col("id").asc)
-    var beam = score(e.select("id").filter(col("id").isin(entryIds: _*)))
-      .withColumn("eh", lit(0))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= width).drop("rk")
-      .transform(GenSnap.snap)
+      width: Int, kernel: String): DataFrame = {
+    val score = gsScore(e, gsQuery(e), Nil) _
+    val cut = gsCut(width, Nil) _
+    var beam = cut(score(gsEntries(e, n)).withColumn("eh", lit(0)))
+    def entrants(h: Int): Array[Long] =
+      beam.filter(col("eh") === h).select("id").collect().map(_.getLong(0))
     var h = 1
-    var frontier = beam.filter(col("eh") === 0).select("id")
-      .collect().map(_.getLong(0)) // ≤ width ids: the serving beam state
+    var frontier = entrants(0)
     while (h <= GsHops && frontier.nonEmpty) {
       val cand = adjT.filter(col("src").isin(frontier: _*)) // bucket-pruned
         .select(col("dst").as("id"))
         .filter(col("id") =!= 0L).distinct()
         .join(beam.select("id"), Seq("id"), "left_anti")
-      beam = beam.unionByName(score(cand).withColumn("eh", lit(h)))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= width).drop("rk")
-        .transform(GenSnap.snap)
-      frontier = beam.filter(col("eh") === h).select("id")
-        .collect().map(_.getLong(0))
+      beam = cut(beam.unionByName(score(cand).withColumn("eh", lit(h))))
+      frontier = entrants(h)
       h += 1
     }
+    // h − 1 hops ran; a live frontier needed one more
+    graft.tools.BoundProbe.record(kernel, if (frontier.isEmpty) h - 1 else h, GsHops)
+    require(frontier.isEmpty,
+      s"$kernel still live after $GsHops rounds — raise GsHops (and the oracle unroll)")
     beam
   }
 
@@ -588,8 +579,9 @@ object Vector {
           .transform(GenSnap.snap)
       else adj = scored.filter(col("rk") <= NnKb).select("src", "dst")
     }
-    val beam = gsBeamUnroll(eS, adj, n, GsBeam)
-    val query = eS.filter(col("id") === 0L).select(col("v").as("qv"))
+    val query = gsQuery(eS)
+    val (beam, _) = gsBeam(eS, adj, query, gsEntries(eS, n), GsBeam,
+      "graph_beam_search_rebuilt", quiet = true)
     val truth = eS.filter(col("id") =!= 0L).crossJoin(broadcast(query))
       .select(col("id"), cosine(col("v"), col("qv")).as("ts"))
       .orderBy(col("ts").desc, col("id").asc).limit(10).select("id")
@@ -825,7 +817,7 @@ object Vector {
        |        WHERE (s2.s * 2654435761) % n.n <> 0)""".stripMargin
   }
 
-  /** The oracle twin of [[gsBeamUnroll]]: the hop CTE chain at the given
+  /** The oracle twin of [[gsBeam]]: the hop CTE chain at the given
     * width, reading index CTEs `$adjRel`/`$eRel`/`q`/`ent` (defaults =
     * the shared build CTE names; the delete-repair oracle re-points them
     * at the repaired adjacency and the survivor corpus), emitting beam
@@ -1947,21 +1939,12 @@ object Vector {
     ),
 
     // ── graph-traversal ANN: beam search over the NN-descent index ────
-    // VERDICT-r14 task 1 — the graph is built and incrementally
-    // maintained but was never SEARCHED, yet graph traversal is the
-    // production ANN shape (HNSW/DiskANN family). Deterministic greedy
-    // beam best-first search over the PUBLISHED degree-2k index (since
-    // r17 nnSearchIndex is a read-through cache over the artifact): 4
-    // hash-fixed entry points are scored against the query (vec 0), the
-    // best 24 form the beam, and each hop expands only the beam's NEW
-    // entrants (their adjacency rows), scores the unseen candidates,
-    // and re-cuts the top 24 by (sim DESC, id ASC). The beam's k-th
-    // similarity is monotone non-decreasing, so an evicted node can
-    // never re-enter and the frontier provably empties; the hop unroll
-    // is FIXED at GsHops (10) with a loud in-kernel require that the
-    // last hop added nothing (the temporal-reach exact-unroll
-    // convention), usage BoundProbe'd and margin-pinned at sf0.1. Every
-    // pick is deterministic, so the oracle replays the full index build
+    // Graph traversal is the production ANN shape (HNSW/DiskANN
+    // family): the greedy beam search [[gsBeam]] for vec 0 over the
+    // PUBLISHED degree-2k index (nnSearchIndex reads the artifact), from
+    // 4 hash-fixed entry points at width 24; its hop usage is
+    // margin-pinned at sf0.1 in Sf01BoundsSpec. Every pick is
+    // deterministic, so the oracle replays the full index build
     // AND all GsHops hops as chained CTEs — the ANCHOR oracle proving
     // the published artifact's content equals the descent it claims to
     // be (the sibling serve-path oracles read the artifact itself).
@@ -1975,15 +1958,8 @@ object Vector {
       "ann_graph_search",
       (s, d) => {
         val (e, n, adj) = nnSearchIndex(s, d)
-        val beam = gsBeamUnroll(e, adj, n, GsBeam)
-        // convergence gate: the final beam's newest entrant tells how
-        // many hops did work; at least one trailing hop must have added
-        // NOTHING or the unroll truncated the search (1-row agg over
-        // the checkpointed 24-row beam the caller also reads)
-        val maxEh = beam.agg(max("eh")).head().getInt(0)
-        graft.tools.BoundProbe.record("graph_beam_search", maxEh + 1, GsHops)
-        require(maxEh < GsHops,
-          s"beam still growing at hop $GsHops — raise GsHops (and the oracle unroll)")
+        val (beam, _) = gsBeam(e, adj, gsQuery(e), gsEntries(e, n), GsBeam,
+          "graph_beam_search")
         val w = Window.orderBy(col("sim").desc, col("id").asc)
         beam.withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
           .select(col("rank").cast("int").as("rank"),
@@ -2002,8 +1978,9 @@ object Vector {
     // The production serving shape for a QUERY BATCH (the ann_knn_join
     // convention: probes = the first 10 vectors): every probe runs the
     // same deterministic beam search over the shared PUBLISHED index
-    // simultaneously — beam state is (probe_id, id, sim, eh) and every
-    // window is PARTITIONED BY probe_id, so per-hop work is
+    // simultaneously ([[gsBeam]] keyed by probe_id) — beam state is
+    // (probe_id, id, sim, eh) and every window is PARTITIONED BY
+    // probe_id, so per-hop work is
     // (probes × beam)-sized and the whole batch costs one unroll, not
     // one unroll per probe. A probe is excluded from its own beam (the
     // knn_join self-exclusion); entries/hops/ties are the single-probe
@@ -2018,45 +1995,14 @@ object Vector {
       (s, d) => {
         val (e, n, adj) = nnSearchIndex(s, d)
         val probes = e.filter(col("id") < 10L)
-          .select(col("id").as("probe_id"), col("v").as("pv"))
-        val entryIds = GsEntrySeeds.map(sj => (sj * 2654435761L) % n).distinct
-        def score(ids: DataFrame): DataFrame =
-          ids.join(e, "id").join(broadcast(probes), "probe_id")
-            .select(col("probe_id"), col("id"),
-              cosine(col("v"), col("pv")).as("sim"))
+          .select(col("id").as("probe_id"), col("v").as("qv"))
+        val ent = probes.select(col("probe_id"))
+          .crossJoin(e.select("id").filter(col("id").isin(gsEntryIds(n): _*)))
+          .filter(col("id") =!= col("probe_id"))
+        val (beam, _) = gsBeam(e, adj, probes, ent, GsBeam,
+          "graph_beam_search_batch", Seq("probe_id"))
         val w = Window.partitionBy("probe_id")
           .orderBy(col("sim").desc, col("id").asc)
-        val ent = probes.select(col("probe_id"))
-          .crossJoin(e.select("id").filter(col("id").isin(entryIds: _*)))
-          .filter(col("id") =!= col("probe_id"))
-        var beam = score(ent).withColumn("eh", lit(0))
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= GsBeam).drop("rk")
-          .transform(GenSnap.snap)
-        // early exit once NO probe's beam admitted a new entrant this
-        // hop — all probes' remaining unrolls are then no-ops (the
-        // gsBeamFrom note); the batch uses 7-8 of the 10 bounded hops
-        var h = 1
-        var live = true
-        while (live && h <= GsHops) {
-          val frontier = beam.filter(col("eh") === h - 1)
-            .select(col("probe_id"), col("id").as("src"))
-          val cand = frontier.join(adj, "src")
-            .select(col("probe_id"), col("dst").as("id"))
-            .filter(col("id") =!= col("probe_id")).distinct()
-            .join(beam.select("probe_id", "id"), Seq("probe_id", "id"), "left_anti")
-          val scored = score(cand).withColumn("eh", lit(h))
-          beam = beam.unionByName(scored)
-            .withColumn("rk", row_number().over(w))
-            .filter(col("rk") <= GsBeam).drop("rk")
-            .transform(GenSnap.snap)
-          if (beam.filter(col("eh") === h).count() == 0L) live = false
-          h += 1
-        }
-        val maxEh = beam.agg(max("eh")).head().getInt(0)
-        graft.tools.BoundProbe.record("graph_beam_search_batch", maxEh + 1, GsHops)
-        require(maxEh < GsHops,
-          s"a probe's beam is still growing at hop $GsHops — raise GsHops (and the oracle unroll)")
         beam.withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
           .select(col("probe_id"), col("id").as("vec_id"), col("sim"),
             col("rk").cast("int").as("rk"))
@@ -2112,21 +2058,22 @@ object Vector {
     // ── beam-width sweep: the graph index's recall/cost tuning curve ──
     // The ann_nprobe_sweep convention for the graph family: beam width
     // is THE serving knob of graph-traversal ANN (HNSW's efSearch), so
-    // sweep it — each width runs the shared deterministic unroll, its
-    // top-10 joins the exact brute-force truth, and the row reports
+    // sweep it — each width runs [[gsBeam]], stopping quietly at GsHops
+    // (converged = false) instead of throwing; its top-10 joins the
+    // exact brute-force truth, and the row reports
     // (beam, hits, recall@10, hops_used). Wider beams explore strictly
     // more (hits non-decreasing on this corpus — pinned in
     // Round15Spec); hops_used is the latency proxy (sequential hop
     // depth). The width-24 row is exactly ann_graph_search's result by
     // construction, making the sweep self-checking. Oracle reads the
-    // published artifact (the serve path — r17) and runs all three
+    // published artifact (the serve path) and runs all three
     // unrolls as parallel CTE chains.
     Q(
       "ann_beam_sweep",
       (s, d) => {
         val (e, n, adj) = nnSearchIndex(s, d)
         val truth = e.filter(col("id") =!= 0L)
-          .crossJoin(broadcast(e.filter(col("id") === 0L).select(col("v").as("qv"))))
+          .crossJoin(broadcast(gsQuery(e)))
           .select(col("id"), cosine(col("v"), col("qv")).as("sim"))
           .orderBy(col("sim").desc, col("id").asc).limit(10)
           .select(col("id"))
@@ -2142,17 +2089,18 @@ object Vector {
         import scala.concurrent.ExecutionContext.Implicits.global
         import scala.concurrent.duration.Duration
         val materialized = GsSweepWidths.map { wd =>
-          wd -> Future { val b = gsBeamUnroll(e, adj, n, wd); b.count(); b }
+          wd -> Future {
+            val (b, _) = gsBeam(e, adj, gsQuery(e), gsEntries(e, n), wd,
+              "graph_beam_sweep", quiet = true)
+            b.count(); b
+          }
         }
         materialized.map { case (wd, fut) =>
           val beam = Await.result(fut, Duration.Inf)
           val w = Window.orderBy(col("sim").desc, col("id").asc)
           // ONE aggregation reads each beam once: the truth hits among
-          // the top-10 (rank ≤ 10 ∧ in the exact set) and the
-          // convergence max(eh) — a trailing hop that added nothing
-          // (ADVICE r15) — fold into the same pass. VERDICT-r16: the
-          // converged column's original max(eh) crossJoin re-read every
-          // beam frame and cost the sweep ~26%.
+          // the top-10 (rank ≤ 10 ∧ in the exact set) and max(eh), the
+          // newest entrant's hop, fold into the same pass.
           beam.withColumn("rk", row_number().over(w))
             .join(broadcast(truth.withColumn("t", lit(true))), Seq("id"), "left")
             .agg(
@@ -2190,8 +2138,8 @@ object Vector {
     ),
 
     // ── persisted-index serve: the build-once/serve-many search ───────
-    // VERDICT-r15 task 1. Identical semantics to ann_graph_search, but
-    // the adjacency comes from the PUBLISHED parquet artifact (see
+    // Identical semantics to ann_graph_search, but the adjacency comes
+    // from the PUBLISHED parquet artifact (see
     // gsPersistedIndex) instead of the session memo: the serve plan
     // contains no NN-descent stage — its only inputs are the artifact
     // scan and the corpus scan (plan-asserted in Round16Spec, which
@@ -2216,11 +2164,8 @@ object Vector {
         // the bucketed-artifact unroll: per hop, the ≤ beam frontier ids
         // are pushed as literals so the adjacency scan bucket-prunes
         // (Round17Spec pins SelectedBucketsCount in this shape)
-        val beam = gsBeamServe(e, gsAdjTable(s, base), n, GsBeam)
-        val maxEh = beam.agg(max("eh")).head().getInt(0)
-        graft.tools.BoundProbe.record("graph_beam_search_persisted", maxEh + 1, GsHops)
-        require(maxEh < GsHops,
-          s"beam still growing at hop $GsHops — raise GsHops (and the oracle unroll)")
+        val beam = gsBeamServe(e, gsAdjTable(s, base), n, GsBeam,
+          "graph_beam_search_persisted")
         val w = Window.orderBy(col("sim").desc, col("id").asc)
         beam.withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
           .select(col("rank").cast("int").as("rank"),
@@ -2236,10 +2181,10 @@ object Vector {
     ),
 
     // ── filtered graph search: metadata predicate over the beam ───────
-    // VERDICT-r15 task 4 — the dominant production RAG query: top-k
-    // UNDER A METADATA FILTER (here label = 3, the ann_filtered_topk
-    // predicate). Filtering the graph itself would disconnect it, and
-    // post-filtering only the final beam starves when a width cut
+    // The dominant production RAG query: top-k UNDER A METADATA FILTER
+    // (here label = 3, the ann_filtered_topk predicate). Filtering the
+    // graph itself would disconnect it, and post-filtering only the
+    // final beam starves when a width cut
     // leaves < k survivors — so the beam NAVIGATES unfiltered (the
     // filtered-HNSW/ACORN shape) at a widened width (48: predicate
     // selectivity ~1/10 thins the pool ~10×), and the answer ranks
@@ -2257,18 +2202,15 @@ object Vector {
       "ann_graph_search_filtered",
       (s, d) => {
         val (e, n, adj) = nnSearchIndex(s, d)
-        val (beamF, scoredAll) = gsBeamUnrollScored(e, adj, n, GsFilteredBeam)
-        val maxEh = beamF.agg(max("eh")).head().getInt(0)
-        graft.tools.BoundProbe.record("graph_beam_search_filtered", maxEh + 1, GsHops)
-        require(maxEh < GsHops,
-          s"filtered beam still growing at hop $GsHops — raise GsHops (and the oracle unroll)")
+        val query = gsQuery(e)
+        val (_, scoredAll) = gsBeam(e, adj, query, gsEntries(e, n),
+          GsFilteredBeam, "graph_beam_search_filtered")
         val pass = embeddings(s, d)
           .filter(col("label") === 3 && col("vec_id") =!= 0L)
           .select(col("vec_id").as("id"))
         val hits = scoredAll.join(pass, "id")
           .groupBy("id").agg(max("sim").as("sim"))
           .orderBy(col("sim").desc, col("id").asc).limit(10)
-        val query = e.filter(col("id") === 0L).select(col("v").as("qv"))
         val truth = embeddings(s, d)
           .filter(col("vec_id") =!= 0L && col("label") === 3)
           .crossJoin(broadcast(query))
@@ -2305,10 +2247,10 @@ object Vector {
     ),
 
     // ── index maintenance under churn: delete + repair + search ───────
-    // VERDICT-r15 task 7 — ann_nndescent_incremental handles INSERTS;
-    // production indexes also tombstone and repair after DELETES
-    // (FreshDiskANN-style consolidation). A deterministic ~5% slice is
-    // tombstoned; edges FROM tombstones drop with their node; a
+    // ann_nndescent_incremental handles INSERTS; production indexes also
+    // tombstone and repair after DELETES (FreshDiskANN-style
+    // consolidation). A deterministic ~5% slice is tombstoned; edges
+    // FROM tombstones drop with their node; a
     // survivor that lost a neighbor t adopts candidates from t's own
     // adjacency (t's list is the best local approximation of t's
     // neighborhood) and its list alone is re-scored and re-cut to the
@@ -2327,12 +2269,9 @@ object Vector {
       "ann_graph_delete_repair",
       (s, d) => {
         val (eS, n, adj2) = gsRepairedIndex(s, d)
-        val beam = gsBeamUnroll(eS, adj2, n, GsBeam)
-        val maxEh = beam.agg(max("eh")).head().getInt(0)
-        graft.tools.BoundProbe.record("graph_beam_search_repair", maxEh + 1, GsHops)
-        require(maxEh < GsHops,
-          s"post-repair beam still growing at hop $GsHops — raise GsHops (and the oracle unroll)")
-        val query = eS.filter(col("id") === 0L).select(col("v").as("qv"))
+        val query = gsQuery(eS)
+        val (beam, _) = gsBeam(eS, adj2, query, gsEntries(eS, n), GsBeam,
+          "graph_beam_search_repair")
         val truth = eS.filter(col("id") =!= 0L)
           .crossJoin(broadcast(query))
           .select(col("id"), cosine(col("v"), col("qv")).as("ts"))
@@ -2390,7 +2329,7 @@ object Vector {
       }
     ),
 
-    // ── churn re-publish + serve: version N → N+1 (VERDICT-r16 task 2) ─
+    // ── churn re-publish + serve: version N → N+1 ─────────────────────
     // ann_graph_delete_repair proves the consolidation math (its oracle
     // replays build + tombstones + repair); THIS query proves the
     // lifecycle: the repaired adjacency is PUBLISHED as the next
@@ -2413,11 +2352,8 @@ object Vector {
         val eS = embeddings(s, d)
           .filter(!gsTombPred(col("vec_id")))
           .select(col("vec_id").as("id"), vec(col("embedding")).as("v"))
-        val beam = gsBeamServe(eS, gsAdjTable(s, base), n, GsBeam)
-        val maxEh = beam.agg(max("eh")).head().getInt(0)
-        graft.tools.BoundProbe.record("graph_beam_search_repair_pub", maxEh + 1, GsHops)
-        require(maxEh < GsHops,
-          s"repaired-serve beam still growing at hop $GsHops — raise GsHops (and the oracle unroll)")
+        val beam = gsBeamServe(eS, gsAdjTable(s, base), n, GsBeam,
+          "graph_beam_search_repair_pub")
         val w = Window.orderBy(col("sim").desc, col("id").asc)
         beam.withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
           .select(col("rank").cast("int").as("rank"),
@@ -2475,11 +2411,8 @@ object Vector {
         val n = s.read.parquet(s"$base/meta").head().getAs[Long]("n")
         val e = embeddings(s, d)
           .select(col("vec_id").as("id"), vec(col("embedding")).as("v"))
-        val beam = gsBeamServe(e, gsAdjTable(s, base), n, GsBeam)
-        val maxEh = beam.agg(max("eh")).head().getInt(0)
-        graft.tools.BoundProbe.record("graph_beam_search_insert_pub", maxEh + 1, GsHops)
-        require(maxEh < GsHops,
-          s"post-insert serve beam still growing at hop $GsHops — raise GsHops (and the oracle unroll)")
+        val beam = gsBeamServe(e, gsAdjTable(s, base), n, GsBeam,
+          "graph_beam_search_insert_pub")
         val w = Window.orderBy(col("sim").desc, col("id").asc)
         beam.withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
           .select(col("rank").cast("int").as("rank"),
@@ -2564,8 +2497,8 @@ object Vector {
     // base-layer beam, so the search starts NEAR the answer instead of
     // at arbitrary hash seeds and converges in fewer sequential hops —
     // the serving-latency knob beam width cannot buy. Same unroll, same
-    // width, same convergence require; BoundProbe'd under its own
-    // kernel, and Round16Spec pins hops_used(routed) ≤ hops_used(fixed)
+    // width, same hop cap; BoundProbe'd under its own kernel, and
+    // Round16Spec pins hops_used(routed) ≤ hops_used(fixed)
     // plus recall at the exact ceiling. Oracle reads the published
     // artifact (the serve path) and replays the upper-layer scan and
     // all hops.
@@ -2573,7 +2506,7 @@ object Vector {
       "ann_graph_search_routed",
       (s, d) => {
         val (e, n, adj) = nnSearchIndex(s, d)
-        val q = e.filter(col("id") === 0L).select(col("v").as("qv"))
+        val q = gsQuery(e)
         val upper = e.filter(
           Tables.detHash(col("id")) % 16 === lit(3L) && col("id") =!= 0L)
         val entries = upper.crossJoin(broadcast(q))
@@ -2581,11 +2514,7 @@ object Vector {
           .orderBy(col("es").desc, col("id").asc).limit(4)
           .select("id")
           .transform(GenSnap.snap)
-        val (beam, _) = gsBeamFrom(e, adj, entries, GsBeam)
-        val maxEh = beam.agg(max("eh")).head().getInt(0)
-        graft.tools.BoundProbe.record("graph_beam_search_routed", maxEh + 1, GsHops)
-        require(maxEh < GsHops,
-          s"routed beam still growing at hop $GsHops — raise GsHops (and the oracle unroll)")
+        val (beam, _) = gsBeam(e, adj, q, entries, GsBeam, "graph_beam_search_routed")
         val w = Window.orderBy(col("sim").desc, col("id").asc)
         beam.withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
           .select(col("rank").cast("int").as("rank"),

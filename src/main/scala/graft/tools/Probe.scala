@@ -70,8 +70,8 @@ object Probe {
         val t0 = System.nanoTime()
         val rows = graft.SparkEntry.queries(n)(spark, sfDir).count()
         val sec = (System.nanoTime() - t0) / 1e9
-        // settle the async listener bus before reading the counters
-        Thread.sleep(300)
+        // deliver every posted event before reading the counters
+        org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
         println(s"PROBE $n pass=$pass rows=$rows sec=$sec")
         println(s"METRICS $n pass=$pass ${acc.line}")
         if (pass > 1) { // warm passes only

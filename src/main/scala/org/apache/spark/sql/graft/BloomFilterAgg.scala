@@ -38,7 +38,7 @@ object BloomFilterAgg {
   val Bits = 16384
   val BitsPerWord = 32
   val Words: Int = Bits / BitsPerWord // 512
-  import CountMinSketchAgg.{B, KeyBound, P}
+  import CountMinSketchAgg.{B, P}
 
   /** Bit position of key `k` under hash `j` (top 14 of the 32 mixed
     * bits) — shared verbatim (as SQL) with the oracle. */

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -23,4 +24,8 @@ object Bridge {
   /** The analyzed logical plan of a DataFrame (for building custom
     * plan nodes from resolved child attributes). */
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+
+  /** Block until the listener bus has delivered every posted event
+    * (`listenerBus` is private[spark]). */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(30000)
 }

@@ -31,9 +31,6 @@ class BucketedJoinSpec extends SparkSpec {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
       case o => o
     }
-    val exchangesBeforeAgg = unwrapped.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-    }
     // the join itself must not shuffle; only the final aggregation may
     val joins = unwrapped.collect {
       case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j

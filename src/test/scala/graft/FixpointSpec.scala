@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * the boundary of its round cap: each kernel runs on a hand-built path
   * graph whose round count n is known, and must give the loose-cap
   * result with cap n (recording n rounds used) and throw, naming its
-  * BoundProbe record, with cap n − 1. */
+  * BoundProbe record, with cap n − 1. The beam search's cap is the
+  * oracle's fixed unroll, so its path is one hop longer instead. */
 class FixpointSpec extends SparkSpec {
   import TestSpark.spark.implicits._
 
@@ -116,6 +117,40 @@ class FixpointSpec extends SparkSpec {
       val ex = intercept[IllegalArgumentException](run(n - 1))
       assert(ex.getMessage.contains(name), ex.getMessage)
     }
+
+  /** A corpus whose similarity to vector 0 rises along the path
+    * 1 → 2 → … → m, with its adjacency: from entry 1, hop h admits
+    * exactly node h + 1. */
+  private def risingPath(m: Int): (DataFrame, DataFrame) = {
+    val e = ((0L, Seq(1.0, 0.0)) +: (1 to m).map(i => (i.toLong, Seq(i.toDouble, 1.0))))
+      .toDF("id", "v")
+    (e, (1 until m).map(i => (i.toLong, i + 1L)).toDF("src", "dst"))
+  }
+
+  test("graph_beam_search: a path of GsHops hops converges and records them; one more hop throws") {
+    val hops = ops.Vector.GsHops
+    def search(m: Int): DataFrame = {
+      val (e, adj) = risingPath(m)
+      ops.Vector.gsBeam(e, adj, e.filter(col("id") === 0L).select(col("v").as("qv")),
+        Seq(1L).toDF("id"), 24, "graph_beam_search")._1
+    }
+    BoundProbe.clear()
+    assert(rows(search(hops).select("id", "eh")) ==
+      (1 to hops).map(i => Row(i.toLong, i - 1)).toSet)
+    assert(BoundProbe.maxUsed("graph_beam_search").contains((hops, hops)))
+    val ex = intercept[IllegalArgumentException](search(hops + 1))
+    assert(ex.getMessage.contains("graph_beam_search"), ex.getMessage)
+  }
+
+  test("the keyed beam is the unkeyed one: ann_graph_search_batch's probe 0 is ann_graph_search's top 3") {
+    val top3 = SparkEntry.queries("ann_graph_search")(spark, sf)
+      .filter(col("rank") <= 3).orderBy("rank")
+      .select("vec_id", "sim").collect().toSeq
+    val probe0 = SparkEntry.queries("ann_graph_search_batch")(spark, sf)
+      .filter(col("probe_id") === 0L).orderBy("rk")
+      .select("vec_id", "sim").collect().toSeq
+    assert(probe0.size == 3 && probe0 == top3, s"$probe0 vs $top3")
+  }
 
   test("uncapped loops record their rounds: min-label on a 4-path takes 4") {
     BoundProbe.clear()

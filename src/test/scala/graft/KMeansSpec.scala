@@ -97,7 +97,6 @@ class KMeansSpec extends SparkSpec {
   }
 
   test("cost is comparable to MLlib KMeans at the same k") {
-    import spark.implicits._
     // our loop's mean squared distance to assigned centroid vs MLlib's
     val r = KMeans.run(spark, e, k = 8)
     val withC = r.assignments.join(r.centroids, "cid")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Physical-plan shape assertions: the properties that make these
   * operators survive a 100 TB scale-up must be visible in the plan, not
   * just hoped for. */

@@ -312,7 +312,6 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("mix rebalance keeps counts near quota and is a deterministic per-row predicate") {
-    import spark.implicits._
     val out1 = SparkEntry.queries("text_mix_rebalance")(spark, sf)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val out2 = SparkEntry.queries("text_mix_rebalance")(spark, sf)

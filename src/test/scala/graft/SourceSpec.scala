@@ -322,7 +322,7 @@ class SourceSpec extends SparkSpec {
   }
 
   test("grft runtime filtering: a join-driven In() prunes files at execution time") {
-    import graft.sources.{Grft, GrftInputPartition, GrftScanBuilder}
+    import graft.sources.{GrftInputPartition, GrftScanBuilder}
     import org.apache.spark.sql.sources.In
     val d = tempDir("grft_runtime")
     Tables.embeddings(spark, sf).select("vec_id", "label", "embedding")
