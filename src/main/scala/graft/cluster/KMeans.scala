@@ -226,79 +226,37 @@ object KMeans {
   }
 
   // ── persisted IVF index: the build/serve split for the cell layout ──
-  // The fourth artifact family (graph / graph_incremental / lsh-cells /
-  // THIS): ann_ivf_topk's corpus pass — assign every vector to its
-  // nearest init centroid — is the expensive index BUILD; at 100 TB it
-  // is a periodic job, not something every probe re-runs. The cells are
+  // ann_ivf_topk's corpus pass — assign every vector to its nearest
+  // init centroid — is the expensive index BUILD; at 100 TB it is a
+  // periodic job, not something every probe re-runs. The cells are
   // published bucketed by cid so a probe's literal `cid IN (nprobe
   // cells)` prunes to nprobe of the storage buckets (the
   // ann_lsh_topk_persisted convention, IVF-shaped: Milvus/FAISS-on-disk
-  // serve exactly this layout). Same lifecycle machinery as the other
-  // families: content-keyed resolution (serve-time fingerprint
-  // re-check), atomic versioned publish, vanished-dir re-resolve.
+  // serve exactly this layout).
 
   private[graft] val IvfK = 8
   private[graft] val IvfCellBuckets = 8
+  private[graft] val IvfCells = graft.tools.Artifact.Bucketed("cells", "cid", IvfCellBuckets,
+    "vec_id BIGINT, cid BIGINT, v ARRAY<DOUBLE>, ak STRING")
 
   /** Version token of the IVF family — folds every build input (k, the
     * bucket geometry, and the init convention version). */
   private[graft] def ivfToken: String = s"ivf1k${IvfK}c$IvfCellBuckets"
 
-  /** Spec probe: corpus assignment-builds this process ran (serve = 0). */
-  private[graft] val ivfCellBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val ivfPersistMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The IVF family; `builds` counts corpus assignment passes. */
+  private[graft] val ivfPersist = new graft.tools.Artifact.Family(ivfToken)
 
-  /** The published version serving this corpus's IVF cells — resolved by
-    * fingerprint among existing versions, else built (ONE corpus
-    * assignment pass) and published as the family's next version. */
-  private[graft] def ivfPersistedIndex(s: SparkSession, d: String): String = {
-    val ds = graft.tools.Artifact.dsKey(d)
-    val cached = ivfPersistMemo.get(ds)
-    if (cached != null && !graft.tools.Artifact.exists(cached))
-      ivfPersistMemo.remove(ds, cached)
-    ivfPersistMemo.computeIfAbsent(ds, _ => {
-      val (fp, n) = corpusFpN(s, d) // 1-row boundary, serve-time fp check
-      graft.tools.Artifact.resolve(ivfToken, ds)(gsMetaMatches(s, _, fp, n))
-        .getOrElse {
-          ivfCellBuilds.incrementAndGet()
-          val out = graft.tools.Artifact.publish(ivfToken, ds) { stage =>
-            val ak = graft.tools.Artifact.newAk(ds)
-            val e = embeddings(s, d)
-            val cents = initCentroids(e, IvfK)
-            val tmpName =
-              s"graft_pub_${ProcessHandle.current().pid()}_${System.nanoTime().toHexString}"
-            assign(e, cents).select(col("vec_id"), col("cid"), col("v"))
-              .withColumn("ak", lit(ak))
-              .write.format("parquet")
-              .bucketBy(IvfCellBuckets, "cid").sortBy("cid")
-              .option("path", s"$stage/cells").saveAsTable(tmpName)
-            s.sql(s"DROP TABLE IF EXISTS $tmpName") // external: files remain
-            cents.withColumn("ak", lit(ak))
-              .coalesce(1).write.mode("overwrite").parquet(s"$stage/cents")
-            val spark = s; import spark.implicits._
-            Seq((ak, ds, n, fp)).toDF("ak", "ds", "n", "fp")
-              .coalesce(1).write.mode("overwrite").parquet(s"$stage/meta")
-          }
-          gsRefreshPublished(s, out)
-          out
-        }
-    })
-  }
-
-  /** The published cells as a BUCKETED catalog table over the version
-    * dir (the gsAdjTable convention). */
-  private[graft] def ivfCellsTable(s: SparkSession, dir: String): DataFrame = {
-    val name = "graft_" + java.nio.file.Paths.get(dir).getFileName.toString
-    // pruning IS the utilization — see gsAdjTable on why auto-bucketed
-    // scan stays off
-    s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    s.sql(s"CREATE TABLE IF NOT EXISTS $name " +
-      s"(vec_id BIGINT, cid BIGINT, v ARRAY<DOUBLE>, ak STRING) " +
-      s"USING PARQUET CLUSTERED BY (cid) SORTED BY (cid) INTO $IvfCellBuckets BUCKETS " +
-      s"LOCATION '$dir/cells'")
-    s.table(name)
-  }
+  /** The published version serving this corpus's IVF cells, built (ONE
+    * corpus assignment pass) on a miss. */
+  private[graft] def ivfPersistedIndex(s: SparkSession, d: String): String =
+    ivfPersist(s, d)(corpusKey(s, d)) { (stage, ak) =>
+      val e = embeddings(s, d)
+      val cents = initCentroids(e, IvfK)
+      IvfCells.write(assign(e, cents).select(col("vec_id"), col("cid"), col("v"))
+        .withColumn("ak", lit(ak)), stage)
+      cents.withColumn("ak", lit(ak))
+        .coalesce(1).write.mode("overwrite").parquet(s"$stage/cents")
+    }
 
   val queries: Seq[Q] = Seq(
     // Q7: deterministic centroid init (hash-ordered k-sample). The
@@ -547,7 +505,7 @@ object KMeans {
       "ann_ivf_topk_persisted",
       (s, d) => {
         val dir = ivfPersistedIndex(s, d)
-        val cellsT = ivfCellsTable(s, dir)
+        val cellsT = IvfCells.table(s, dir)
         val cents = s.read.parquet(s"$dir/cents").select("cid", "cv")
         // the query vector: one corpus point lookup (probe-local state)
         val qv = embeddings(s, d).filter(col("vec_id") === 0L)

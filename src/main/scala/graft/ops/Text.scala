@@ -287,30 +287,28 @@ object Text {
     }
 
   // ── persisted pair spine: build once, serve many (the ANN-index
-  // convention generalized — VERDICT-r15 named the pattern, not just
-  // the ANN instance: "every other shared artifact lives in a
-  // SessionMemo"). The ≥0.5-Jaccard pair set AND the corpus sketch
-  // (doc_id, sig, sh — the band/verify table ingest-time dedup probes)
-  // are published as an immutable VERSION dir via graft.tools.Artifact:
-  // the token folds every sketch/band parameter (ADVICE r16 — a perm or
-  // threshold change must miss, never serve stale pairs), the corpus
-  // fingerprint is RE-CHECKED on every first-serve-per-process (a
-  // regenerated corpus misses and republishes instead of silently
-  // serving stale pairs), and the oracle reads the same artifact keyed
-  // by the fingerprint it recomputes (sum((doc_id+1)·n_chars) — exact
-  // BIGINT on both engines) with the publish-unique `ak` selecting one
-  // version's rows.
-  private[graft] def dupIdxToken: String = {
-    val sig = (((0 until 8).flatMap(j => Seq(permA(j), permB(j))) :+ P32)
-      .mkString(",").hashCode.toLong & 0xffffffffL).toHexString
-    s"dup2j50s$sig"
-  }
-  private val dupPersistMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // convention generalized). The ≥0.5-Jaccard pair set AND the corpus
+  // sketch (doc_id, sig, sh — the band/verify table ingest-time dedup
+  // probes) are published as a graft.tools.Artifact family: the token
+  // folds every sketch/band parameter (a perm or threshold change must
+  // miss, never serve stale pairs), and the oracle reads the same
+  // artifact keyed by the fingerprint it recomputes
+  // (sum((doc_id+1)·n_chars) — exact BIGINT on both engines) with the
+  // publish-unique `ak` selecting one version's rows.
+  private def dupSig: String =
+    graft.tools.Artifact.sig((0 until 8).flatMap(j => Seq(permA(j), permB(j))) :+ P32)
+  private[graft] def dupIdxToken: String = s"dup2j50s$dupSig"
+
+  /** The pair-spine family; `builds` counts spines published. */
+  private[graft] val dupPersist = new graft.tools.Artifact.Family(dupIdxToken)
 
   private[graft] def docsFingerprint(s: SparkSession, d: String): Long =
     documents(s, d).agg(
       sum((col("doc_id") + lit(1L)) * col("n_chars"))).head().getLong(0)
+
+  /** The text families' content key: the docs fingerprint. */
+  private def docsKey(s: SparkSession, d: String): graft.tools.Artifact.Key =
+    Seq("fp" -> docsFingerprint(s, d))
 
   private[graft] def sqlDocsFingerprint: String =
     "CAST(sum((doc_id + 1) * n_chars) AS BIGINT)"
@@ -351,37 +349,15 @@ object Text {
       .drop("blk", "brk", "bcum", "roff", "boff")
   }
 
-  private def dupMetaMatches(s: SparkSession, dir: String, fp: Long): Boolean =
-    try s.read.parquet(s"$dir/meta").select("fp").head().getLong(0) == fp
-    catch { case _: Throwable => false }
+  private[graft] def dupPersistedPairs(s: SparkSession, d: String): String =
+    dupPersist(s, d)(docsKey(s, d)) { (stage, ak) =>
+      dupEdges(s, d).withColumn("ak", lit(ak))
+        .write.mode("overwrite").parquet(s"$stage/pairs")
+      cachedSketch(s, d)
+        .write.mode("overwrite").parquet(s"$stage/sketch")
+    }
 
-  private[graft] def dupPersistedPairs(s: SparkSession, d: String): String = {
-    val ds = graft.tools.Artifact.dsKey(d)
-    val cached = dupPersistMemo.get(ds)
-    if (cached != null && !graft.tools.Artifact.exists(cached))
-      dupPersistMemo.remove(ds, cached)
-    dupPersistMemo.computeIfAbsent(ds, _ => {
-      val fp = docsFingerprint(s, d) // 1-row boundary: serve-time fp check
-      graft.tools.Artifact.resolve(dupIdxToken, ds)(dupMetaMatches(s, _, fp))
-        .getOrElse {
-          val out = graft.tools.Artifact.publish(dupIdxToken, ds) { stage =>
-            val ak = graft.tools.Artifact.newAk(ds)
-            dupEdges(s, d).withColumn("ak", lit(ak))
-              .write.mode("overwrite").parquet(s"$stage/pairs")
-            cachedSketch(s, d)
-              .write.mode("overwrite").parquet(s"$stage/sketch")
-            val spark = s; import spark.implicits._
-            Seq((ak, ds, fp)).toDF("ak", "ds", "fp")
-              .coalesce(1).write.mode("overwrite").parquet(s"$stage/meta")
-          }
-          // a re-used version slot must not serve a stale file listing
-          s.catalog.refreshByPath(out)
-          out
-        }
-    })
-  }
-
-  // ── dedup ingest re-publish: version N → N+1 (r17) ──────────────────
+  // ── dedup ingest re-publish: version N → N+1 ────────────────────────
   // The ingestion half of the dedup lifecycle, mirroring the ANN
   // family's insert publish: a batch of incoming docs (doc_id % 10 = 7,
   // the dedup_incremental convention) is sketched FRESH (batch-sized
@@ -397,72 +373,47 @@ object Text {
   // version from shadowing the full-corpus spine (both are keyed by the
   // same docs fingerprint).
 
-  private[graft] def dupIncToken: String = {
-    val sig = (((0 until 8).flatMap(j => Seq(permA(j), permB(j))) :+ P32)
-      .mkString(",").hashCode.toLong & 0xffffffffL).toHexString
-    s"dupinc2j50s$sig"
-  }
+  private[graft] def dupIncToken: String = s"dupinc2j50s$dupSig"
 
-  /** Spec probe: post-ingest publishes this process ran (serve = 0). */
-  private[graft] val dupIncPublishes = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val dupIncPersistMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The post-ingest family; `builds` counts post-ingest publishes. */
+  private[graft] val dupIncPersist = new graft.tools.Artifact.Family(dupIncToken)
 
-  /** The published version serving the POST-INGEST dedup state —
-    * resolved by the docs fingerprint among the ingest family's
-    * versions, else derived from the published pre-ingest state plus
-    * batch-local work and published as the family's next version. */
-  private[graft] def dupIngestPublished(s: SparkSession, d: String): String = {
-    val ds = graft.tools.Artifact.dsKey(d)
-    val cached = dupIncPersistMemo.get(ds)
-    if (cached != null && !graft.tools.Artifact.exists(cached))
-      dupIncPersistMemo.remove(ds, cached)
-    dupIncPersistMemo.computeIfAbsent(ds, _ => {
-      val fp = docsFingerprint(s, d) // 1-row boundary: serve-time fp check
-      graft.tools.Artifact.resolve(dupIncToken, ds)(dupMetaMatches(s, _, fp))
-        .getOrElse {
-          dupIncPublishes.incrementAndGet()
-          val base = dupPersistedPairs(s, d) // version N: pre-ingest state
-          val isNewId = (c: Column) => c % 10 === 7
-          // pre-ingest spine/sketch: the published artifact restricted
-          // to existing ids (pairwise Jaccard — batch presence never
-          // changed an existing-existing pair)
-          val pairsE = s.read.parquet(s"$base/pairs")
-            .filter(!isNewId(col("id_a")) && !isNewId(col("id_b")))
-            .select("id_a", "id_b")
-          val sketchE = s.read.parquet(s"$base/sketch")
-            .filter(!isNewId(col("doc_id")))
-            .select("doc_id", "sig", "sh")
-          // the incoming batch, sketched fresh: batch-sized work only
-          val batchSketch = sketchOf(
-            documents(s, d).filter(isNewId(col("doc_id"))))
-          val nb = bandsOf(batchSketch, carry = Seq("sh"))
-            .toDF("new_id", "nsh", "band", "h1", "h2", "h3", "h4")
-          val cb = bandsOf(sketchE, carry = Seq("sh"))
-            .toDF("old_id", "osh", "band", "h1", "h2", "h3", "h4")
-          val edges = nb.join(cb, Seq("band", "h1", "h2", "h3", "h4"))
-            .select(col("new_id"), col("old_id"),
-              (size(array_intersect(col("nsh"), col("osh"))).cast("double") /
-                size(array_union(col("nsh"), col("osh")))).as("jaccard"))
-            .filter(col("jaccard") >= 0.5)
-            .groupBy("new_id")
-            .agg(max(struct(col("jaccard"), (-col("old_id")).as("negid"))).as("b"))
-            .select((-col("b.negid")).as("id_a"), col("new_id").as("id_b"))
-          val out = graft.tools.Artifact.publish(dupIncToken, ds) { stage =>
-            val ak = graft.tools.Artifact.newAk(ds)
-            pairsE.union(edges).withColumn("ak", lit(ak))
-              .write.mode("overwrite").parquet(s"$stage/pairs")
-            sketchE.unionByName(batchSketch)
-              .write.mode("overwrite").parquet(s"$stage/sketch")
-            val spark = s; import spark.implicits._
-            Seq((ak, ds, fp)).toDF("ak", "ds", "fp")
-              .coalesce(1).write.mode("overwrite").parquet(s"$stage/meta")
-          }
-          s.catalog.refreshByPath(out)
-          out
-        }
-    })
-  }
+  /** The published version serving the POST-INGEST dedup state, derived
+    * on a miss from the published pre-ingest state plus batch-local
+    * work. */
+  private[graft] def dupIngestPublished(s: SparkSession, d: String): String =
+    dupIncPersist(s, d)(docsKey(s, d)) { (stage, ak) =>
+      val base = dupPersistedPairs(s, d) // version N: pre-ingest state
+      val isNewId = (c: Column) => c % 10 === 7
+      // pre-ingest spine/sketch: the published artifact restricted
+      // to existing ids (pairwise Jaccard — batch presence never
+      // changed an existing-existing pair)
+      val pairsE = s.read.parquet(s"$base/pairs")
+        .filter(!isNewId(col("id_a")) && !isNewId(col("id_b")))
+        .select("id_a", "id_b")
+      val sketchE = s.read.parquet(s"$base/sketch")
+        .filter(!isNewId(col("doc_id")))
+        .select("doc_id", "sig", "sh")
+      // the incoming batch, sketched fresh: batch-sized work only
+      val batchSketch = sketchOf(
+        documents(s, d).filter(isNewId(col("doc_id"))))
+      val nb = bandsOf(batchSketch, carry = Seq("sh"))
+        .toDF("new_id", "nsh", "band", "h1", "h2", "h3", "h4")
+      val cb = bandsOf(sketchE, carry = Seq("sh"))
+        .toDF("old_id", "osh", "band", "h1", "h2", "h3", "h4")
+      val edges = nb.join(cb, Seq("band", "h1", "h2", "h3", "h4"))
+        .select(col("new_id"), col("old_id"),
+          (size(array_intersect(col("nsh"), col("osh"))).cast("double") /
+            size(array_union(col("nsh"), col("osh")))).as("jaccard"))
+        .filter(col("jaccard") >= 0.5)
+        .groupBy("new_id")
+        .agg(max(struct(col("jaccard"), (-col("old_id")).as("negid"))).as("b"))
+        .select((-col("b.negid")).as("id_a"), col("new_id").as("id_b"))
+      pairsE.union(edges).withColumn("ak", lit(ak))
+        .write.mode("overwrite").parquet(s"$stage/pairs")
+      sketchE.unionByName(batchSketch)
+        .write.mode("overwrite").parquet(s"$stage/sketch")
+    }
 
   // Per-doc triangle counts over the dup graph — ONE wedge join per
   // (session, dir), shared by `dedup_triangles` (which emits it) and
@@ -550,43 +501,22 @@ object Text {
     * (the merge-round count and the whitespace-token staging v1). */
   private[graft] def bpeToken: String = s"tokbpe${BpeMerges}v1"
 
-  /** Spec probe: training loops this process actually ran (serve = 0). */
-  private[graft] val bpeTrains = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val bpePersistMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The tokenizer family; `builds` counts training loops run. */
+  private[graft] val bpePersist = new graft.tools.Artifact.Family(bpeToken)
 
-  /** The published version serving this corpus's trained tokenizer —
-    * resolved by docs fingerprint among existing versions, else trained
-    * (the k-round loop) and published as the family's next version:
-    * `words` (word, w, cnt — each distinct word's final segmentation),
-    * `merges` (r, a, b, f — the ordered merge list), 1-row `meta`. */
-  private[graft] def bpePersistedTokenizer(s: SparkSession, d: String): String = {
-    val ds = graft.tools.Artifact.dsKey(d)
-    val cached = bpePersistMemo.get(ds)
-    if (cached != null && !graft.tools.Artifact.exists(cached))
-      bpePersistMemo.remove(ds, cached)
-    bpePersistMemo.computeIfAbsent(ds, _ => {
-      val fp = docsFingerprint(s, d) // 1-row boundary: serve-time fp check
-      graft.tools.Artifact.resolve(bpeToken, ds)(dupMetaMatches(s, _, fp))
-        .getOrElse {
-          bpeTrains.incrementAndGet()
-          val (words, merges) = bpeTrainRaw(s, d)
-          val out = graft.tools.Artifact.publish(bpeToken, ds) { stage =>
-            val ak = graft.tools.Artifact.newAk(ds)
-            words.withColumn("ak", lit(ak))
-              .write.mode("overwrite").parquet(s"$stage/words")
-            val spark = s; import spark.implicits._
-            merges.toDF("r", "a", "b", "f").withColumn("ak", lit(ak))
-              .coalesce(1).write.mode("overwrite").parquet(s"$stage/merges")
-            Seq((ak, ds, fp)).toDF("ak", "ds", "fp")
-              .coalesce(1).write.mode("overwrite").parquet(s"$stage/meta")
-          }
-          // a re-used version slot must not serve a stale file listing
-          s.catalog.refreshByPath(out)
-          out
-        }
-    })
-  }
+  /** The published version serving this corpus's trained tokenizer,
+    * trained (the k-round loop) on a miss: `words` (word, w, cnt — each
+    * distinct word's final segmentation), `merges` (r, a, b, f — the
+    * ordered merge list), 1-row `meta`. */
+  private[graft] def bpePersistedTokenizer(s: SparkSession, d: String): String =
+    bpePersist(s, d)(docsKey(s, d)) { (stage, ak) =>
+      val (words, merges) = bpeTrainRaw(s, d)
+      words.withColumn("ak", lit(ak))
+        .write.mode("overwrite").parquet(s"$stage/words")
+      val spark = s; import spark.implicits._
+      merges.toDF("r", "a", "b", "f").withColumn("ak", lit(ak))
+        .coalesce(1).write.mode("overwrite").parquet(s"$stage/merges")
+    }
 
   /** Serve the trained tokenizer from the published artifact: the
     * per-session memo caches the LOADED artifact (vocab-sized), never a
@@ -786,45 +716,22 @@ object Text {
   private[graft] def uniToken: String =
     s"tokuni${(Seq(UnigramSeedMulti, UnigramMaxPiece) ++ UnigramKeeps).mkString("x")}v1"
 
-  /** Spec probe: hard-EM training runs this process paid (serve = 0). */
-  private[graft] val uniTrains = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val uniPersistMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The unigram-tokenizer family; `builds` counts hard-EM runs. */
+  private[graft] val uniPersist = new graft.tools.Artifact.Family(uniToken)
 
-  /** The published version serving this corpus's trained unigram model —
-    * resolved by docs fingerprint among existing versions, else trained
-    * (the hard-EM loop) and published as the family's next version:
-    * `vocab` (piece, cnt, cost), `seg` (word, cnt, dpcost, seg — the
-    * final-cost Viterbi segmentations the encoder broadcasts), 1-row
-    * `meta`. The bpe family's twin — production ships BOTH tokenizer
-    * files. */
-  private[graft] def uniPersistedTokenizer(s: SparkSession, d: String): String = {
-    val ds = graft.tools.Artifact.dsKey(d)
-    val cached = uniPersistMemo.get(ds)
-    if (cached != null && !graft.tools.Artifact.exists(cached))
-      uniPersistMemo.remove(ds, cached)
-    uniPersistMemo.computeIfAbsent(ds, _ => {
-      val fp = docsFingerprint(s, d) // 1-row boundary: serve-time fp check
-      graft.tools.Artifact.resolve(uniToken, ds)(dupMetaMatches(s, _, fp))
-        .getOrElse {
-          uniTrains.incrementAndGet()
-          val (vocab, seg) = unigramTrainRaw(s, d)
-          val out = graft.tools.Artifact.publish(uniToken, ds) { stage =>
-            val ak = graft.tools.Artifact.newAk(ds)
-            vocab.withColumn("ak", lit(ak))
-              .coalesce(1).write.mode("overwrite").parquet(s"$stage/vocab")
-            seg.withColumn("ak", lit(ak))
-              .write.mode("overwrite").parquet(s"$stage/seg")
-            val spark = s; import spark.implicits._
-            Seq((ak, ds, fp)).toDF("ak", "ds", "fp")
-              .coalesce(1).write.mode("overwrite").parquet(s"$stage/meta")
-          }
-          // a re-used version slot must not serve a stale file listing
-          s.catalog.refreshByPath(out)
-          out
-        }
-    })
-  }
+  /** The published version serving this corpus's trained unigram model,
+    * trained (the hard-EM loop) on a miss: `vocab` (piece, cnt, cost),
+    * `seg` (word, cnt, dpcost, seg — the final-cost Viterbi
+    * segmentations the encoder broadcasts), 1-row `meta`. The bpe
+    * family's twin — production ships BOTH tokenizer files. */
+  private[graft] def uniPersistedTokenizer(s: SparkSession, d: String): String =
+    uniPersist(s, d)(docsKey(s, d)) { (stage, ak) =>
+      val (vocab, seg) = unigramTrainRaw(s, d)
+      vocab.withColumn("ak", lit(ak))
+        .coalesce(1).write.mode("overwrite").parquet(s"$stage/vocab")
+      seg.withColumn("ak", lit(ak))
+        .write.mode("overwrite").parquet(s"$stage/seg")
+    }
 
   /** Serve the trained unigram model from the published artifact — the
     * per-session memo caches the LOADED artifact (vocab-sized), never a

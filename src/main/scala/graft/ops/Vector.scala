@@ -99,35 +99,6 @@ object Vector {
     * bounds hub fan-in — and every join is hash-partitioned on id:
     * NEVER a corpus² product (plan-asserted in PlanSpec).
     * @return (src, dst, sim, rk) — caller filters to its keep degree. */
-  /** The incremental path's "existing" corpus state, one build per
-    * (session, dir): the staged (id, v) corpus, its size, and the
-    * degree-2k descent graph over the non-batch 90% — the persisted KNN
-    * table a production system keeps between ingestion batches. Seeds
-    * cover the full id space; targets that fall on batch ids simply
-    * drop in the old-corpus scoring join (deterministic). The graph is
-    * N·2k rows (node-sized), cached explicitly. */
-  private val nnOldGraphMemo = graft.SessionMemo[(DataFrame, Long, DataFrame)]()
-  private def nnExistingGraph(s: SparkSession, d: String): (DataFrame, Long, DataFrame) =
-    nnOldGraphMemo.getOrCompute(s, d) {
-      val isNew = col("id") % 10 === 7
-      val e = embeddings(s, d)
-        .select(col("vec_id").as("id"), vec(col("embedding")).as("v"))
-        .transform(GenSnap.snap)
-      val n = e.count() // 1-value driver boundary (mod-N seed space)
-      val eOld = e.filter(!isNew).transform(GenSnap.snap)
-      var g = strideSeeds(eOld, n).transform(GenSnap.snap)
-      var gOld: DataFrame = null
-      for (r <- 1 to NnOldRounds) {
-        val scored = nnDescentRound(g, eOld, r)
-        if (r < NnOldRounds)
-          g = scored.filter(col("rk") <= NnKb).select("src", "dst")
-            .transform(GenSnap.snap)
-        else gOld = scored.filter(col("rk") <= NnKb)
-          .select("src", "dst", "sim").transform(GenSnap.stage(_))
-      }
-      (e, n, gOld)
-    }
-
   private def nnDescentRound(b: DataFrame, e: DataFrame, r: Int): DataFrame = {
     val rev = b.select(col("dst").as("piv"), col("src").as("nbr"))
       .withColumn("rk", row_number().over(
@@ -156,6 +127,39 @@ object Vector {
       .withColumn("rk", row_number().over(
         Window.partitionBy("src").orderBy(col("sim").desc, col("dst").asc)))
   }
+
+  /** NN-descent over corpus `e` from the stride seeds of an `n`-id
+    * space: `rounds` passes, each but the last cut to the build degree
+    * and snapped.
+    * @return the last round's (src, dst, sim, rk), for the caller's cut. */
+  private def nnDescent(e: DataFrame, n: Long, rounds: Int = NnRounds): DataFrame = {
+    var b = strideSeeds(e, n).transform(GenSnap.snap)
+    for (r <- 1 until rounds)
+      b = nnDescentRound(b, e, r).filter(col("rk") <= NnKb).select("src", "dst")
+        .transform(GenSnap.snap)
+    nnDescentRound(b, e, rounds)
+  }
+
+  /** The incremental path's "existing" corpus state, one build per
+    * (session, dir): the staged (id, v) corpus, its size, and the
+    * degree-2k descent graph over the non-batch 90% — the persisted KNN
+    * table a production system keeps between ingestion batches. Seeds
+    * cover the full id space; targets that fall on batch ids simply
+    * drop in the old-corpus scoring join (deterministic). The graph is
+    * N·2k rows (node-sized), cached explicitly. */
+  private val nnOldGraphMemo = graft.SessionMemo[(DataFrame, Long, DataFrame)]()
+  private def nnExistingGraph(s: SparkSession, d: String): (DataFrame, Long, DataFrame) =
+    nnOldGraphMemo.getOrCompute(s, d) {
+      val isNew = col("id") % 10 === 7
+      val e = embeddings(s, d)
+        .select(col("vec_id").as("id"), vec(col("embedding")).as("v"))
+        .transform(GenSnap.snap)
+      val n = e.count() // 1-value driver boundary (mod-N seed space)
+      val eOld = e.filter(!isNew).transform(GenSnap.snap)
+      val gOld = nnDescent(eOld, n, NnOldRounds).filter(col("rk") <= NnKb)
+        .select("src", "dst", "sim").transform(GenSnap.stage(_))
+      (e, n, gOld)
+    }
 
   /** The oracle twin of [[nnDescentRound]]: one round as chained CTEs
     * reading edge table `prev`, emitting `$out` (the rk ≤ build-degree
@@ -200,24 +204,15 @@ object Vector {
       .select(col("vec_id").as("id"), vec(col("embedding")).as("v"))
       .transform(GenSnap.snap)
     val n = e.count() // 1-value driver boundary (mod-N seed space); materializes the snap
-    var b = strideSeeds(e, n).transform(GenSnap.snap)
-    var adj: DataFrame = null
-    for (r <- 1 to NnRounds) {
-      val scored = nnDescentRound(b, e, r)
-      if (r < NnRounds)
-        b = scored.filter(col("rk") <= NnKb).select("src", "dst")
-          .transform(GenSnap.snap)
-      else adj = scored.filter(col("rk") <= NnKb).select("src", "dst").transform(GenSnap.stage(_))
-    }
+    val adj = nnDescent(e, n).filter(col("rk") <= NnKb).select("src", "dst")
+      .transform(GenSnap.stage(_))
     (e, n, adj)
   }
 
   /** The production ANN search INDEX every serve-path query reads: a
-    * READ-THROUGH CACHE over the PUBLISHED artifact (VERDICT-r16 task
-    * 1 — previously only the single-probe persisted query read storage
-    * while batch/filtered/routed/sweep rebuilt via this memo). The memo
-    * now resolves the fingerprint-matched version dir (building and
-    * publishing one descent only if no process has), reads the bucketed
+    * READ-THROUGH CACHE over the PUBLISHED artifact. The memo resolves
+    * the fingerprint-matched version dir (building and publishing one
+    * descent only if no process has), reads the bucketed
     * adjacency + 1-row meta back from parquet, and caches the frames
     * for the session — so adj's lineage is a FileScan of the artifact,
     * a fresh session pays ZERO descents for the whole family, and every
@@ -232,7 +227,7 @@ object Vector {
         .transform(GenSnap.stage(_))
       // HOT: every beam hop of every serve query scans the adjacency
       // (~10 hops × 8 queries per pass) — columnar int columns
-      val adj = gsAdjTable(s, base).select("src", "dst")
+      val adj = GsAdj.table(s, base).select("src", "dst")
         .transform(GenSnap.stage(_, hot = true))
       (e, n, adj)
     }
@@ -358,42 +353,30 @@ object Vector {
   }
 
   // ── persisted index: build once, serve from storage ─────────────────
-  // VERDICT-r15 task 1, generalized in r16/r17 — the descent build is a
-  // write-once JOB (bucketed adjacency + 1-row meta as real parquet
-  // tables), published as an immutable VERSION dir via graft.tools.
-  // Artifact, and EVERY graph-search query serves by reading the
-  // artifact: nnSearchIndex below is a read-through cache over the
-  // published version, so a fresh session pays zero descents for the
-  // whole family (single/batch/filtered/routed/sweep/repair/recall
-  // tiers). Version selection is by CONTENT — each serve re-matches a
-  // freshly computed corpus fingerprint against candidate meta rows,
-  // newest version first — so a dataset regenerated in place misses and
-  // republishes instead of silently serving a stale adjacency (ADVICE
-  // r16), and a churn re-publish (delete-repair below) coexists as
-  // version N+1 without touching N.
+  // The descent build is a write-once JOB (bucketed adjacency + 1-row
+  // meta), published as a graft.tools.Artifact family, and EVERY
+  // graph-search query serves by reading the artifact: nnSearchIndex
+  // above is a read-through cache over the published version, so a
+  // fresh session pays zero descents for the whole family
+  // (single/batch/filtered/routed/sweep/repair/recall tiers), and a
+  // churn re-publish (delete-repair below) coexists as version N+1
+  // without touching N.
 
   /** Version token naming the persisted-index layout — derived from
     * EVERY build parameter (descent rounds, build degree, and the seed
-    * strides — ADVICE r16: a strides change must miss, not reuse the
-    * old dir), so a parameter change can never serve a stale artifact. */
-  private[graft] def gsIdxToken: String = {
-    val sig = (NnStrides.mkString(",").hashCode.toLong & 0xffffffffL).toHexString
-    s"ann2r${NnRounds}k${NnKb}s$sig"
-  }
+    * strides), so a parameter change can never serve a stale artifact. */
+  private[graft] def gsIdxToken: String =
+    s"ann2r${NnRounds}k${NnKb}s${graft.tools.Artifact.sig(NnStrides)}"
 
-  /** Bucket count for the published adjacency: hop lookups filter
-    * `src IN (frontier)` so a bucketed table prunes to the frontier's
-    * buckets instead of scanning the artifact per hop (the ann_lsh_topk
-    * SelectedBucketsCount convention; at 100 TB this is thousands of
-    * buckets and a hop reads only the beam's few). */
-  private val GsAdjBuckets = 8
+  /** The published adjacency, bucketed by `src`: hop lookups filter
+    * `src IN (frontier)`, so a hop reads the frontier's buckets instead
+    * of the artifact (at 100 TB, thousands of buckets and a hop reads
+    * the beam's few). */
+  private[graft] val GsAdj = graft.tools.Artifact.Bucketed("adj", "src", 8,
+    "src BIGINT, dst BIGINT, ak STRING")
 
-  /** Spec probe: how many times this process actually BUILT (descended
-    * and wrote) a persisted index — the serve-without-rebuild pin. */
-  private[graft] val gsPersistBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private val gsPersistMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The base index family; `builds` counts descents written. */
+  private[graft] val gsPersist = new graft.tools.Artifact.Family(gsIdxToken)
 
   /** Deterministic order-independent corpus fingerprint: the meta key
     * the ORACLE uses to pick this dataset's rows out of the durable-dir
@@ -407,6 +390,13 @@ object Vector {
   private def sqlFpTerm: String =
     "(vec_id + 1) * CAST(FLOOR(CAST(embedding[1] AS DOUBLE) * 1000000.0) AS BIGINT)"
 
+  /** The vector families' content key: (n, fp) of the full corpus, in
+    * one 1-row driver boundary. */
+  private[graft] def corpusKey(s: SparkSession, d: String): graft.tools.Artifact.Key = {
+    val (fp, n) = corpusFpN(s, d)
+    Seq("n" -> n, "fp" -> fp)
+  }
+
   /** (full-corpus fingerprint, n) in one 1-row driver boundary. */
   private[graft] def corpusFpN(s: SparkSession, d: String): (Long, Long) = {
     val r = embeddings(s, d)
@@ -416,93 +406,20 @@ object Vector {
 
   private[graft] def sqlCorpusFingerprint: String = s"CAST(sum($sqlFpTerm) AS BIGINT)"
 
-  /** One meta-match probe against a candidate version dir: accept iff
-    * its 1-row meta carries exactly this (fp, n) — the serve-time
-    * staleness re-check (ADVICE r16). Unreadable/missing meta → miss. */
-  private[graft] def gsMetaMatches(s: SparkSession, dir: String, fp: Long, n: Long): Boolean =
-    try {
-      val m = s.read.parquet(s"$dir/meta").select("fp", "n").head()
-      m.getLong(0) == fp && m.getLong(1) == n
-    } catch { case _: Throwable => false }
+  /** Writes one index version's bucketed `adj` (src, dst, ak). */
+  private def gsWriteAdj(adj: DataFrame, stage: String, ak: String): Unit =
+    GsAdj.write(adj.select(col("src"), col("dst"), lit(ak).as("ak")), stage)
 
-  /** Write one index version into a scratch dir: bucketed `adj`
-    * (src, dst, ak) + 1-row `meta` (ak, ds, n, fp). The bucketed write
-    * goes through a transient catalog table (bucketBy requires
-    * saveAsTable); the external files stay when the name is dropped. */
-  private def gsWriteIndex(s: SparkSession, stage: String, ds: String,
-      adj: DataFrame, n: Long, fp: Long): Unit = {
-    val ak = graft.tools.Artifact.newAk(ds)
-    val tmpName = s"graft_pub_${ProcessHandle.current().pid()}_${System.nanoTime().toHexString}"
-    adj.select(col("src"), col("dst"), lit(ak).as("ak"))
-      .write.format("parquet")
-      .bucketBy(GsAdjBuckets, "src").sortBy("src")
-      .option("path", s"$stage/adj").saveAsTable(tmpName)
-    s.sql(s"DROP TABLE IF EXISTS $tmpName") // external: the files remain
-    val spark = s; import spark.implicits._
-    Seq((ak, ds, n, fp)).toDF("ak", "ds", "n", "fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$stage/meta")
-  }
-
-  /** Post-publish cache hygiene for a RE-USED version slot (the
-    * vanished-artifact re-resolve path): refreshByPath drops the cache
-    * manager's data + FileStatusCache entries under the dir, and — the
-    * part refreshByPath does NOT reach — an already-registered catalog
-    * table for the slot has its relation/file-index cache invalidated
-    * explicitly, or the next serve would list the OLD build's files. */
-  private[graft] def gsRefreshPublished(s: SparkSession, dir: String): Unit = {
-    s.catalog.refreshByPath(dir)
-    val name = "graft_" + java.nio.file.Paths.get(dir).getFileName.toString
-    if (s.catalog.tableExists(name)) s.catalog.refreshTable(name)
-  }
-
-  /** The published adjacency as a BUCKETED catalog table over the
-    * version dir — bucket metadata lives in the catalog, so each
-    * process re-declares the external table once per artifact (the
-    * files carry bucket ids in their names from the bucketed write). */
-  private[graft] def gsAdjTable(s: SparkSession, dir: String): DataFrame = {
-    val name = "graft_" + java.nio.file.Paths.get(dir).getFileName.toString
-    // DisableUnnecessaryBucketedScan considers only join/agg
-    // interestingness, not PRUNING — left on, the hop lookups' literal
-    // src IN (frontier) filters would read every bucket (the ann_lsh_topk
-    // lesson, VectorSpec "LSH cells stored bucketed")
-    s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    s.sql(s"CREATE TABLE IF NOT EXISTS $name (src BIGINT, dst BIGINT, ak STRING) " +
-      s"USING PARQUET CLUSTERED BY (src) SORTED BY (src) INTO $GsAdjBuckets BUCKETS " +
-      s"LOCATION '$dir/adj'")
-    // NO per-call REFRESH: it would invalidate the family's shared
-    // cached adjacency on every serve. Stale listings can only arise
-    // when a version slot is re-used in-process (the vanished-artifact
-    // re-resolve), and the publish paths refreshByPath for exactly that.
-    s.table(name)
-  }
-
-  /** The published artifact dir serving this dataset's CURRENT corpus —
-    * resolved by fingerprint among existing versions, else built (one
-    * descent) and published as the next version. The per-process memo is
-    * a cache over resolution; a memoized dir that vanished (age prune,
-    * manual rm) is re-resolved instead of failing the serve (ADVICE
-    * r16). */
-  private[graft] def gsPersistedIndex(s: SparkSession, d: String): String = {
-    val ds = graft.tools.Artifact.dsKey(d)
-    val cached = gsPersistMemo.get(ds)
-    if (cached != null && !graft.tools.Artifact.exists(cached))
-      gsPersistMemo.remove(ds, cached)
-    gsPersistMemo.computeIfAbsent(ds, _ => {
-      val (fp, n) = corpusFpN(s, d) // 1-row boundary: serve-time fp re-check
-      graft.tools.Artifact.resolve(gsIdxToken, ds)(gsMetaMatches(s, _, fp, n))
-        .getOrElse {
-          gsPersistBuilds.incrementAndGet()
-          val (eB, _, adjB) = nnIndexBuild(s, d)
-          val out = graft.tools.Artifact.publish(gsIdxToken, ds)(
-            gsWriteIndex(s, _, ds, adjB, n, fp))
-          // the build's caches are scaffolding once the artifact exists —
-          // serving reads the parquet back (nnSearchIndex), not these
-          adjB.unpersist(); eB.unpersist()
-          gsRefreshPublished(s, out)
-          out
-        }
-    })
-  }
+  /** The published artifact dir serving this dataset's CURRENT corpus,
+    * built (one descent) on a miss. */
+  private[graft] def gsPersistedIndex(s: SparkSession, d: String): String =
+    gsPersist(s, d)(corpusKey(s, d)) { (stage, ak) =>
+      val (eB, _, adjB) = nnIndexBuild(s, d)
+      gsWriteAdj(adjB, stage, ak)
+      // the build's caches are scaffolding once the artifact exists —
+      // serving reads the parquet back (nnSearchIndex), not these
+      adjB.unpersist(); eB.unpersist()
+    }
 
   // ── index maintenance under churn: deletions (VERDICT-r15 task 7) ──
   /** Deterministic ~5% tombstone slice; the query vector (id 0) is
@@ -570,15 +487,7 @@ object Vector {
     val (e, n, _) = nnSearchIndex(s, d)
     val eS = e.join(e.select("id").filter(gsTombPred(col("id"))), Seq("id"), "left_anti")
       .transform(GenSnap.stage(_))
-    var b = strideSeeds(eS, n).transform(GenSnap.snap)
-    var adj: DataFrame = null
-    for (r <- 1 to NnRounds) {
-      val scored = nnDescentRound(b, eS, r)
-      if (r < NnRounds)
-        b = scored.filter(col("rk") <= NnKb).select("src", "dst")
-          .transform(GenSnap.snap)
-      else adj = scored.filter(col("rk") <= NnKb).select("src", "dst")
-    }
+    val adj = nnDescent(eS, n).filter(col("rk") <= NnKb).select("src", "dst")
     val query = gsQuery(eS)
     val (beam, _) = gsBeam(eS, adj, query, gsEntries(eS, n), GsBeam,
       "graph_beam_search_rebuilt", quiet = true)
@@ -590,20 +499,18 @@ object Vector {
       .join(truth, "id").count()
   }
 
-  // ── churn re-publish: version N → N+1 (VERDICT-r16 task 2) ──────────
+  // ── churn re-publish: version N → N+1 ───────────────────────────────
   // Production consolidation does not discard its work: after a delete
-  // batch, the REPAIRED adjacency is published as the next artifact
-  // version (same atomic machinery as the base build) and serving picks
-  // it up by content — the survivor corpus's fingerprint matches only
-  // the repaired version, so full-corpus queries keep serving version N
-  // untouched while post-churn queries serve N+1, and a fresh session
-  // serves the repaired index with zero descents AND zero repairs.
+  // batch, the REPAIRED adjacency is published as the next version
+  // under the base index's token and serving picks it up by content —
+  // the survivor corpus's fingerprint matches only the repaired
+  // version, so full-corpus queries keep serving version N untouched
+  // while post-churn queries serve N+1, and a fresh session serves the
+  // repaired index with zero descents AND zero repairs.
 
-  /** Spec probe: how many times this process actually ran the repair and
-    * published a new version. */
-  private[graft] val gsRepairPublishes = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val gsRepairPubMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The repaired index, under the base token but its own content key;
+    * `builds` counts repairs published. */
+  private[graft] val gsRepairPub = new graft.tools.Artifact.Family(gsIdxToken)
 
   /** (survivor-corpus fingerprint, full-corpus n) — the repaired
     * version's meta key: fp over SURVIVORS only (the corpus state this
@@ -618,29 +525,15 @@ object Vector {
   private[graft] def sqlSurvivorFingerprint: String =
     s"CAST(sum(CASE WHEN NOT (${sqlGsTombPred("vec_id")}) THEN $sqlFpTerm END) AS BIGINT)"
 
-  /** The published version serving the POST-DELETE corpus — resolved by
-    * survivor fingerprint among existing versions, else repaired from
-    * the served base index and published as version N+1. */
-  private[graft] def gsRepairPublished(s: SparkSession, d: String): String = {
-    val ds = graft.tools.Artifact.dsKey(d)
-    val cached = gsRepairPubMemo.get(ds)
-    if (cached != null && !graft.tools.Artifact.exists(cached))
-      gsRepairPubMemo.remove(ds, cached)
-    gsRepairPubMemo.computeIfAbsent(ds, _ => {
-      val (fp, n) = survivorFpN(s, d) // 1-row boundary, serve-time fp check
-      graft.tools.Artifact.resolve(gsIdxToken, ds)(gsMetaMatches(s, _, fp, n))
-        .getOrElse {
-          gsRepairPublishes.incrementAndGet()
-          val (_, nFull, adj2) = gsRepairedIndex(s, d)
-          val out = graft.tools.Artifact.publish(gsIdxToken, ds)(
-            gsWriteIndex(s, _, ds, adj2, nFull, fp))
-          gsRefreshPublished(s, out)
-          out
-        }
-    })
-  }
+  /** The published version serving the POST-DELETE corpus, repaired from
+    * the served base index on a miss. */
+  private[graft] def gsRepairPublished(s: SparkSession, d: String): String =
+    gsRepairPub(s, d) {
+      val (fp, n) = survivorFpN(s, d)
+      Seq("n" -> n, "fp" -> fp)
+    } { (stage, ak) => gsWriteAdj(gsRepairedIndex(s, d)._3, stage, ak) }
 
-  // ── ingestion re-publish: insert batch → version N+1 (r17) ─────────
+  // ── ingestion re-publish: insert batch → version N+1 ───────────────
   // The churn loop's other half: ann_nndescent_incremental proves the
   // batch-local descent math (its oracle replays the old build AND every
   // incremental round), but a production ingestion does not discard the
@@ -658,10 +551,8 @@ object Vector {
     * build input (old-graph rounds, incremental rounds, build + emit
     * degrees, seed strides), so a parameter change misses instead of
     * serving an artifact written under the old parameters. */
-  private[graft] def gsIncToken: String = {
-    val sig = (NnStrides.mkString(",").hashCode.toLong & 0xffffffffL).toHexString
-    s"anninc${NnOldRounds}i${GsIncRounds}k${NnK}b${NnKb}s$sig"
-  }
+  private[graft] def gsIncToken: String =
+    s"anninc${NnOldRounds}i${GsIncRounds}k${NnK}b${NnKb}s${graft.tools.Artifact.sig(NnStrides)}"
 
   /** Spec probe: how many times this process ran the incremental merge
     * (old-graph build + batch rounds) — the serve path must pay zero. */
@@ -729,36 +620,15 @@ object Vector {
         .transform(GenSnap.stage(_))
     }
 
-  /** Spec probe: how many times this process published a post-insert
-    * version. */
-  private[graft] val gsInsertPublishes = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val gsInsertPubMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The post-insert family; `builds` counts merges published. */
+  private[graft] val gsInsertPub = new graft.tools.Artifact.Family(gsIncToken)
 
-  /** The published version serving the POST-INSERT corpus — resolved by
-    * the full-corpus fingerprint among the incremental family's
-    * versions, else merged (old graph + batch rounds) and published as
-    * the family's next version. Same serve-time staleness re-check,
-    * vanished-dir re-resolve, and atomic-rename publish as the base
-    * index. */
-  private[graft] def gsInsertPublished(s: SparkSession, d: String): String = {
-    val ds = graft.tools.Artifact.dsKey(d)
-    val cached = gsInsertPubMemo.get(ds)
-    if (cached != null && !graft.tools.Artifact.exists(cached))
-      gsInsertPubMemo.remove(ds, cached)
-    gsInsertPubMemo.computeIfAbsent(ds, _ => {
-      val (fp, n) = corpusFpN(s, d) // 1-row boundary, serve-time fp check
-      graft.tools.Artifact.resolve(gsIncToken, ds)(gsMetaMatches(s, _, fp, n))
-        .getOrElse {
-          gsInsertPublishes.incrementAndGet()
-          val adj = gsIncMergedGraph(s, d).select("src", "dst")
-          val out = graft.tools.Artifact.publish(gsIncToken, ds)(
-            gsWriteIndex(s, _, ds, adj, n, fp))
-          gsRefreshPublished(s, out)
-          out
-        }
-    })
-  }
+  /** The published version serving the POST-INSERT corpus, merged (old
+    * graph + batch rounds) on a miss. */
+  private[graft] def gsInsertPublished(s: SparkSession, d: String): String =
+    gsInsertPub(s, d)(corpusKey(s, d)) { (stage, ak) =>
+      gsWriteAdj(gsIncMergedGraph(s, d), stage, ak)
+    }
 
   /** The oracle-side serve prefix for the POST-INSERT family: identical
     * shape to [[sqlGsPersistedCtes]] but the glob reads the incremental
@@ -792,7 +662,7 @@ object Vector {
     * meta row's publish-unique `ak` selects exactly that version's adj
     * rows. Two fp-matching versions hold identical deterministic
     * content; `ORDER BY ak LIMIT 1` keeps the scalar subquery
-    * single-row either way (ADVICE r16). Shared by every serve-path
+    * single-row either way. Shared by every serve-path
     * oracle in the family (single/batch/filtered/routed/sweep) —
     * artifact-content correctness is anchored transitively by
     * ann_graph_search's full descent-replay oracle, whose Spark side
@@ -926,18 +796,17 @@ object Vector {
   private[graft] def sqlLshTableBucket(vexpr: String, t: Int): String =
     sqlLshBucketOf(vexpr, tablePlanes(t))
 
-  // ── persisted LSH cells: the online-serving index family (r17) ──────
-  // The third artifact family: ann_lsh_topk's (table, bucket) cells,
-  // built once per corpus and PUBLISHED bucketed by the combined cell
-  // key — the serve path's `cell IN (probe cells)` filter prunes to ≤ L
-  // of the storage buckets (the VectorSpec "LSH cells stored bucketed"
-  // shape, productized), and the STREAMING serve
-  // (Streams.annTopkVerdicts) reads the same artifact as its
-  // stream-static side. Same lifecycle machinery as the graph families:
-  // content-keyed resolution, serve-time fingerprint re-check, atomic
-  // versioned publish, vanished-dir re-resolve.
+  // ── persisted LSH cells: the online-serving index family ────────────
+  // ann_lsh_topk's (table, bucket) cells, built once per corpus and
+  // PUBLISHED bucketed by the combined cell key — the serve path's
+  // `cell IN (probe cells)` filter prunes to ≤ L of the storage buckets
+  // (the VectorSpec "LSH cells stored bucketed" shape, productized), and
+  // the STREAMING serve (Streams.annTopkVerdicts) reads the same
+  // artifact as its stream-static side.
 
   private[graft] val LshCellBuckets = 32
+  private val LshCells = graft.tools.Artifact.Bucketed("cells", "cell", LshCellBuckets,
+    "vec_id BIGINT, v ARRAY<DOUBLE>, cell INT, ak STRING")
 
   /** Version token of the LSH-cells family — the planes are a pure
     * function of (tables, bits) via [[hyperplane]], so the token folds
@@ -945,10 +814,8 @@ object Vector {
   private[graft] def lshToken: String =
     s"lsht${LshTables}b${LshBits}c$LshCellBuckets"
 
-  /** Spec probe: corpus cell-builds this process ran (serving = zero). */
-  private[graft] val lshCellBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val lshPersistMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The LSH-cells family; `builds` counts corpus cell-builds. */
+  private[graft] val lshPersist = new graft.tools.Artifact.Family(lshToken)
 
   /** (vec_id, v, cell), one row per (vector, table): cell = tbl·256 +
     * bucket — a single column so Spark bucket-prunes the probe's IN
@@ -959,52 +826,12 @@ object Vector {
         explode(array((0 until LshTables).map(t =>
           lit(t * 256) + lshTableBucket(col("v"), t)): _*)).as("cell"))
 
-  /** The published version serving this corpus's LSH cells — resolved
-    * by fingerprint among existing versions, else built (one corpus
-    * pass) and published as the family's next version. */
-  private[graft] def lshPersistedCells(s: SparkSession, d: String): String = {
-    val ds = graft.tools.Artifact.dsKey(d)
-    val cached = lshPersistMemo.get(ds)
-    if (cached != null && !graft.tools.Artifact.exists(cached))
-      lshPersistMemo.remove(ds, cached)
-    lshPersistMemo.computeIfAbsent(ds, _ => {
-      val (fp, n) = corpusFpN(s, d) // 1-row boundary, serve-time fp check
-      graft.tools.Artifact.resolve(lshToken, ds)(gsMetaMatches(s, _, fp, n))
-        .getOrElse {
-          lshCellBuilds.incrementAndGet()
-          val out = graft.tools.Artifact.publish(lshToken, ds) { stage =>
-            val ak = graft.tools.Artifact.newAk(ds)
-            val tmpName =
-              s"graft_pub_${ProcessHandle.current().pid()}_${System.nanoTime().toHexString}"
-            lshCellsOf(embeddings(s, d)).withColumn("ak", lit(ak))
-              .write.format("parquet")
-              .bucketBy(LshCellBuckets, "cell").sortBy("cell")
-              .option("path", s"$stage/cells").saveAsTable(tmpName)
-            s.sql(s"DROP TABLE IF EXISTS $tmpName") // external: files remain
-            val spark = s; import spark.implicits._
-            Seq((ak, ds, n, fp)).toDF("ak", "ds", "n", "fp")
-              .coalesce(1).write.mode("overwrite").parquet(s"$stage/meta")
-          }
-          gsRefreshPublished(s, out)
-          out
-        }
-    })
-  }
-
-  /** The published cells as a BUCKETED catalog table over the version
-    * dir (the gsAdjTable convention — bucket metadata lives in the
-    * catalog, each process re-declares the external table once). */
-  private[graft] def lshCellsTable(s: SparkSession, dir: String): DataFrame = {
-    val name = "graft_" + java.nio.file.Paths.get(dir).getFileName.toString
-    // pruning IS the utilization — see gsAdjTable on why auto-bucketed
-    // scan stays off
-    s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    s.sql(s"CREATE TABLE IF NOT EXISTS $name " +
-      s"(vec_id BIGINT, v ARRAY<DOUBLE>, cell INT, ak STRING) " +
-      s"USING PARQUET CLUSTERED BY (cell) SORTED BY (cell) INTO $LshCellBuckets BUCKETS " +
-      s"LOCATION '$dir/cells'")
-    s.table(name)
-  }
+  /** The published version serving this corpus's LSH cells, built (one
+    * corpus pass) on a miss. */
+  private[graft] def lshPersistedCells(s: SparkSession, d: String): String =
+    lshPersist(s, d)(corpusKey(s, d)) { (stage, ak) =>
+      LshCells.write(lshCellsOf(embeddings(s, d)).withColumn("ak", lit(ak)), stage)
+    }
 
   // ── product-quantization kernel (benched path of ann_pq_topk) ────────
   final case class PqScore(vec_id: Long, adist: Double)
@@ -1814,16 +1641,7 @@ object Vector {
         // 63 → 653, wall flat. The descent keeps AQE; its remaining
         // wall is per-stage-job driver latency with a genuinely small
         // CPU floor.
-        var b = strideSeeds(e, n).transform(GenSnap.snap)
-        var out: DataFrame = null
-        for (r <- 1 to NnRounds) {
-          val scored = nnDescentRound(b, e, r)
-          if (r < NnRounds)
-            b = scored.filter(col("rk") <= NnKb).select("src", "dst")
-              .transform(GenSnap.snap)
-          else out = scored.filter(col("rk") <= NnK)
-        }
-        out.select(col("src").as("vec_id"),
+        nnDescent(e, n).filter(col("rk") <= NnK).select(col("src").as("vec_id"),
             col("rk").cast("int").as("rank"), col("dst").as("nbr"), col("sim"))
           .orderBy("vec_id", "rank")
       },
@@ -2164,7 +1982,7 @@ object Vector {
         // the bucketed-artifact unroll: per hop, the ≤ beam frontier ids
         // are pushed as literals so the adjacency scan bucket-prunes
         // (Round17Spec pins SelectedBucketsCount in this shape)
-        val beam = gsBeamServe(e, gsAdjTable(s, base), n, GsBeam,
+        val beam = gsBeamServe(e, GsAdj.table(s, base), n, GsBeam,
           "graph_beam_search_persisted")
         val w = Window.orderBy(col("sim").desc, col("id").asc)
         beam.withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
@@ -2352,7 +2170,7 @@ object Vector {
         val eS = embeddings(s, d)
           .filter(!gsTombPred(col("vec_id")))
           .select(col("vec_id").as("id"), vec(col("embedding")).as("v"))
-        val beam = gsBeamServe(eS, gsAdjTable(s, base), n, GsBeam,
+        val beam = gsBeamServe(eS, GsAdj.table(s, base), n, GsBeam,
           "graph_beam_search_repair_pub")
         val w = Window.orderBy(col("sim").desc, col("id").asc)
         beam.withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
@@ -2411,7 +2229,7 @@ object Vector {
         val n = s.read.parquet(s"$base/meta").head().getAs[Long]("n")
         val e = embeddings(s, d)
           .select(col("vec_id").as("id"), vec(col("embedding")).as("v"))
-        val beam = gsBeamServe(e, gsAdjTable(s, base), n, GsBeam,
+        val beam = gsBeamServe(e, GsAdj.table(s, base), n, GsBeam,
           "graph_beam_search_insert_pub")
         val w = Window.orderBy(col("sim").desc, col("id").asc)
         beam.withColumn("rank", row_number().over(w)).filter(col("rank") <= 10)
@@ -2621,7 +2439,7 @@ object Vector {
       "ann_lsh_topk_persisted",
       (s, d) => {
         val base = lshPersistedCells(s, d)
-        val cellsT = lshCellsTable(s, base)
+        val cellsT = LshCells.table(s, base)
         // the probe's L cells + query vector: an L-row driver boundary
         val probe = lshCellsOf(embeddings(s, d).filter(col("vec_id") === 0L))
           .collect()

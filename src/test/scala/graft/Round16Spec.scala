@@ -20,12 +20,12 @@ class Round16Spec extends SparkSpec {
   test("persisted graph search: a second session serves with zero rebuilds") {
     // prime: this session has built + published (idempotent)
     SparkEntry.queries("ann_graph_search_persisted")(spark, sf).count()
-    val writes = ops.Vector.gsPersistBuilds.get()
+    val writes = ops.Vector.gsPersist.builds.get()
     val builds = ops.Vector.nnIndexBuilds.get()
     val fresh = spark.newSession() // fresh SessionMemo keys, shared context
     val rows = SparkEntry.queries("ann_graph_search_persisted")(fresh, sf).count()
     assert(rows == 10)
-    assert(ops.Vector.gsPersistBuilds.get() == writes,
+    assert(ops.Vector.gsPersist.builds.get() == writes,
       "a fresh session must serve from the published artifact, not re-publish")
     // the behavioral form of "the serve path contains no NN-descent
     // stage": the descent's only entry point is nnSearchIndex, whose
@@ -54,10 +54,10 @@ class Round16Spec extends SparkSpec {
     val aside = Paths.get(base.toString.replace("graft_idx_", "graft_aside_"))
     Files.move(base, aside, StandardCopyOption.ATOMIC_MOVE)
     try {
-      val writes = ops.Vector.gsPersistBuilds.get()
+      val writes = ops.Vector.gsPersist.builds.get()
       val after = SparkEntry.queries("ann_graph_search_persisted")(spark, ds)
         .collect().map(_.toSeq).toSeq
-      assert(ops.Vector.gsPersistBuilds.get() == writes + 1,
+      assert(ops.Vector.gsPersist.builds.get() == writes + 1,
         "a vanished artifact must trigger exactly one rebuild+republish")
       assert(after == before, "the republished artifact must serve the same answers")
     } finally {

@@ -15,7 +15,7 @@ class Round17Spec extends SparkSpec {
     // prime: build + publish once (idempotent across the suite run)
     SparkEntry.queries("ann_graph_search")(spark, sf).count()
     val descents = ops.Vector.nnIndexBuilds.get()
-    val publishes = ops.Vector.gsPersistBuilds.get()
+    val publishes = ops.Vector.gsPersist.builds.get()
     val fresh = spark.newSession()
     for (q <- Seq("ann_graph_search", "ann_graph_search_batch",
         "ann_graph_search_filtered", "ann_graph_search_routed",
@@ -23,7 +23,7 @@ class Round17Spec extends SparkSpec {
       assert(SparkEntry.queries(q)(fresh, sf).count() > 0, q)
     assert(ops.Vector.nnIndexBuilds.get() == descents,
       "every family member must serve from the published artifact — no descent")
-    assert(ops.Vector.gsPersistBuilds.get() == publishes,
+    assert(ops.Vector.gsPersist.builds.get() == publishes,
       "serving must not re-publish")
   }
 
@@ -34,7 +34,7 @@ class Round17Spec extends SparkSpec {
     // to the pre-staging read; the ZERO-descents probe above covers the
     // no-rebuild half for the whole family)
     val base = ops.Vector.gsPersistedIndex(spark, sf)
-    val filePlan = ops.Vector.gsAdjTable(spark, base)
+    val filePlan = ops.Vector.GsAdj.table(spark, base)
       .queryExecution.executedPlan.toString()
     assert(filePlan.contains("graft_idx_"),
       s"the staged adjacency must read the published parquet:\n$filePlan")
@@ -52,7 +52,7 @@ class Round17Spec extends SparkSpec {
 
   test("persisted hop lookups bucket-prune the published adjacency") {
     val base = ops.Vector.gsPersistedIndex(spark, sf)
-    val t = ops.Vector.gsAdjTable(spark, base)
+    val t = ops.Vector.GsAdj.table(spark, base)
     // the gsBeamServe shape: a literal frontier IN-filter on src
     val scan = t.filter(col("src").isin(7L, 11L, 42L))
     val plan = scan.queryExecution.executedPlan.toString()
@@ -95,11 +95,11 @@ class Round17Spec extends SparkSpec {
       "serving the published v2 must answer exactly like the replayed repair")
     // a fresh session serves v2 with zero descents AND zero repairs
     val descents = ops.Vector.nnIndexBuilds.get()
-    val repairs = ops.Vector.gsRepairPublishes.get()
+    val repairs = ops.Vector.gsRepairPub.builds.get()
     val fresh = spark.newSession()
     assert(SparkEntry.queries("ann_graph_repair_publish")(fresh, sf).count() == 10)
     assert(ops.Vector.nnIndexBuilds.get() == descents &&
-      ops.Vector.gsRepairPublishes.get() == repairs,
+      ops.Vector.gsRepairPub.builds.get() == repairs,
       "a fresh session must serve the published v2 — no rebuild, no re-repair")
   }
 
@@ -188,11 +188,11 @@ class Round17Spec extends SparkSpec {
       "the served top-10 must be rank-ordered by similarity")
     // a fresh session serves with zero merges and zero publishes
     val merges = ops.Vector.gsIncBuilds.get()
-    val publishes = ops.Vector.gsInsertPublishes.get()
+    val publishes = ops.Vector.gsInsertPub.builds.get()
     val fresh = spark.newSession()
     assert(SparkEntry.queries("ann_graph_insert_publish")(fresh, sf).count() == 10)
     assert(ops.Vector.gsIncBuilds.get() == merges &&
-      ops.Vector.gsInsertPublishes.get() == publishes,
+      ops.Vector.gsInsertPub.builds.get() == publishes,
       "a fresh session must serve the published merge — no rebuild, no re-publish")
   }
 
@@ -291,10 +291,10 @@ class Round17Spec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(v2e == v1e, "pre-ingest pairs must carry over verbatim")
     // a fresh session serves v2 with zero publishes
-    val pubs = ops.Text.dupIncPublishes.get()
+    val pubs = ops.Text.dupIncPersist.builds.get()
     val fresh = spark.newSession()
     assert(SparkEntry.queries("dedup_ingest_publish")(fresh, sf).count() > 0)
-    assert(ops.Text.dupIncPublishes.get() == pubs,
+    assert(ops.Text.dupIncPersist.builds.get() == pubs,
       "a fresh session must serve the published post-ingest state")
     // the dedup versions report surfaces both serving roles
     val roles = SparkEntry.queries("dedup_pair_versions")(spark, sf)
@@ -322,10 +322,10 @@ class Round17Spec extends SparkSpec {
     assert(df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == full,
       "serving the published cells must answer exactly like the full pipeline")
     // a fresh session serves with zero cell builds
-    val builds = ops.Vector.lshCellBuilds.get()
+    val builds = ops.Vector.lshPersist.builds.get()
     val fresh = spark.newSession()
     assert(SparkEntry.queries("ann_lsh_topk_persisted")(fresh, sf).count() == 10)
-    assert(ops.Vector.lshCellBuilds.get() == builds,
+    assert(ops.Vector.lshPersist.builds.get() == builds,
       "a fresh session must serve the published cells — no rebuild")
     // the streaming serve over the SAME artifact: batch form first
     val cells = spark.read.parquet(s"$base/cells")
@@ -428,13 +428,13 @@ class Round17Spec extends SparkSpec {
     assert(pub == memo,
       "the published cells must hold exactly the corpus assignment")
     // a fresh session serves with zero assignment builds
-    val builds = cluster.KMeans.ivfCellBuilds.get()
+    val builds = cluster.KMeans.ivfPersist.builds.get()
     val fresh = spark.newSession()
     assert(SparkEntry.queries("ann_ivf_topk_persisted")(fresh, sf).count() == 10)
-    assert(cluster.KMeans.ivfCellBuilds.get() == builds,
+    assert(cluster.KMeans.ivfPersist.builds.get() == builds,
       "a fresh session must serve the published cells — no corpus re-assignment")
     // an nprobe-sized literal IN prunes to ≤ nprobe storage buckets
-    val t = cluster.KMeans.ivfCellsTable(spark, dir)
+    val t = cluster.KMeans.IvfCells.table(spark, dir)
     val plan = t.filter(col("cid").isin(3L, 5L))
       .queryExecution.executedPlan.toString()
     val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(plan)
@@ -463,12 +463,12 @@ class Round17Spec extends SparkSpec {
       "the published merges must be exactly the trained merge list")
     // a fresh session serves the WHOLE bpe family (merges report, corpus
     // encode, persisted encode) with zero training loops
-    val trains = ops.Text.bpeTrains.get()
+    val trains = ops.Text.bpePersist.builds.get()
     val fresh = spark.newSession()
     assert(SparkEntry.queries("text_bpe_encode_persisted")(fresh, sf).count() > 0)
     assert(SparkEntry.queries("text_bpe_merges")(fresh, sf).count() > 0)
     assert(SparkEntry.queries("text_bpe_encode")(fresh, sf).count() > 0)
-    assert(ops.Text.bpeTrains.get() == trains,
+    assert(ops.Text.bpePersist.builds.get() == trains,
       "a fresh session must load the published tokenizer, not retrain")
   }
 
@@ -489,11 +489,11 @@ class Round17Spec extends SparkSpec {
     assert(pub == trained,
       "the published vocab must be exactly the trained model")
     // a fresh session serves the whole unigram family with zero EM runs
-    val trains = ops.Text.uniTrains.get()
+    val trains = ops.Text.uniPersist.builds.get()
     val fresh = spark.newSession()
     assert(SparkEntry.queries("text_unigram_encode_persisted")(fresh, sf).count() > 0)
     assert(SparkEntry.queries("text_unigram_encode")(fresh, sf).count() > 0)
-    assert(ops.Text.uniTrains.get() == trains,
+    assert(ops.Text.uniPersist.builds.get() == trains,
       "a fresh session must load the published model, not re-run EM")
   }
 
