@@ -6,10 +6,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GenSnap
 import org.apache.spark.storage.StorageLevel
 
+import scala.annotation.tailrec
+import scala.collection.mutable
+
 /** The graph kernels: min-label components, reachability, DAG
-  * layering, SCC coloring, label propagation, k-core peeling,
-  * multi-source BFS and betweenness, Luby MIS, min-plus shortest paths
-  * and Borůvka MST, each run distributed to a driver-counted fixpoint.
+  * layering, SCC coloring, label propagation, k-core peeling, core
+  * numbers, k-truss, multi-source BFS and betweenness, Luby MIS,
+  * min-plus shortest paths and Borůvka MST, each run distributed to a
+  * driver-counted fixpoint.
   * The reference's equivalent is Neo4j-side traversal; here a superstep
   * is a few equi-joins plus partial aggregations, the per-superstep
   * shape Pregel runs at 100 TB.
@@ -29,7 +33,9 @@ import org.apache.spark.storage.StorageLevel
   * `require`s, never silent truncation, and every loop records its
   * rounds in [[graft.tools.BoundProbe]]. Superseded generations are
   * dereferenced and reclaimed by the ContextCleaner; the caller owns
-  * the edge cache.
+  * the edge cache. The peeling kernels ([[kCorePeel]], [[coreNumbers]],
+  * [[kTruss]]) run a generation of at most [[Fixpoint.TaskRows]] rows
+  * as one task instead ([[Fixpoint.inTask]]), with the same rounds.
   *
   * [[lpa]] and [[betweenness]] run a fixed depth and [[lpaConverged]]
   * stops quietly at its cap or on oscillation, so those three loops are
@@ -443,34 +449,217 @@ object Components {
   /** k-core decomposition by iterative degree peeling — a third
     * fixpoint shape next to [[minLabel]] (label spreading) and
     * [[minDist]] (min-plus relaxation): here the EDGE SET itself
-    * shrinks monotonically. Each round: one partial-agg degree count,
-    * drop every vertex with degree < k (two anti joins, build side
-    * broadcast when small), repeat until no vertex falls below k.
+    * shrinks monotonically. Each round drops every edge with an end of
+    * degree < k (a vertex's degree is its rows as `src`), until no
+    * vertex falls below k; the converging round counts. At most
+    * `taskRows` edges peel in one task ([[peelRows]]); above it a
+    * round is one partial-agg degree count and two anti joins (build
+    * side broadcast when small).
     *
     * @param ue    undirected edges (src, dst), both directions present.
     * @param cap   peel rounds allowed, the converging round included
     *              (callers with an unrolled-CTE oracle pass its unroll).
     * @param probe the BoundProbe name of the rounds used.
     * @return the surviving k-core edge set (still both directions). */
-  def kCorePeel(ue: DataFrame, k: Int, cap: Int = Fixpoint.Uncapped,
-                probe: String = "kcore_peel"): DataFrame = {
-    val BcastMax = 1000000L
-    var edges = ue.transform(GenSnap.snap)
-    Fixpoint.run(probe, cap) { _ =>
-      val bad = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") < k).select(col("src").as("v"))
+  private[graft] def kCorePeel(ue: DataFrame, k: Int, cap: Int = Fixpoint.Uncapped,
+                               probe: String = "kcore_peel",
+                               taskRows: Long = Fixpoint.TaskRows): DataFrame = {
+    val gen = ue.transform(GenSnap.snap)
+    peelGen(gen, gen.count(), k, cap, probe, taskRows)
+  }
+
+  /** [[kCorePeel]] over `gen`, a counted generation of `rows` edges. */
+  private def peelGen(gen: DataFrame, rows: Long, k: Int, cap: Int,
+                      probe: String, taskRows: Long): DataFrame =
+    if (rows <= taskRows) {
+      val spark = gen.sparkSession
+      import spark.implicits._
+      Fixpoint.inTask(gen.select("src", "dst").as[(Long, Long)], Map(probe -> cap),
+          Seq("src", "dst")) { rows =>
+        val (core, used) = peelRows(rows.toArray, k, cap)
+        (core.iterator, Seq(probe -> used))
+      }
+    } else {
+      val BcastMax = 1000000L
+      var edges = gen
+      Fixpoint.run(probe, cap) { _ =>
+        val bad = edges.groupBy("src").agg(count(lit(1)).as("deg"))
+          .filter(col("deg") < k).select(col("src").as("v"))
+          .transform(GenSnap.snap)
+        // the count materializes bad AND the current edge generation
+        Fixpoint.Round(bad, advance = nBad => {
+          val b = if (nBad <= BcastMax) broadcast(bad) else bad
+          edges = edges
+            .join(b.select(col("v").as("src")), Seq("src"), "left_anti")
+            .join(b.select(col("v").as("dst")), Seq("dst"), "left_anti")
+            .select("src", "dst")
+            .transform(GenSnap.snap)
+        })
+      }
+      edges
+    }
+
+  /** [[kCorePeel]]'s rounds on one thread: the surviving edges and the
+    * rounds used, the converging one included. Round `cap + 1` is not
+    * run; reaching it reports `cap + 1` rounds. */
+  private def peelRows(ue: Array[(Long, Long)], k: Int,
+                       cap: Int): (Array[(Long, Long)], Int) = {
+    @tailrec def round(edges: Array[(Long, Long)], r: Int): (Array[(Long, Long)], Int) =
+      if (r > cap) (edges, r)
+      else {
+        val deg = mutable.LongMap.empty[Int]
+        edges.foreach { case (s, _) => deg(s) = deg.getOrElse(s, 0) + 1 }
+        val bad = deg.filter(_._2 < k)
+        if (bad.isEmpty) (edges, r)
+        else round(edges.filter { case (s, d) => !bad.contains(s) && !bad.contains(d) }, r + 1)
+      }
+    round(ue, 1)
+  }
+
+  /** Every vertex's core number, max{k : v in the k-core}, by an
+    * ascending-k level loop: level r peels the (r + 1)-core out of the
+    * previous level's core ([[kCorePeel]], BoundProbe
+    * `core_numbers_peel`), until a level's core is empty (BoundProbe
+    * `core_numbers_levels`; the emptying level counts). Cores are
+    * nested, so total work is bounded by Σ_k |E_k|. At most `taskRows`
+    * edges run every level in one task ([[coreRows]]).
+    *
+    * @param ue       undirected edges (src, dst), both directions present.
+    * @param levelCap levels allowed.
+    * @param peelCap  peel rounds allowed per level.
+    * @return (id, core) for every `src`: 1 outside the 2-core. */
+  private[graft] def coreNumbers(ue: DataFrame, levelCap: Int, peelCap: Int,
+                                 taskRows: Long = Fixpoint.TaskRows): DataFrame = {
+    var edges = ue.select("src", "dst").transform(GenSnap.snap)
+    var n = edges.count()
+    if (n <= taskRows) {
+      val spark = ue.sparkSession
+      import spark.implicits._
+      Fixpoint.inTask(edges.as[(Long, Long)],
+          Map(CoreLevels -> levelCap, CorePeel -> peelCap), Seq("id", "core")) { rows =>
+        val (core, used) = coreRows(rows.toArray, levelCap, peelCap)
+        (core.iterator, used)
+      }
+    } else {
+      var core = edges.select(col("src").as("id")).distinct()
+        .select(col("id"), lit(1L).as("core"))
         .transform(GenSnap.snap)
-      // the count materializes bad AND the current edge generation
-      Fixpoint.Round(bad, advance = nBad => {
-        val b = if (nBad <= BcastMax) broadcast(bad) else bad
-        edges = edges
-          .join(b.select(col("v").as("src")), Seq("src"), "left_anti")
-          .join(b.select(col("v").as("dst")), Seq("dst"), "left_anti")
+      Fixpoint.run(CoreLevels, levelCap) { r =>
+        val k = r + 1
+        val ck = peelGen(edges, n, k, peelCap, CorePeel, taskRows)
+        val survivors = ck.select(col("src").as("id")).distinct()
+        core = core
+          .join(survivors.select(col("id"), lit(1).as("up")), Seq("id"), "left")
+          .select(col("id"),
+            when(col("up").isNotNull, lit(k.toLong)).otherwise(col("core")).as("core"))
+          .transform(GenSnap.snap)
+        edges = ck
+        Fixpoint.Round(edges, advance = nk => n = nk)
+      }
+      core
+    }
+  }
+
+  private val CoreLevels = "core_numbers_levels"
+  private val CorePeel = "core_numbers_peel"
+
+  /** [[coreNumbers]]' levels on one thread, over [[peelRows]]: the
+    * (id, core) rows and the rounds used, in the order the distributed
+    * loops record them (each level's peel, then the levels). It stops
+    * at the first level or peel past its cap. */
+  private def coreRows(ue: Array[(Long, Long)], levelCap: Int,
+                       peelCap: Int): (Iterable[(Long, Long)], Seq[(String, Int)]) = {
+    val core = mutable.LongMap.empty[Long]
+    ue.foreach { case (s, _) => core(s) = 1L }
+    val used = Seq.newBuilder[(String, Int)]
+    @tailrec def level(edges: Array[(Long, Long)], r: Int): Int =
+      if (r > levelCap) r
+      else {
+        val (ck, p) = peelRows(edges, r + 1, peelCap)
+        used += CorePeel -> p
+        ck.foreach { case (s, _) => core(s) = r + 1L }
+        if (ck.isEmpty || p > peelCap) r else level(ck, r + 1)
+      }
+    val levels = if (ue.isEmpty) 0 else level(ue, 1)
+    used += CoreLevels -> levels
+    (core, used.result())
+  }
+
+  /** k-truss by iterative support peeling, the edge analog of
+    * [[kCorePeel]]: each round counts every edge's support, its
+    * triangles x→y, y→z, x→z (the wedge join closed by its third
+    * edge, each triangle counting for its three edges), and drops the
+    * edges with support < k − 2, until a round drops none; that round
+    * does not count (BoundProbe `ktruss_peel`). A repeated edge
+    * multiplies its triangles, as the joins do. At most `taskRows`
+    * edges peel in one task ([[trussRows]]).
+    *
+    * @param es  directed edges (src, dst).
+    * @param cap live rounds allowed.
+    * @return the surviving edges with their support (src, dst,
+    *         support); an edge in no triangle has no row. */
+  private[graft] def kTruss(es: DataFrame, k: Int, cap: Int = Fixpoint.Uncapped,
+                            taskRows: Long = Fixpoint.TaskRows): DataFrame = {
+    var edges = es.select("src", "dst").transform(GenSnap.snap)
+    var n = edges.count()
+    if (n <= taskRows) {
+      val spark = es.sparkSession
+      import spark.implicits._
+      Fixpoint.inTask(edges.as[(Long, Long)], Map(TrussPeel -> cap),
+          Seq("src", "dst", "support")) { rows =>
+        val (truss, used) = trussRows(rows.toArray, k, cap)
+        (truss.iterator, Seq(TrussPeel -> used))
+      }
+    } else {
+      def support(es: DataFrame): DataFrame =
+        es.toDF("x", "y").join(es.toDF("y", "z"), "y")
+          .join(es.toDF("x", "z"), Seq("x", "z"))
+          .select(explode(array(
+            struct(col("x").as("src"), col("y").as("dst")),
+            struct(col("y").as("src"), col("z").as("dst")),
+            struct(col("x").as("src"), col("z").as("dst")))).as("e"))
+          .select(col("e.src").as("src"), col("e.dst").as("dst"))
+          .groupBy("src", "dst").agg(count(lit(1)).as("support"))
+      Fixpoint.run(TrussPeel, cap, countsLast = false) { _ =>
+        val kept = edges.join(support(edges), Seq("src", "dst"), "left")
+          .filter(coalesce(col("support"), lit(0L)) >= k - 2)
           .select("src", "dst")
           .transform(GenSnap.snap)
-      })
+        Fixpoint.Round(kept, done = _ == n, advance = nk => { edges = kept; n = nk })
+      }
+      edges.join(support(edges), Seq("src", "dst"))
     }
-    edges
+  }
+
+  private val TrussPeel = "ktruss_peel"
+
+  /** [[kTruss]]'s rounds on one thread: the surviving (src, dst,
+    * support) rows and the live rounds used. A live round past `cap`
+    * stops the loop and reports its number. */
+  private def trussRows(es: Array[(Long, Long)], k: Int,
+                        cap: Int): (Array[(Long, Long, Long)], Int) = {
+    def support(es: Array[(Long, Long)]): mutable.HashMap[(Long, Long), Long] = {
+      val mult = mutable.HashMap.empty[(Long, Long), Long]
+      es.foreach(e => mult(e) = mult.getOrElse(e, 0L) + 1L)
+      val out = mult.toSeq.groupMap(_._1._1) { case ((_, z), m) => (z, m) }
+      val sup = mutable.HashMap.empty[(Long, Long), Long]
+      def add(e: (Long, Long), t: Long): Unit = sup(e) = sup.getOrElse(e, 0L) + t
+      // a triangle's join rows multiply its three edges' multiplicities
+      for (((x, y), m1) <- mult; (z, m2) <- out.getOrElse(y, Nil); m3 <- mult.get((x, z))) {
+        val t = m1 * m2 * m3
+        add((x, y), t); add((y, z), t); add((x, z), t)
+      }
+      sup
+    }
+    @tailrec def round(edges: Array[(Long, Long)], r: Int): (Array[(Long, Long, Long)], Int) = {
+      val sup = support(edges)
+      val kept = edges.filter(e => sup.getOrElse(e, 0L) >= k - 2)
+      if (kept.length == edges.length)
+        (edges.flatMap { case e @ (s, d) => sup.get(e).map(t => (s, d, t)) }, r - 1)
+      else if (r > cap) (Array.empty, r)
+      else round(kept, r + 1)
+    }
+    round(es, 1)
   }
 
   /** Multi-source BFS: run |seeds| breadth-first searches in ONE

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.{Q, Tables}
-import graft.graph.Fixpoint
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2109,9 +2108,11 @@ object Text {
     // so this is the k that separates structure from noise here; the
     // kernel takes any k.)
     // Runs on Components.kCorePeel — a third fixpoint shape next to
-    // min-label and min-plus: the EDGE SET itself shrinks monotonically
-    // (one partial-agg degree count + two anti joins per round, lazily
-    // checkpointed generations). The oracle unrolls the peel as
+    // min-label and min-plus: the EDGE SET itself shrinks monotonically.
+    // A graph of at most Fixpoint.TaskRows edge rows (every harness
+    // scale so far) peels in one executor task; above it, one
+    // partial-agg degree count + two anti joins per round over lazily
+    // checkpointed generations. The oracle unrolls the peel as
     // MATERIALIZED CTE layers — each layer references its predecessor
     // three times, and materialization stops DuckDB's inliner from
     // exponentiating the chain; Spark's rounds are `require`'d ≤ the
@@ -2151,37 +2152,17 @@ object Text {
     // triangle-supported). Stricter than k-core — a long cycle survives
     // the degree peel but has no triangles and dissolves here — so the
     // survivors are the mutually-corroborated template families, the
-    // set worth collapsing aggressively. Per round: the wedge-join
-    // support count (same shape as dedup_triangles) + one filter; the
-    // edge set shrinks monotonically, rounds require'd ≤ the oracle's
-    // per-level MATERIALIZED unroll (peels past convergence are no-ops,
-    // exactly the dedup_kcore convention).
+    // set worth collapsing aggressively. Runs on Components.kTruss: at
+    // most Fixpoint.TaskRows edges peel in one executor task; above it,
+    // per round, the wedge-join support count (same shape as
+    // dedup_triangles) + one filter. The edge set shrinks monotonically,
+    // rounds require'd ≤ the oracle's per-level MATERIALIZED unroll
+    // (peels past convergence are no-ops, exactly the dedup_kcore
+    // convention).
     Q(
       "dedup_ktruss",
-      (s, d) => {
-        val K = 3
-        def support(es: DataFrame): DataFrame =
-          es.toDF("x", "y").join(es.toDF("y", "z"), "y")
-            .join(es.toDF("x", "z"), Seq("x", "z"))
-            .select(explode(array(
-              struct(col("x").as("id_a"), col("y").as("id_b")),
-              struct(col("y").as("id_a"), col("z").as("id_b")),
-              struct(col("x").as("id_a"), col("z").as("id_b")))).as("e"))
-            .select(col("e.id_a").as("id_a"), col("e.id_b").as("id_b"))
-            .groupBy("id_a", "id_b").agg(count(lit(1)).as("support"))
-        var edges = dupEdges(s, d).transform(GenSnap.snap)
-        var n = edges.count()
-        // a round that removes no edge is the fixpoint and does not count
-        Fixpoint.run("ktruss_peel", KTrussUnroll, countsLast = false) { _ =>
-          val kept = edges.join(support(edges), Seq("id_a", "id_b"), "left")
-            .filter(coalesce(col("support"), lit(0L)) >= K - 2)
-            .select("id_a", "id_b")
-            .transform(GenSnap.snap)
-          Fixpoint.Round(kept, done = _ == n, advance = nk => { edges = kept; n = nk })
-        }
-        edges.join(support(edges), Seq("id_a", "id_b"))
-          .orderBy("id_a", "id_b")
-      },
+      (s, d) => graft.graph.Components.kTruss(dupEdges(s, d).toDF("src", "dst"), 3,
+        KTrussUnroll).toDF("id_a", "id_b", "support").orderBy("id_a", "id_b"),
       Some {
         val lvl = (0 to KTrussUnroll).map { i =>
           val peel = if (i < KTrussUnroll)
@@ -2217,40 +2198,26 @@ object Text {
     // core(v) = max{k : v ∈ k-core} for EVERY vertex of the near-dup
     // graph — the Matula–Beck coreness, the standard cohesion score for
     // choosing how aggressively to collapse a duplicate family. Spark:
-    // ascending-k driver loop over Components.kCorePeel — the edge set
-    // shrinks monotonically across levels, so total work is bounded by
-    // Σ_k |E_k| and each level reuses the same one-partial-agg +
-    // two-anti-join round. The oracle unrolls BOTH loops as nested
-    // MATERIALIZED layers (CoreNumK levels × CoreNumR rounds, excess
-    // layers no-op) and reads coreness as the max level whose converged
-    // edge set still contains the vertex — cores are nested, so
-    // presence-max ≡ removal-level. Both loops `require`d ≤ the unroll.
+    // Components.coreNumbers, an ascending-k level loop over the k-core
+    // peel — the edge set shrinks monotonically across levels, so total
+    // work is bounded by Σ_k |E_k|. At most Fixpoint.TaskRows edge rows
+    // run every level in one executor task; above it, each level reuses
+    // kCorePeel's one-partial-agg + two-anti-join round. The oracle
+    // unrolls BOTH loops as nested MATERIALIZED layers (CoreNumK levels
+    // × CoreNumR rounds, excess layers no-op) and reads coreness as the
+    // max level whose converged edge set still contains the vertex —
+    // cores are nested, so presence-max ≡ removal-level. Both loops
+    // `require`d ≤ the unroll.
     Q(
       "dedup_core_numbers",
       (s, d) => {
         val dup = dupEdges(s, d)
         val ue = dup.select(col("id_a").as("src"), col("id_b").as("dst"))
           .union(dup.select(col("id_b").as("src"), col("id_a").as("dst")))
-        var edges = ue.transform(GenSnap.snap)
-        var core = edges.select(col("src").as("doc_id")).distinct()
-          .select(col("doc_id"), lit(1L).as("core"))
-          .transform(GenSnap.snap)
         // level r peels the (r + 1)-core; the oracle unrolls levels
         // 2..CoreNumK, so CoreNumK - 1 of them
-        Fixpoint.run("core_numbers_levels", CoreNumK - 1, init = Some(edges)) { r =>
-          val k = r + 1
-          val ck = graft.graph.Components.kCorePeel(edges, k, CoreNumR,
-            "core_numbers_peel")
-          val survivors = ck.select(col("src").as("doc_id")).distinct()
-          core = core
-            .join(survivors.select(col("doc_id"), lit(1).as("up")), Seq("doc_id"), "left")
-            .select(col("doc_id"),
-              when(col("up").isNotNull, lit(k.toLong)).otherwise(col("core")).as("core"))
-            .transform(GenSnap.snap)
-          edges = ck
-          Fixpoint.Round(edges)
-        }
-        core.orderBy("doc_id")
+        graft.graph.Components.coreNumbers(ue, CoreNumK - 1, CoreNumR)
+          .toDF("doc_id", "core").orderBy("doc_id")
       },
       Some {
         val levels = (2 to CoreNumK).flatMap { k =>

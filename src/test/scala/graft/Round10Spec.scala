@@ -142,40 +142,6 @@ class Round10Spec extends SparkSpec {
     assert(got == want, s"prefix filter must miss nothing: got ${got.size}, want ${want.size}")
   }
 
-  test("dedup_core_numbers matches an independent driver-side peel") {
-    val got = SparkEntry.queries("dedup_core_numbers")(spark, sf).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // ground truth: textbook Matula–Beck peel on the ≥0.5 LSH dup graph
-    val dup = SparkEntry.queries("dedup_minhash_pairs")(spark, sf).collect()
-      .filter(_.getDouble(2) >= 0.5).map(r => (r.getLong(0), r.getLong(1)))
-    val adj = scala.collection.mutable.Map.empty[Long, scala.collection.mutable.Set[Long]]
-    dup.foreach { case (a, b) =>
-      adj.getOrElseUpdate(a, scala.collection.mutable.Set.empty) += b
-      adj.getOrElseUpdate(b, scala.collection.mutable.Set.empty) += a
-    }
-    val core = scala.collection.mutable.Map.empty[Long, Long]
-    var k = 2L
-    while (adj.nonEmpty) {
-      var changed = true
-      while (changed) {
-        val bad = adj.collect { case (v, ws) if ws.size < k => v }.toList
-        changed = bad.nonEmpty
-        bad.foreach { v =>
-          adj(v).foreach(w => adj.get(w).foreach(_ -= v))
-          core(v) = k - 1
-          adj -= v
-        }
-      }
-      if (adj.nonEmpty) k += 1
-    }
-    assert(got.nonEmpty)
-    assert(got == core.toMap, "coreness must equal the textbook peel")
-    // cores are nested: every vertex of the 2-core query has core ≥ 2
-    val kcore2 = SparkEntry.queries("dedup_kcore")(spark, sf).collect()
-      .map(_.getLong(0)).toSet
-    assert(kcore2.forall(v => got(v) >= 2L))
-  }
-
   test("text_dup_span_coverage matches a driver-side rolling-hash replay") {
     val P = 4294967291L
     def strHash(w: String): Long = {

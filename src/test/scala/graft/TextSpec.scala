@@ -141,6 +141,63 @@ class TextSpec extends SparkSpec {
       s"triangle docs missing from the 2-core: ${tri -- core}")
   }
 
+  test("dedup_core_numbers matches an independent driver-side peel") {
+    val got = SparkEntry.queries("dedup_core_numbers")(spark, sf).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // ground truth: textbook Matula–Beck peel on the ≥0.5 LSH dup graph
+    val dup = SparkEntry.queries("dedup_minhash_pairs")(spark, sf).collect()
+      .filter(_.getDouble(2) >= 0.5).map(r => (r.getLong(0), r.getLong(1)))
+    val adj = scala.collection.mutable.Map.empty[Long, scala.collection.mutable.Set[Long]]
+    dup.foreach { case (a, b) =>
+      adj.getOrElseUpdate(a, scala.collection.mutable.Set.empty) += b
+      adj.getOrElseUpdate(b, scala.collection.mutable.Set.empty) += a
+    }
+    val core = scala.collection.mutable.Map.empty[Long, Long]
+    var k = 2L
+    while (adj.nonEmpty) {
+      var changed = true
+      while (changed) {
+        val bad = adj.collect { case (v, ws) if ws.size < k => v }.toList
+        changed = bad.nonEmpty
+        bad.foreach { v =>
+          adj(v).foreach(w => adj.get(w).foreach(_ -= v))
+          core(v) = k - 1
+          adj -= v
+        }
+      }
+      if (adj.nonEmpty) k += 1
+    }
+    assert(got.nonEmpty)
+    assert(got == core.toMap, "coreness must equal the textbook peel")
+    // cores are nested: every vertex of the 2-core query has core ≥ 2
+    val kcore2 = SparkEntry.queries("dedup_kcore")(spark, sf).collect()
+      .map(_.getLong(0)).toSet
+    assert(kcore2.forall(v => got(v) >= 2L))
+  }
+
+  test("dedup_ktruss matches an independent driver-side support peel") {
+    val got = SparkEntry.queries("dedup_ktruss")(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // ground truth: an edge's support is its ends' common neighbours;
+    // drop every edge with none until no edge drops
+    var edges = SparkEntry.queries("dedup_minhash_pairs")(spark, sf).collect()
+      .filter(_.getDouble(2) >= 0.5).map(r => (r.getLong(0), r.getLong(1))).toSet
+    def support(es: Set[(Long, Long)]): Map[(Long, Long), Long] = {
+      val nbr = (es.toSeq ++ es.toSeq.map(_.swap)).groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+      es.map { case e @ (a, b) => e -> (nbr(a) intersect nbr(b)).size.toLong }.toMap
+    }
+    var sup = support(edges)
+    var kept = edges.filter(sup(_) >= 1)
+    while (kept != edges) {
+      edges = kept
+      sup = support(edges)
+      kept = edges.filter(sup(_) >= 1)
+    }
+    assert(got.nonEmpty)
+    assert(got == edges.map { case e @ (a, b) => (a, b, sup(e)) },
+      "k-truss edges and supports must equal the driver-side peel")
+  }
+
   test("leakage-safe split: no near-dup pair straddles train/val") {
     // the property the query exists for, checked against the INDEPENDENT
     // pair list: both endpoints of every ≥0.5-Jaccard pair share a side
