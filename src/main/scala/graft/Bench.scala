@@ -1,59 +1,107 @@
 package graft
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 
 /** Driver-run benchmark: times every SparkEntry query at the sf under
-  * test and prints ONE compact JSON line.
+  * test, prints ONE compact JSON line (copied to `target/bench.json`)
+  * and writes the run's per-query ledger, `target/bench_queries.jsonl`
+  * ([[renderLedger]]).
   *
-  * Hygiene (judge round-1 task 3): the whole suite is WARMED once at the
-  * sf under test before the timed pass, so timings measure steady state
-  * (JIT, codegen cache, OS page cache) rather than first-touch costs;
-  * and timings are rounded to milliseconds so the JSON line stays well
-  * inside the driver's captured stdout tail (~2.3 KB) — the r1/r2 line
-  * at full double precision was longer than the tail and truncated,
-  * which is why BENCH_r{1,2}.parsed came back null.
-  *
-  * MEASUREMENT SCOPE (changed r8): session-scoped memos (dedup pair
-  * set, simhash sigs, staged graph adjacency — see ops/Text.scala and
-  * graph/PropertyGraph.scala) are built during the untimed warm-up
-  * pass, so the timed numbers measure the shared-artifact steady state.
-  * That is the honest production shape (a persisted adjacency table is
-  * built once, not per query), but it means r8+ totals are not directly
-  * comparable to r7- totals for the five graph fixpoint queries.
-  *
-  * FAILURE VISIBILITY (r14, VERDICT-r13 task 1): a query that throws is
-  * recorded as an ERROR, never as a plausible timing. r12's
-  * graph_temporal_reach crash shipped as a "6.56 s" number for a full
-  * round because the timed pass swallowed the exception — invisible to
-  * CORRECTNESS too, which runs at sf0.01 where the bound didn't fire.
-  * Now every per-query run returns ok/err; the JSON line carries a
-  * top-level "errors" count plus an "errors_detail" map, each failure
-  * is echoed loudly to stderr, and BenchSpec proves a deliberately
-  * throwing query surfaces as an error rather than a timing.
+  * Invariants:
+  *  - One untimed warm-up pass over the whole query set runs first, so
+  *    the timed passes measure steady state: JIT, codegen, page cache
+  *    and the session memos (staged adjacency, dedup pair sets, sigma
+  *    towers) are built before any clock runs. A query's time is its
+  *    best of 3 timed passes.
+  *  - A query that throws is an error, never a timing: its
+  *    time-to-failure is left out of the timings and the total, and the
+  *    line carries `errors` and `errors_detail`.
+  *  - Each query's minimum is corroborated by another of its own passes
+  *    ([[corroborated]]). An uncorroborated query is re-timed alone; one
+  *    still uncorroborated taints the measurement, which is re-run.
+  *  - Storage is read after a GC + ContextCleaner drain, so it measures
+  *    the retained set, and is checked against [[StorageBudgetMb]].
+  *  - A SparkListener counts each pass. A query's counters are read
+  *    after its action, once the listener bus has drained, and outside
+  *    its timed interval; they hold exactly that query's jobs.
   */
 object Bench {
-  /** One query's outcome in one pass: wall seconds plus the error (class +
-    * truncated message) if the query threw. A thrown query's `sec` is
-    * time-to-failure and is NEVER reported as a timing — see merge(). */
-  final case class QTime(name: String, sec: Double, err: Option[String])
+  /** What the listener saw of one query in one pass: jobs started,
+    * stages completed and their tasks, shuffle bytes read and written,
+    * summed executor run, CPU and GC milliseconds, and the [[TopStages]]
+    * stages with the most executor run time. */
+  final case class Counters(jobs: Int = 0, stages: Int = 0, tasks: Int = 0,
+                            shuffleRead: Long = 0L, shuffleWrite: Long = 0L,
+                            runMs: Long = 0L, cpuMs: Long = 0L, gcMs: Long = 0L,
+                            top: Seq[Stage] = Nil)
+
+  /** One completed stage: its executor run ms, tasks and RDD scopes (the
+    * operators it ran). */
+  final case class Stage(id: Int, runMs: Long, tasks: Int, scopes: String)
+
+  val TopStages = 5
+
+  /** One query's outcome in one pass: wall seconds, the error (class +
+    * truncated message) if the query threw, and its counters. A thrown
+    * query's `sec` is time-to-failure and is NEVER reported as a
+    * timing — see merge(). */
+  final case class QTime(name: String, sec: Double, err: Option[String],
+                         c: Counters = Counters())
+
+  /** Counts the jobs and completed stages of its context until [[take]]. */
+  private final class Listener extends SparkListener {
+    private var jobs = 0
+    private val done = scala.collection.mutable.ArrayBuffer[StageInfo]()
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+      synchronized { done += s.stageInfo }
+
+    /** The counts since the last take; the next take starts from zero. */
+    def take(): Counters = synchronized {
+      def sum(f: StageInfo => Long): Long = done.map(f).sum
+      val top = done.sortBy(-_.taskMetrics.executorRunTime).take(TopStages).map { si =>
+        Stage(si.stageId, si.taskMetrics.executorRunTime, si.numTasks,
+          si.rddInfos.flatMap(_.scope).map(_.name.takeWhile(_ != '\n'))
+            .distinct.mkString(" | ").take(200))
+      }.toSeq
+      val c = Counters(jobs, done.size, done.map(_.numTasks).sum,
+        sum(_.taskMetrics.shuffleReadMetrics.totalBytesRead),
+        sum(_.taskMetrics.shuffleWriteMetrics.bytesWritten),
+        sum(_.taskMetrics.executorRunTime), sum(_.taskMetrics.executorCpuTime) / 1000000L,
+        sum(_.taskMetrics.jvmGCTime), top)
+      jobs = 0; done.clear()
+      c
+    }
+  }
+
+  private def clean(s: String): String = s.replaceAll("""["\\\n\r\t]""", " ")
 
   /** Time one pass over the query set. Failures are captured, not
     * swallowed: the error is carried in the result AND echoed to stderr
     * immediately (so even a truncated artifact leaves a loud trace). */
   def runPass(spark: SparkSession, sfDir: String,
-              qs: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[QTime] =
-    qs.map { case (name, fn) =>
+              qs: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[QTime] = {
+    val sc = spark.sparkContext
+    val counters = new Listener
+    Bridge.drainListeners(sc) // no earlier event reaches the listener
+    sc.addSparkListener(counters)
+    try qs.map { case (name, fn) =>
       val t0 = System.nanoTime()
       val err =
         try { fn(spark, sfDir).count(); None }
         catch {
           case t: Throwable =>
-            val msg = (t.getClass.getSimpleName + ": " +
-              Option(t.getMessage).getOrElse("")).replaceAll("""["\\\n\r\t]""", " ").take(160)
+            val msg = clean(t.getClass.getSimpleName + ": " +
+              Option(t.getMessage).getOrElse("")).take(160)
             System.err.println(s"[bench] ERROR in $name: $msg")
             Some(msg)
         }
-      QTime(name, (System.nanoTime() - t0) / 1e9, err)
-    }
+      val sec = (System.nanoTime() - t0) / 1e9
+      Bridge.drainListeners(sc)
+      QTime(name, sec, err, counters.take())
+    } finally sc.removeSparkListener(counters)
+  }
 
   /** Best-of-N merge: per-query minimum wall time over the passes, but a
     * query that threw in ANY pass is an error (first message kept) — a
@@ -97,23 +145,19 @@ object Bench {
 
   /** Post-suite block-manager budget (MB): the intentional session memos
     * measure ~92 MB at sf0.1; 200 leaves room for growth while catching
-    * an accumulation regression (r13 shipped 612 MB once, on a loaded
-    * box). Breach is flagged in the JSON (`storage_ok`), not fatal. */
+    * an accumulation regression. A breach is flagged in the JSON
+    * (`storage_ok`) and itemized (`storage_top`), not fatal. */
   val StorageBudgetMb = 200L
 
-  /** This box hosts an external tenant whose load oscillates on ~10-min
-    * cycles; a bench pass that overlaps a spike inflates iterative
-    * (driver-synced) queries 3-6x with zero code change (judge r7: the
-    * driver's 150.9 s total vs 89.8 s quiet-box). Wait out a spike for a
-    * bounded time rather than record a lie. */
+  /** A 1-minute load above this delays the start of a measurement (for
+    * a bounded time), and other processes' CPU above it over the timed
+    * window taints it: uniform external load inflates every pass alike,
+    * which per-query corroboration cannot see. */
   private val LoadThreshold = 2.0
 
   /** Pass-total dispersion — max/min over per-pass wall totals, 1.0
-    * when passes agree. Since r16 an ANNOTATION, not a taint trigger:
-    * r15 burned all 3 attempts and shipped `tainted:true` on pass-level
-    * dispersion 1.456 while the per-query best-of-3 was sound within 6%
-    * of the judge's quiet box (VERDICT-r15 task 2) — one noisy window
-    * poisons a pass total even when every query's minimum is
+    * when passes agree. An annotation, not a taint trigger: one noisy
+    * window inflates a pass total even when every query's minimum is
     * corroborated by another pass. */
   val DispersionThreshold = 1.25
 
@@ -122,21 +166,16 @@ object Bench {
       passTotals.max / passTotals.min
     else 1.0
 
-  // ── per-query taint (VERDICT-r15 task 2) ───────────────────────────
   /** A query's best-of time is CORROBORATED when its second-smallest
     * recorded time is within 50% (+100 ms absolute slack for sub-second
     * queries) of the minimum: the minimum was reproduced to within the
-    * box's DOCUMENTED single-pass swing, so it is a steady-state floor,
-    * not a fluke. Why 50%: single-pass timings on this shared box swing
-    * ±30-50% (the long-standing best-of-3 rationale above) — measured
-    * live, 15% and 20% bands both left a handful of multi-stage
-    * latency-bound queries (graph search, nndescent, CC) uncorroborated
-    * through SIX samples while their minima were honest; a gate tighter
-    * than the documented variance indicts scheduling noise, not lies.
-    * At 50% the gate still catches what it exists for — a minimum no
-    * other sample comes near (an accidentally-cached result, a
-    * measurement glitch, a cold/warm mixup: all ≥2× gaps). Pure so
-    * BenchSpec drives it synthetically. */
+    * box's single-pass swing (±30-50%, the best-of-3 rationale), so it
+    * is a steady-state floor, not a fluke. A tighter band indicts
+    * scheduling noise in latency-bound multi-stage queries (graph
+    * search, nndescent, CC); at 50% the gate still catches what it
+    * exists for — a minimum no other sample comes near (an accidentally
+    * cached result, a measurement glitch, a cold/warm mixup: all ≥2×
+    * gaps). Pure so BenchSpec drives it synthetically. */
   val QueryAgreeRatio = 1.50
   val QueryAgreeSlackSec = 0.10
   def corroborated(times: Seq[Double]): Boolean = {
@@ -162,23 +201,17 @@ object Bench {
     * TARGETED re-timing of uncorroborated queries,
     * contamination annotations. Taint is decided per QUERY: the
     * artifact is tainted only when some query's minimum could not be
-    * corroborated within [[MaxRetimePasses]] extra targeted passes —
-    * pass-level totals (dispersion/skew) and box-load numbers stay as
-    * annotations. Kept as a unit so the tainted-retry loop in main()
-    * can re-run the WHOLE measurement as the last resort. Its storage
-    * fields are left at 0 for `main` to fill after the timed passes. */
+    * corroborated within [[MaxRetimePasses]] extra targeted passes, or
+    * when other processes held more than [[LoadThreshold]] cores over
+    * the timed window. Pass-level totals (dispersion/skew) and box-load
+    * numbers stay annotations. Its storage fields are left at 0 for
+    * `main` to fill after the timed passes. */
   private def measure(spark: SparkSession, sfDir: String,
                       qs: Seq[(String, (SparkSession, String) => DataFrame)]): Measurement0 = {
     val loadStart = loadAvg1m()
-    // best-of-3 timed passes: single-pass timings on this shared box
-    // swing ±30-50% (same bytecode, both directions — scheduling/JIT/
-    // page-cache variance, plus sustained EXTERNAL load spikes from
-    // other tenants); the per-query minimum over three passes is the
-    // stable steady-state estimate and rides out a noisy window that
-    // best-of-2 cannot.
     val tWall0 = System.nanoTime()
     val busy0 = busyJiffiesAll(); val self0 = selfJiffies()
-    val passes = Seq(runPass(spark, sfDir, qs), runPass(spark, sfDir, qs), runPass(spark, sfDir, qs))
+    val passes = Seq.fill(3)(runPass(spark, sfDir, qs))
     val wallTimed = (System.nanoTime() - tWall0) / 1e9
     val busy1 = busyJiffiesAll(); val self1 = selfJiffies()
     val loadEnd = loadAvg1m()
@@ -187,31 +220,27 @@ object Bench {
       names.zipWithIndex.map { case (n, i) => n -> passes.map(_(i).sec).toVector }
     val errs = scala.collection.mutable.Map[String, String]()
     for (p <- passes; q <- p; e <- q.err) errs.getOrElseUpdate(q.name, e)
-    // targeted re-timing: only the queries whose minimum no other pass
-    // corroborates re-run, up to MaxRetimePasses times — a noisy window
-    // costs a handful of re-timed queries, not the whole 3-pass
-    // measurement (r15 shipped tainted:true on exactly that waste)
+    // only the queries whose minimum no other pass corroborates re-run
     def needy: Seq[String] =
       names.filter(n => !errs.contains(n) && !corroborated(times(n)))
     val retimed = scala.collection.mutable.Set[String]()
-    var extra = 0
+    val retimes = scala.collection.mutable.ArrayBuffer[Seq[QTime]]()
     var need = needy
-    while (need.nonEmpty && extra < MaxRetimePasses) {
+    while (need.nonEmpty && retimes.size < MaxRetimePasses) {
       retimed ++= need
       System.err.println(s"[bench] re-timing ${need.size} uncorroborated " +
-        s"queries (targeted pass ${extra + 1}/$MaxRetimePasses): " +
+        s"queries (targeted pass ${retimes.size + 1}/$MaxRetimePasses): " +
         need.take(8).mkString(", "))
-      val sub = qs.filter(q => need.contains(q._1))
-      for (q <- runPass(spark, sfDir, sub)) {
+      val pass = runPass(spark, sfDir, qs.filter(q => need.contains(q._1)))
+      for (q <- pass) {
         times(q.name) = times(q.name) :+ q.sec
         q.err.foreach(e => errs.getOrElseUpdate(q.name, e))
       }
-      extra += 1
+      retimes += pass
       need = needy
     }
     val results = names.map(n => QTime(n, times(n).min, errs.get(n)))
-    // Load annotations (judge r7 task 1, refined per r8 advice) — all
-    // annotation-only since r16; see corroborated() for the taint rule:
+    // Annotations:
     //  - other_cpu_cores: average cores consumed by OTHER processes over
     //    the timed window, from /proc/stat busy-jiffies minus this JVM's
     //    /proc/self/stat jiffies. Immune to our own load by construction.
@@ -226,19 +255,13 @@ object Bench {
       if (busy0 >= 0 && busy1 >= 0 && self0 >= 0 && self1 >= 0 && wallTimed > 0)
         ((busy1 - busy0) - (self1 - self0)) / hz / wallTimed
       else -1.0
-    // Taint triggers (ADVICE r16): per-query corroboration failure OR
-    // sustained external CPU over the whole timed window. The latter is
-    // the one contamination corroboration cannot see — uniform external
-    // load inflates every pass alike, so each query's minimum is
-    // "corroborated" at the inflated level. other_cpu_cores measures
-    // ONLY other processes' CPU by construction (busy-jiffies minus this
-    // JVM's), so it cannot re-introduce the r15 self-load false positive.
     Measurement0(results, wallTimed, passTotals, skew, otherCpuCores,
       loadStart, loadEnd,
       tainted = need.nonEmpty || otherCpuCores > LoadThreshold,
       storageMb = 0L, storageDiskMb = 0L,
       requeried = retimed.size,
-      unconverged = need)
+      unconverged = need,
+      passes = passes.map(Pass("timed", _)) ++ retimes.map(Pass("retime", _)))
   }
 
   // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
@@ -280,35 +303,64 @@ object Bench {
 
   /** One measurement as rendered: the timings of [[measure]] and the
     * post-suite storage reading (separate, so the spec can synthesize
-    * one without a full timed phase). */
+    * one without a full timed phase), and its passes for the ledger. */
   final case class Measurement0(
     results: Seq[QTime], wallTimed: Double, passTotals: Seq[Double],
     skew: Double, otherCpuCores: Double, loadStart: Double, loadEnd: Double,
     tainted: Boolean, storageMb: Long, storageDiskMb: Long,
     requeried: Int = 0, unconverged: Seq[String] = Nil,
-    storageTop: Seq[(String, Long)] = Nil)
+    storageTop: Seq[(String, Long)] = Nil, passes: Seq[Pass] = Nil)
+
+  /** One pass over (a subset of) the query set: `warmup`, `timed` or
+    * `retime`. */
+  final case class Pass(kind: String, times: Seq[QTime])
+
+  /** A block-manager resident named by its creation site. */
+  final case class Resident(site: String, memBytes: Long, diskBytes: Long)
+
+  /** The run's ledger, one JSON object per line:
+    *  - per (query, pass): `query`, `pass` (its index in `passes`: 0 is
+    *    the warm-up in a run), `kind`, `sec`, `err` (null when it ran),
+    *    the [[Counters]] (`jobs`, `stages`, `tasks`, `shuffle_read`,
+    *    `shuffle_write` bytes, `exec_run_ms`, `exec_cpu_ms`, `gc_ms`)
+    *    and `top_stages`;
+    *  - per retained resident: `resident`, `mem_bytes`, `disk_bytes`;
+    *  - per BoundProbe kernel: `kernel`, `used`, `bound`. */
+  def renderLedger(passes: Seq[Pass], residents: Seq[Resident],
+                   bounds: Seq[(String, Int, Int)]): String = {
+    def str(s: String) = "\"" + clean(s) + "\""
+    val queries = for ((p, i) <- passes.zipWithIndex; q <- p.times) yield {
+      val c = q.c
+      val top = c.top.map(s =>
+        s"""{"stage":${s.id},"run_ms":${s.runMs},"tasks":${s.tasks},"scopes":${str(s.scopes)}}""")
+      s"""{"query":${str(q.name)},"pass":$i,"kind":"${p.kind}","sec":${ms(q.sec)},"err":${q.err.fold("null")(str)},""" +
+        s""""jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},"shuffle_read":${c.shuffleRead},"shuffle_write":${c.shuffleWrite},""" +
+        s""""exec_run_ms":${c.runMs},"exec_cpu_ms":${c.cpuMs},"gc_ms":${c.gcMs},"top_stages":${top.mkString("[", ",", "]")}}"""
+    }
+    val stored = residents.map(r =>
+      s"""{"resident":${str(r.site)},"mem_bytes":${r.memBytes},"disk_bytes":${r.diskBytes}}""")
+    val used = bounds.map { case (k, u, b) => s"""{"kernel":${str(k)},"used":$u,"bound":$b}""" }
+    (queries ++ stored ++ used).map(_ + "\n").mkString
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     awaitQuietStart()
     val spark = GraftSession.local()
-    // SPARK_GRAFT_ONLY: comma-separated name-prefix filter for LOCAL
-    // iteration on a query subset with the full bench methodology
-    // (quiet-wait, warm-up, best-of-3, corroboration). The driver never
-    // sets it; the artifact it produces is partial by construction and
-    // is never committed as a round bench.
+    // SPARK_GRAFT_ONLY: comma-separated query-name prefixes. A subset run
+    // keeps the whole method (quiet-wait, warm-up, best-of-3,
+    // corroboration, ledger); its artifact is partial by construction.
     val qs = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY")).toSeq.sortBy(_._1)
-    runPass(spark, sfDir, qs) // warm-up pass at the sf under test (untimed)
-    // Tainted-retry (VERDICT-r13 task 2): a measurement that self-flags
-    // tainted is invalid by its own tool — BENCH_r13 shipped with skew
-    // 1.537 and overstated the total by ~27% vs the judge's quiet-box
-    // re-runs. Re-measure up to 2 more times (re-awaiting a quiet
-    // window between attempts) before accepting a tainted result.
+    val ledger = scala.collection.mutable.ArrayBuffer(Pass("warmup", runPass(spark, sfDir, qs)))
+    // a measurement that taints itself is invalid by its own rule: it is
+    // re-run up to 2 more times, each after a quiet window, and the
+    // last one is accepted with `tainted:true`
     var attempts = 0
     var m = null.asInstanceOf[Measurement0]
     var accepted = false
     while (!accepted) {
       m = measure(spark, sfDir, qs)
+      ledger ++= m.passes
       attempts += 1
       accepted = !m.tainted || attempts >= 3
       if (!accepted) {
@@ -321,58 +373,44 @@ object Bench {
     }
     if (m.results.exists(_.err.isDefined))
       System.err.println(s"[bench] ${m.results.count(_.err.isDefined)} QUERIES FAILED — see errors_detail")
-    // storage diagnostic (r12 drift investigation): how much of the
-    // block-manager memory the session memos + cached artifacts occupy
-    // after the timed passes, and whether anything spilled to disk —
-    // cache EVICTION during a pass silently converts warm memoized
-    // reads into recomputes and was the r11 suspect for the 5-22%
-    // graph-family drift. VERDICT-r11 task 3 finding: eviction ruled
-    // out (76 MB cached, 0 on disk, pool is GBs). These two fields pin
-    // the eviction check machine-readably for every future round.
-    // VERDICT-r13 task 5 audit (tools/StorageAudit, 3 full suite passes
-    // at sf0.1): post-pass storage is FLAT at 92 MB — per-pass staging
-    // checkpoints are reclaimed by the ContextCleaner during the next
-    // pass, and the retained set is the intentional session memos
-    // (adjacency tables, sigma towers, dedup pair sets). The r13 612 MB
-    // reading did not reproduce on a quiet box; storage_ok pins the
-    // ≤ 200 MB budget machine-readably so a regression self-flags.
-    // VERDICT-r15 task 3: the reading RACES the async ContextCleaner —
-    // after retry passes on a loaded box, not-yet-reclaimed per-pass
-    // staging checkpoints inflated r15's number to 272 MB (109 MB quiet,
-    // same code). localCheckpoint RDDs unpersist once their last
-    // reference is GC'd; force that path (the StorageAudit drain
-    // convention) so the number measures the RETAINED set, then itemize
-    // the top residents whenever the budget is still breached so a real
-    // accumulation names its culprit.
+    // Storage is the RETAINED set: a superseded staging checkpoint is
+    // unpersisted by the ContextCleaner only once a GC collects its last
+    // reference, so drain that path before reading.
     System.gc(); Thread.sleep(3000); System.gc(); Thread.sleep(3000)
-    val st = spark.sparkContext.getRDDStorageInfo
+    val sc = spark.sparkContext
+    val st = sc.getRDDStorageInfo.sortBy(-_.memSize)
     val (storUsedMb, storDiskMb) =
       (st.map(_.memSize).sum / 1048576, st.map(_.diskSize).sum / 1048576)
     val storageTop: Seq[(String, Long)] =
       if (storUsedMb > StorageBudgetMb)
-        st.sortBy(-_.memSize).take(10)
-          .map(i => (Option(i.name).getOrElse(s"rdd_${i.id}"), i.memSize / 1048576))
-          .toSeq
+        st.take(10).map(i => (Option(i.name).getOrElse(s"rdd_${i.id}"), i.memSize / 1048576)).toSeq
       else Nil
     if (storUsedMb > StorageBudgetMb)
       System.err.println(s"[bench] storage ${storUsedMb} MB exceeds the " +
         s"$StorageBudgetMb MB post-suite budget even after a cleaner " +
         s"drain — top residents: ${storageTop.mkString("; ")}")
+    // a persisted RDD's toString names its creation site, which says
+    // which memo it belongs to
+    val live = sc.getPersistentRDDs
+    val residents = st.toSeq.map(i => Resident(
+      live.get(i.id).fold(Option(i.name).getOrElse(s"rdd_${i.id}"))(_.toString).take(200),
+      i.memSize, i.diskSize))
     val line = renderJson(
       m.copy(storageMb = storUsedMb, storageDiskMb = storDiskMb, storageTop = storageTop),
       sfDir, attempts)
     println(line)
-    // also land the line in a file: stdout goes through sbt's [info]
-    // prefixing and tail-truncation, which has defeated the driver's
-    // JSON parse three rounds running — the file is the durable copy.
-    val out = java.nio.file.Paths.get("target/bench.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.writeString(out, line + "\n")
+    // the files are the durable copies: stdout goes through sbt's
+    // prefixing and the caller's tail truncation
+    def write(name: String, text: String): Unit = {
+      val out = java.nio.file.Paths.get("target", name)
+      java.nio.file.Files.createDirectories(out.getParent)
+      java.nio.file.Files.writeString(out, text)
+    }
+    write("bench.json", line + "\n")
+    write("bench_queries.jsonl", renderLedger(ledger.toSeq, residents, tools.BoundProbe.all))
     spark.stop()
     // and once more on BOTH streams after spark.stop(), so the line is
-    // the process's final output regardless of which stream the driver
-    // tails and where it truncates (r5 judge: "parsed": null five rounds
-    // running while the stdout line was valid — belt and braces).
+    // the process's final output whichever stream is tailed
     println(line)
     System.err.println(line)
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one way the engine's mains (Bench, Verify, the dev tools) and the
+/** The one way the engine's mains (Bench and Verify) and the
   * test suite build a session. The conf is part of the results'
   * contract: shuffle partitions track the core count, timestamps are
   * UTC, a TIMESTAMP(NANOS) parquet column reads as a long, and the UI

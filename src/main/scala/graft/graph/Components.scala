@@ -26,14 +26,17 @@ import scala.collection.mutable
   * (EdgeCaseSpec drives a 30-link chain), and the stats cap keeps
   * PLANNING cost O(1) too: a merge that joins a generation against a
   * frame derived from itself squares the size-only estimate per round
-  * (see GenSnap's Scaladoc for the measured Borůvka blowup). One job
-  * per round is the minimum for a driver-counted fixpoint: skipping a
-  * count would leave a generation unmaterialized, and eager
-  * checkpoints cost two jobs per round. Round caps are loud
-  * `require`s, never silent truncation, and every loop records its
-  * rounds in [[graft.tools.BoundProbe]]. Superseded generations are
-  * dereferenced and reclaimed by the ContextCleaner; the caller owns
-  * the edge cache. The peeling kernels ([[kCorePeel]], [[coreNumbers]],
+  * (see GenSnap's Scaladoc for the measured Borůvka blowup). One
+  * driver count per round is the minimum for a driver-counted
+  * fixpoint: skipping a count would leave a generation
+  * unmaterialized. Under AQE that count is two jobs over a generation
+  * of more than one partition, a map-stage job for the count's
+  * exchange and then the result job ([[Fixpoint]]; the Bench ledger
+  * reads 52 jobs for `graph_weighted_sssp`'s 8 rounds at sf0.1).
+  * Round caps are loud `require`s, never silent truncation, and every
+  * loop records its rounds in [[graft.tools.BoundProbe]]. Superseded
+  * generations are dereferenced and reclaimed by the ContextCleaner;
+  * the caller owns the edge cache. The peeling kernels ([[kCorePeel]], [[coreNumbers]],
   * [[kTruss]]) run a generation of at most [[Fixpoint.TaskRows]] rows
   * as one task instead ([[Fixpoint.inTask]]), with the same rounds.
   *

@@ -13,7 +13,14 @@ import org.apache.spark.util.CollectionAccumulator
   * itself or a filter over it. That count is the round's one driver
   * action over the generation; as a full scan it materializes the lazy
   * checkpoint and truncates the lineage, so plan depth stays O(1)
-  * however many rounds run.
+  * however many rounds run. One count is not one job: over a generation
+  * of more than one partition, `count()` plans a partial count, an
+  * exchange and a final count, and AQE runs the exchange's map stage as
+  * a job of its own before the result job, so a distributed round costs
+  * at least two jobs. In the Bench ledger every stage is its own job:
+  * `graph_weighted_sssp` at sf0.1 runs 8 rounds in 52 jobs of 52
+  * stages per warm pass. The in-task path's count reads one partition,
+  * needs no exchange and is one job.
   *
   * A fixpoint whose measured generation has at most [[TaskRows]] rows
   * runs instead as one executor task ([[inTask]]): the kernel's rounds

@@ -31,5 +31,11 @@ object BoundProbe {
 
   def maxUsed(kernel: String): Option[(Int, Int)] = Option(used.get(kernel))
 
+  /** Every record as (kernel, max used, bound), by kernel name. */
+  def all: Seq[(String, Int, Int)] = {
+    import scala.jdk.CollectionConverters._
+    used.asScala.toSeq.map { case (k, (u, b)) => (k, u, b) }.sortBy(_._1)
+  }
+
   def clear(): Unit = used.clear()
 }

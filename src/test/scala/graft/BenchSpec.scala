@@ -1,11 +1,11 @@
 package graft
 
-/** VERDICT-r13 task 1: the bench harness must never report a throwing
-  * query as a plausible timing. r12's graph_temporal_reach crash shipped
-  * as a "6.56 s" number for a full round because the timed pass swallowed
-  * the exception. These tests drive Bench's real runPass/merge/renderJson
-  * with a deliberately broken query and pin that the throw is visibly
-  * recorded as an error — excluded from the timings map AND the total. */
+/** Bench's harness invariants: a throwing query is recorded as an
+  * error, never a plausible timing (excluded from the timings map AND
+  * the total), and each query's ledger record holds exactly its own
+  * jobs, its error and every pass it ran in. These tests drive Bench's
+  * real runPass/merge/renderJson/renderLedger with toy and deliberately
+  * broken queries. */
 class BenchSpec extends SparkSpec {
   import Bench.{QTime, Measurement0}
   import org.apache.spark.sql.DataFrame
@@ -143,5 +143,51 @@ class BenchSpec extends SparkSpec {
       storageMb = Bench.StorageBudgetMb + 1, storageDiskMb = 0L)
     assert(Bench.renderJson(m, "/tmp/sf", attempts = 1)
       .contains(""""storage_ok":false"""))
+  }
+
+  test("each query's ledger record holds exactly its own jobs") {
+    val toy: Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)] = Seq(
+      "lean" -> ((s, _) => s.range(10).toDF()),
+      // two more jobs while the frame is built, before its count
+      "busy" -> ((s, _) => { s.range(5).collect(); s.range(6).collect(); s.range(7).toDF() }))
+    val expected = toy.map { case (n, fn) => n -> jobsInGroup(fn(spark, sf).count()) }.toMap
+    assert(expected("lean") > 0 && expected("busy") > expected("lean"), expected)
+    val pass = Bench.runPass(spark, sf, toy)
+    for (q <- pass) {
+      assert(q.c.jobs == expected(q.name), s"${q.name}: ${q.c} vs ${expected(q.name)} jobs")
+      assert(q.c.stages > 0 && q.c.tasks >= q.c.stages && q.c.top.nonEmpty, q.c)
+    }
+  }
+
+  test("the ledger carries a thrown query's error on its record") {
+    val pass = Bench.runPass(spark, sf, qs)
+    val lines = Bench.renderLedger(Seq(Bench.Pass("timed", pass)), Nil, Nil).linesIterator.toSeq
+    def record(q: String) = lines.find(_.startsWith(s"""{"query":"$q",""")).get
+    val err = pass.find(_.name == "broken_query").get.err.get
+    assert(record("broken_query").contains(s""""err":"$err","""), record("broken_query"))
+    assert(record("ok_query").contains(""""err":null,"""), record("ok_query"))
+  }
+
+  test("renderLedger writes a record per query per pass, then residents and bounds") {
+    val top = Seq(Bench.Stage(7, 120L, 4, "Exchange | Scan parquet"))
+    def pass(kind: String, sec: Double) = Bench.Pass(kind, Seq(
+      QTime("a", sec, None, Bench.Counters(jobs = 3, stages = 4, tasks = 9, top = top)),
+      QTime("b", sec, Some("SparkException: deliberate"))))
+    val passes = pass("warmup", 2.0) +: Seq(1.0, 1.1, 1.2).map(pass("timed", _))
+    val lines = Bench.renderLedger(passes,
+      Seq(Bench.Resident("MapPartitionsRDD[3] at count at X.scala:1", 2048L, 0L)),
+      Seq(("min_label", 9, Int.MaxValue))).linesIterator.toSeq
+    assert(lines.size == 4 * 2 + 1 + 1, lines.mkString("\n"))
+    for (q <- Seq("a", "b")) {
+      val recs = lines.filter(_.startsWith(s"""{"query":"$q","""))
+      assert(recs.map(_.replaceAll(""".*"pass":(\d+),"kind":"(\w+)".*""", "$1 $2")) ==
+        Seq("0 warmup", "1 timed", "2 timed", "3 timed"), recs)
+    }
+    assert(lines.head == """{"query":"a","pass":0,"kind":"warmup","sec":2.000,"err":null,""" +
+      """"jobs":3,"stages":4,"tasks":9,"shuffle_read":0,"shuffle_write":0,"exec_run_ms":0,""" +
+      """"exec_cpu_ms":0,"gc_ms":0,"top_stages":[{"stage":7,"run_ms":120,"tasks":4,""" +
+      """"scopes":"Exchange | Scan parquet"}]}""")
+    assert(lines(8) == """{"resident":"MapPartitionsRDD[3] at count at X.scala:1","mem_bytes":2048,"disk_bytes":0}""")
+    assert(lines(9) == """{"kernel":"min_label","used":9,"bound":2147483647}""")
   }
 }

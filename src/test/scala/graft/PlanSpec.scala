@@ -317,6 +317,24 @@ class PlanSpec extends SparkSpec {
       s"edit-distance verify must appear above the join, not in a scan:\n$p")
   }
 
+  test("fuzzy-match verify reads both block sides through an exchange, never at scan width") {
+    // the levenshtein verify runs in the join's stage; a side read
+    // straight from the part scan would run it at the scan's 1-2 splits
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    def shuffledBeforeScan(p: SparkPlan): Boolean = p match {
+      case _: ShuffleExchangeExec => true
+      case _: FileSourceScanExec => false
+      case o => o.children.forall(shuffledBeforeScan)
+    }
+    val joins = operators(SparkEntry.queries("dedup_fuzzy_blocked")(spark, sf))
+      .collect { case j: BaseJoinExec => j }
+    assert(joins.size == 1, joins.mkString("\n"))
+    assert(joins.head.children.forall(shuffledBeforeScan),
+      s"a block side reaches the join unshuffled:\n${joins.head}")
+  }
+
   test("jaccard link prediction builds candidates from the wedge equi-join") {
     val p = plan("graph_jaccard_linkpred")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),

@@ -81,35 +81,6 @@ class Round14Spec extends SparkSpec {
     assert(out.length == 4)
   }
 
-  // ── per-query staging is reclaimed, never accumulated (VERDICT r13 #5) ─
-  // r13's bench shipped a 612 MB post-suite storage reading (vs 76 MB in
-  // r12). The 3-pass StorageAudit at sf0.1 measures FLAT 92 MB on this
-  // code — per-pass staging checkpoints (GenSnap generations, z-order
-  // staging) die with their references via the ContextCleaner, and only
-  // the intentional session memos persist. This test pins the mechanism:
-  // repeated runs of the staging-heaviest queries must not grow the
-  // block manager beyond the first run's footprint.
-  test("repeated staging-heavy runs do not accumulate block-manager storage") {
-    def storMb: Double =
-      spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / 1048576.0
-    def runOnce(): Unit = {
-      SparkEntry.queries("graph_temporal_reach")(spark, sf).count()
-      SparkEntry.queries("rel_zorder_layout")(spark, sf).count()
-      SparkEntry.queries("ann_nndescent_incremental")(spark, sf).count()
-    }
-    runOnce() // memos + first-pass staging
-    val after1 = storMb
-    for (_ <- 1 to 3) runOnce()
-    // the cleaner drains dropped checkpoint refs asynchronously post-GC
-    System.gc()
-    var last = -1.0; var cur = storMb; var spins = 0
-    while (cur != last && spins < 30) { last = cur; Thread.sleep(200); cur = storMb; spins += 1 }
-    info(f"storage after pass 1: $after1%.1f MB; after 4 passes + gc: $cur%.1f MB")
-    assert(cur <= after1 * 1.2 + 8.0,
-      f"block-manager storage grew from $after1%.1f to $cur%.1f MB over 3 " +
-        "repeat passes — per-query staging is being pinned instead of reclaimed")
-  }
-
   // ── power-iteration family: structural job-count pin (VERDICT r13 #7) ─
   // graph_pagerank_exact / graph_ppr_seed build ONE lazy 5-iteration
   // plan — a single action, with AQE materializing one shuffle stage per

@@ -35,6 +35,28 @@ abstract class SparkSpec extends AnyFunSuite {
     p.toString
   }
 
+  private var groups = 0
+
+  /** Spark jobs started on this thread while `body` runs. A marker job in
+    * a second group runs after it; the status store applies job events in
+    * order, so once the marker shows, every job of `body` has too. */
+  protected def jobsInGroup(body: => Any): Int = {
+    val sc = spark.sparkContext
+    groups += 1
+    val group = s"${getClass.getSimpleName}-jobs-$groups"
+    val marker = s"$group-marker"
+    sc.setJobGroup(group, group, interruptOnCancel = false)
+    try body finally sc.clearJobGroup()
+    sc.setJobGroup(marker, marker, interruptOnCancel = false)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    var spins = 0
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && spins < 200) {
+      Thread.sleep(50); spins += 1
+    }
+    assert(spins < 200, "the marker job never reached the status store")
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
   /** The `.jpeg` files of the reference corpus, sorted by name. Where the
     * corpus directory is absent the calling test is canceled, not failed;
     * a directory that is present but holds no `.jpeg` fails. */

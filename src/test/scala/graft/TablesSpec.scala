@@ -20,28 +20,6 @@ class TablesSpec extends SparkSpec {
   private def copyInto(dir: String, t: String): Unit =
     Files.copy(Paths.get(sf, s"$t.parquet"), Paths.get(dir, s"$t.parquet"))
 
-  private var groups = 0
-
-  /** Spark jobs started on this thread while `body` runs. A marker job in
-    * a second group runs after it; the status store applies job events in
-    * order, so once the marker shows, every job of `body` has too. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    groups += 1
-    val group = s"tables-spec-$groups"
-    val marker = s"$group-marker"
-    sc.setJobGroup(group, group, interruptOnCancel = false)
-    try body finally sc.clearJobGroup()
-    sc.setJobGroup(marker, marker, interruptOnCancel = false)
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    var spins = 0
-    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && spins < 200) {
-      Thread.sleep(50); spins += 1
-    }
-    assert(spins < 200, "the marker job never reached the status store")
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
-
   test("the pinned schema equals the inferred schema for every table") {
     val dir = copyOf(names)
     for (t <- names) {
@@ -60,16 +38,16 @@ class TablesSpec extends SparkSpec {
 
   test("a repeat read of a table in the same session starts no job") {
     val dir = copyOf(Seq("orders"))
-    val first = jobsOf(Tables.orders(spark, dir))
-    val second = jobsOf(Tables.orders(spark, dir))
+    val first = jobsInGroup(Tables.orders(spark, dir))
+    val second = jobsInGroup(Tables.orders(spark, dir))
     assert(first >= 1, s"the first read started $first jobs; schema inference should start one")
     assert(second === 0, s"a repeat read started $second jobs")
   }
 
   test("two spellings of one directory share one pin") {
     val dir = copyOf(Seq("part"))
-    assert(jobsOf(Tables.part(spark, dir)) >= 1)
-    assert(jobsOf(Tables.part(spark, dir + "/")) === 0,
+    assert(jobsInGroup(Tables.part(spark, dir)) >= 1)
+    assert(jobsInGroup(Tables.part(spark, dir + "/")) === 0,
       s"`$dir/` pinned the schema a second time")
   }
 
