@@ -1,6 +1,8 @@
 package graft.cluster
 
 import graft.{Q, Tables}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -124,7 +126,7 @@ object Classify {
     // driver-hashable, which float log-likelihoods never are. Per-term
     // weights −ln((c(w,c)+1)/(tokens_c+V)) and per-class priors
     // −ln(docs_c/docs) are floor-quantized to the 2^-20 dyadic grid
-    // (the surprisal convention: ClassifySpec sweeps every observed
+    // (the surprisal convention: Round10Spec sweeps every observed
     // ratio's distance to a floor boundary, so cross-engine ln ulps
     // cannot flip a cell), making each document's NLL an order-free
     // exact sum; the argmin ties to the smallest class name. Train/test
@@ -401,109 +403,13 @@ object Classify {
     // rest of the NB family); the cross-fold mean is arithmetic on the
     // 5-row result. The oracle stacks five suffix-disambiguated copies
     // of the SAME CTE chain the other NB queries share — five folds, one
-    // statement, zero drift. SCALE: 5 passes over the corpus, each the
-    // ml_naive_bayes plan; folds are independent, so a cluster runs them
-    // concurrently (here they union into one dataflow and Spark
-    // schedules the five subtrees in parallel).
+    // statement, zero drift. SCALE: one corpus tokenization feeds all
+    // five folds' models and scoring passes ([[kfoldScored]]).
     Q(
       "ml_kfold_cv",
       (s, d) => {
-        // r17 optimization round (guide §1.2 step 1): the former shape
-        // ran FIVE independent NB chains — ten corpus tokenizations, a
-        // dozen single-task documents.parquet scan stages (the probe's
-        // top-12). The five folds partition the corpus by the SAME
-        // id-hash residue, so every fold-f statistic is derivable from
-        // per-residue slices of ONE tokenization: train_f counts =
-        // all-residue counts MINUS residue f's (exact BIGINT
-        // subtraction), train_f vocabulary = all terms minus the terms
-        // whose ONLY residue is f, priors likewise — and every test doc
-        // belongs to exactly one fold, so all five scoring passes ride
-        // one tf frame. The -log/floor quantization sees identical
-        // integer operands and the per-(doc, lang) sums are dyadic on
-        // the 2^-20 grid (order-free in double), so every nll — and the
-        // 5-row report — is bit-identical to the unfused chains (pinned
-        // per fold in OptimizeR17Spec; the stacked 5-chain oracle is
-        // untouched).
-        import graft.ops.Text.tokens
-        val grid = lit(1048576.0)
-        val docs = documents(s, d)
-          .withColumn("res", detHash(col("doc_id")) % 5)
-        val toks = docs
-          .select(col("res"), col("doc_id"), col("lang"),
-            explode(tokens(col("text"))).as("term"))
-          .transform(GenSnap.snap) // models + tf read ONE tokenization
-        // per-(lang, term): all-residue count + the 5 residue slices
-        val cwcPiv = toks.groupBy(col("lang"), col("term"))
-          .agg(count(lit(1)).as("cntAll"),
-            (0 until 5).map(r =>
-              sum(when(col("res") === r, 1L).otherwise(0L)).as(s"c$r")): _*)
-        // per-(fold, lang) model table: train token totals, vocab size,
-        // prior — a ≤ 5×|langs| frame, broadcast into the scoring join
         val folds = s.range(0, 5).select(col("id").as("fold"))
-        val rtot = toks.groupBy("res", "lang").agg(count(lit(1)).as("rt"))
-        val ctotF = folds.crossJoin(
-            rtot.groupBy("lang").agg(sum("rt").as("ta")))
-          .join(rtot.select(col("res").as("tr"), col("lang").as("tl"),
-              col("rt")),
-            col("tr") === col("fold") && col("tl") === col("lang"), "left")
-          .select(col("fold"), col("lang"),
-            (col("ta") - coalesce(col("rt"), lit(0L))).as("tot"))
-          // a candidate lang for fold f is one with ≥ 1 train TOKEN —
-          // exactly the per-fold ctot's key set in the unfused chains
-          .filter(col("tot") > 0)
-        val singles = toks.select("res", "term").distinct()
-          .groupBy("term").agg(count(lit(1)).as("k"), min("res").as("r0"))
-        val vF = folds.crossJoin(
-            broadcast(singles.agg(count(lit(1)).as("vAll"))))
-          .join(singles.filter(col("k") === 1).groupBy(col("r0"))
-              .agg(count(lit(1)).as("only")),
-            col("r0") === col("fold"), "left")
-          .select(col("fold").as("vfold"),
-            (col("vAll") - coalesce(col("only"), lit(0L))).as("v"))
-        val dres = docs.groupBy("res", "lang").agg(count(lit(1)).as("nd"))
-        val priorF = folds.crossJoin(
-            dres.groupBy("lang").agg(sum("nd").as("nda")))
-          .crossJoin(broadcast(dres.agg(sum("nd").as("nAll"))))
-          .join(dres.select(col("res").as("pr"), col("lang").as("pl"),
-              col("nd")),
-            col("pr") === col("fold") && col("pl") === col("lang"), "left")
-          .join(dres.groupBy("res").agg(sum("nd").as("nr"))
-              .select(col("res").as("qr"), col("nr")),
-            col("qr") === col("fold"), "left")
-          .select(col("fold").as("pfold"), col("lang").as("plang"),
-            (floor(-log(
-              (col("nda") - coalesce(col("nd"), lit(0L))).cast("double") /
-              (col("nAll") - coalesce(col("nr"), lit(0L))).cast("double"))
-              * grid) / grid).as("psq"))
-        val mt = ctotF
-          .join(vF, col("fold") === col("vfold"))
-          .join(priorF,
-            col("fold") === col("pfold") && col("lang") === col("plang"))
-          .select(col("fold"), col("lang"), col("tot"), col("v"), col("psq"))
-        // one tf pass over ALL test docs (each doc tests in exactly its
-        // own residue's fold)
-        val tf = toks
-          .groupBy(col("res"), col("doc_id"), col("lang").as("true_lang"),
-            col("term"))
-          .agg(count(lit(1)).as("tf"))
-        val ownCnt = expr("CASE res WHEN 0 THEN c0 WHEN 1 THEN c1 " +
-          "WHEN 2 THEN c2 WHEN 3 THEN c3 ELSE c4 END")
-        val scored = tf
-          .join(broadcast(mt), col("fold") === col("res"))
-          .join(cwcPiv.select(col("lang").as("cl"), col("term").as("ct"),
-              col("cntAll"), col("c0"), col("c1"), col("c2"), col("c3"),
-              col("c4")),
-            col("cl") === col("lang") && col("ct") === col("term"), "left")
-          .select(col("res"), col("doc_id"), col("true_lang"), col("lang"),
-            col("psq"), col("tf"),
-            (floor(-log(
-              (coalesce(col("cntAll") - ownCnt, lit(0L)) + 1L).cast("double") /
-              (col("tot") + col("v")).cast("double")) * grid) / grid).as("sq"))
-          .groupBy(col("res"), col("doc_id"), col("true_lang"), col("lang"),
-            col("psq"))
-          .agg(sum(col("tf").cast("double") * col("sq")).as("llsum"))
-          .select(col("res"), col("doc_id"), col("true_lang"), col("lang"),
-            (col("psq") + col("llsum")).as("nll"))
+        val scored = kfoldScored(s, d)
         // each doc_id belongs to exactly one fold, so the per-doc argmin
         // window is the five per-fold windows in one pass
         val preds = scored.withColumn("rk", row_number().over(
@@ -637,7 +543,7 @@ object Classify {
     // (≤1000 tuples — never data-sized), each mean ONE division of
     // exact BIGINT segment sums, and the min/max select among doubles
     // both engines computed bit-identically (selection, never
-    // accumulation). Round12Spec cross-checks against a driver PAV
+    // accumulation). ClassifySpec cross-checks against a driver PAV
     // pooling replay and pins monotonicity.
     Q(
       "ml_isotonic_calibration",
@@ -715,7 +621,7 @@ object Classify {
     // behind a raise_error guard at 10× headroom so Spark fails as
     // loudly as DuckDB would past n₊·n₋ ≈ 2^63.
     // SCALE: one partial-agg shuffle to score groups + a window over
-    // thousands of rows + two 1-row aggregates. Round12Spec replays the
+    // thousands of rows + two 1-row aggregates. ClassifySpec replays the
     // whole statistic from the raw scores on the driver.
     Q(
       "ml_ks_test",
@@ -980,41 +886,175 @@ object Classify {
   )
 
   /** Per-(test doc, candidate class) quantized negative log-likelihood —
-    * the shared scoring frame behind ml_naive_bayes / ml_confusion_prf /
-    * ml_auc / ml_kfold_cv. Columns: doc_id, true_lang, lang, nll (dyadic
-    * on the 2^-20 grid, so exact-comparable and integer-scalable on both
-    * engines). `fold` selects which id-hash residue is held out.
+    * the shared scoring frame behind the seven fold-0 NB queries
+    * (ml_naive_bayes, ml_confusion_prf, ml_auc, ml_reliability_bins,
+    * ml_pr_curve, ml_isotonic_calibration, ml_ks_test). Columns: doc_id,
+    * true_lang, lang, nll (dyadic on the 2^-20 grid, so exact-comparable
+    * and integer-scalable on both engines). `fold` selects which id-hash
+    * residue is held out.
+    *
+    * Invariants:
+    *  - '''One cold leaf per (session, normalized dir, fold).''' The
+    *    first call for a key tokenizes `documents`, trains the model,
+    *    scores the held-out fold and stages the frame with
+    *    `GenSnap.stage`; every later call, from any query, returns that
+    *    leaf, so a query plans over a scan of ~5k rows (sf0.1) and
+    *    neither reads nor tokenizes the corpus. [[nbBuilds]] counts the
+    *    builds.
+    *  - '''Session lifetime.''' The leaf lives until the session stops;
+    *    [[graft.SessionMemo]] drops the key on application end.
+    *  - '''The data dir is fixed for the session's life''', the same
+    *    contract as the `Tables` schema pin: a `documents` table
+    *    rewritten under a dir this session has already scored is not
+    *    re-read.
+    *  - '''Cold, and one fold per leaf.''' The cold leaf
+    *    (MEMORY_AND_DISK_SER) holds 0.35 MB of storage at sf0.1. On the
+    *    `iterative` perfbench workload (sf0.1, 4 vCPU) the `hot`
+    *    columnar form measured 5.0 queries/s against 5.9 for the cold
+    *    one, with heap +7.8 %; staging all five folds at once (the
+    *    fused [[kfoldScored]] frame) raised heap by 11.7 %, past the
+    *    benchmark's 10 % bound. So only the requested fold is staged.
     */
-  def nbNlls(s: SparkSession, d: String, fold: Int = 0): DataFrame = {
+  def nbNlls(s: SparkSession, d: String, fold: Int = 0): DataFrame =
+    nbMemo.getOrCompute(s, d)(new ConcurrentHashMap[Int, DataFrame])
+      .computeIfAbsent(fold, { _ =>
+        import graft.ops.Text.tokens
+        nbBuilds.incrementAndGet()
+        val docs = documents(s, d)
+        val train = docs.filter(detHash(col("doc_id")) % 5 =!= fold)
+        val test = docs.filter(detHash(col("doc_id")) % 5 === fold)
+        val trainToks = train
+          .select(col("lang"), explode(tokens(col("text"))).as("term"))
+          .transform(GenSnap.snap) // class counts + totals + V read one tokenization
+        val cwc = trainToks.groupBy("lang", "term").agg(count(lit(1)).as("cnt"))
+        val ctot = trainToks.groupBy("lang").agg(count(lit(1)).as("tot"))
+        val vsize = trainToks.agg(countDistinct(col("term")).as("v"))
+        val ndocs = train.groupBy("lang").agg(count(lit(1)).as("nd"))
+          .crossJoin(broadcast(train.agg(count(lit(1)).as("ndall"))))
+        val grid = lit(1048576.0)
+        val prior = ndocs.select(col("lang"),
+          (floor(-log(col("nd").cast("double") / col("ndall").cast("double"))
+            * grid) / grid).as("psq"))
+        val tf = test
+          .select(col("doc_id"), col("lang").as("true_lang"),
+            explode(tokens(col("text"))).as("term"))
+          .groupBy("doc_id", "true_lang", "term").agg(count(lit(1)).as("tf"))
+        tf.crossJoin(broadcast(ctot.crossJoin(vsize)))
+          .join(cwc, Seq("lang", "term"), "left")
+          .select(col("doc_id"), col("true_lang"), col("lang"), col("tf"),
+            (floor(-log((coalesce(col("cnt"), lit(0L)) + 1L).cast("double") /
+              (col("tot") + col("v")).cast("double")) * grid) / grid).as("sq"))
+          .groupBy("doc_id", "true_lang", "lang")
+          .agg(sum(col("tf").cast("double") * col("sq")).as("llsum"))
+          .join(broadcast(prior), "lang")
+          .select(col("doc_id"), col("true_lang"), col("lang"),
+            (col("psq") + col("llsum")).as("nll"))
+          .transform(GenSnap.stage(_))
+      })
+
+  private val nbMemo = graft.SessionMemo[ConcurrentHashMap[Int, DataFrame]]()
+
+  /** Spec probe: how many [[nbNlls]] leaves were built in this process
+    * (the `Text.dupPairBuilds` convention). */
+  private[graft] val nbBuilds = new AtomicInteger(0)
+
+  /** ml_kfold_cv's fused scoring frame: every document's nll per
+    * candidate class, scored by the model of the one fold that holds it
+    * out. Columns: res (the doc's id-hash residue, i.e. its test fold),
+    * doc_id, true_lang, lang, nll.
+    *
+    * The five folds partition the corpus by the SAME id-hash residue, so
+    * every fold-f statistic derives from per-residue slices of ONE
+    * tokenization: train_f counts = all-residue counts MINUS residue f's
+    * (exact BIGINT subtraction), train_f vocabulary = all terms minus the
+    * terms whose ONLY residue is f, priors likewise — and every test doc
+    * belongs to exactly one fold, so all five scoring passes ride one tf
+    * frame (five independent [[nbNlls]] chains would tokenize the corpus
+    * ten times). The -log/floor quantization sees identical integer
+    * operands and the per-(doc, lang) sums are dyadic on the 2^-20 grid
+    * (order-free in double), so the rows at `res = f` equal
+    * `nbNlls(s, d, f)` bit for bit (pinned per fold in ClassifySpec).
+    */
+  private[graft] def kfoldScored(s: SparkSession, d: String): DataFrame = {
     import graft.ops.Text.tokens
-    val docs = documents(s, d)
-    val train = docs.filter(detHash(col("doc_id")) % 5 =!= fold)
-    val test = docs.filter(detHash(col("doc_id")) % 5 === fold)
-    val trainToks = train
-      .select(col("lang"), explode(tokens(col("text"))).as("term"))
-      .transform(GenSnap.snap) // class counts + totals + V read one tokenization
-    val cwc = trainToks.groupBy("lang", "term").agg(count(lit(1)).as("cnt"))
-    val ctot = trainToks.groupBy("lang").agg(count(lit(1)).as("tot"))
-    val vsize = trainToks.agg(countDistinct(col("term")).as("v"))
-    val ndocs = train.groupBy("lang").agg(count(lit(1)).as("nd"))
-      .crossJoin(broadcast(train.agg(count(lit(1)).as("ndall"))))
     val grid = lit(1048576.0)
-    val prior = ndocs.select(col("lang"),
-      (floor(-log(col("nd").cast("double") / col("ndall").cast("double"))
-        * grid) / grid).as("psq"))
-    val tf = test
-      .select(col("doc_id"), col("lang").as("true_lang"),
+    val docs = documents(s, d)
+      .withColumn("res", detHash(col("doc_id")) % 5)
+    val toks = docs
+      .select(col("res"), col("doc_id"), col("lang"),
         explode(tokens(col("text"))).as("term"))
-      .groupBy("doc_id", "true_lang", "term").agg(count(lit(1)).as("tf"))
-    tf.crossJoin(broadcast(ctot.crossJoin(vsize)))
-      .join(cwc, Seq("lang", "term"), "left")
-      .select(col("doc_id"), col("true_lang"), col("lang"), col("tf"),
-        (floor(-log((coalesce(col("cnt"), lit(0L)) + 1L).cast("double") /
+      .transform(GenSnap.snap) // models + tf read ONE tokenization
+    // per-(lang, term): all-residue count + the 5 residue slices
+    val cwcPiv = toks.groupBy(col("lang"), col("term"))
+      .agg(count(lit(1)).as("cntAll"),
+        (0 until 5).map(r =>
+          sum(when(col("res") === r, 1L).otherwise(0L)).as(s"c$r")): _*)
+    // per-(fold, lang) model table: train token totals, vocab size,
+    // prior — a ≤ 5×|langs| frame, broadcast into the scoring join
+    val folds = s.range(0, 5).select(col("id").as("fold"))
+    val rtot = toks.groupBy("res", "lang").agg(count(lit(1)).as("rt"))
+    val ctotF = folds.crossJoin(
+        rtot.groupBy("lang").agg(sum("rt").as("ta")))
+      .join(rtot.select(col("res").as("tr"), col("lang").as("tl"),
+          col("rt")),
+        col("tr") === col("fold") && col("tl") === col("lang"), "left")
+      .select(col("fold"), col("lang"),
+        (col("ta") - coalesce(col("rt"), lit(0L))).as("tot"))
+      // a candidate lang for fold f is one with ≥ 1 train TOKEN —
+      // exactly the per-fold ctot's key set in the unfused chains
+      .filter(col("tot") > 0)
+    val singles = toks.select("res", "term").distinct()
+      .groupBy("term").agg(count(lit(1)).as("k"), min("res").as("r0"))
+    val vF = folds.crossJoin(
+        broadcast(singles.agg(count(lit(1)).as("vAll"))))
+      .join(singles.filter(col("k") === 1).groupBy(col("r0"))
+          .agg(count(lit(1)).as("only")),
+        col("r0") === col("fold"), "left")
+      .select(col("fold").as("vfold"),
+        (col("vAll") - coalesce(col("only"), lit(0L))).as("v"))
+    val dres = docs.groupBy("res", "lang").agg(count(lit(1)).as("nd"))
+    val priorF = folds.crossJoin(
+        dres.groupBy("lang").agg(sum("nd").as("nda")))
+      .crossJoin(broadcast(dres.agg(sum("nd").as("nAll"))))
+      .join(dres.select(col("res").as("pr"), col("lang").as("pl"),
+          col("nd")),
+        col("pr") === col("fold") && col("pl") === col("lang"), "left")
+      .join(dres.groupBy("res").agg(sum("nd").as("nr"))
+          .select(col("res").as("qr"), col("nr")),
+        col("qr") === col("fold"), "left")
+      .select(col("fold").as("pfold"), col("lang").as("plang"),
+        (floor(-log(
+          (col("nda") - coalesce(col("nd"), lit(0L))).cast("double") /
+          (col("nAll") - coalesce(col("nr"), lit(0L))).cast("double"))
+          * grid) / grid).as("psq"))
+    val mt = ctotF
+      .join(vF, col("fold") === col("vfold"))
+      .join(priorF,
+        col("fold") === col("pfold") && col("lang") === col("plang"))
+      .select(col("fold"), col("lang"), col("tot"), col("v"), col("psq"))
+    // one tf pass over ALL test docs (each doc tests in exactly its
+    // own residue's fold)
+    val tf = toks
+      .groupBy(col("res"), col("doc_id"), col("lang").as("true_lang"),
+        col("term"))
+      .agg(count(lit(1)).as("tf"))
+    val ownCnt = expr("CASE res WHEN 0 THEN c0 WHEN 1 THEN c1 " +
+      "WHEN 2 THEN c2 WHEN 3 THEN c3 ELSE c4 END")
+    tf
+      .join(broadcast(mt), col("fold") === col("res"))
+      .join(cwcPiv.select(col("lang").as("cl"), col("term").as("ct"),
+          col("cntAll"), col("c0"), col("c1"), col("c2"), col("c3"),
+          col("c4")),
+        col("cl") === col("lang") && col("ct") === col("term"), "left")
+      .select(col("res"), col("doc_id"), col("true_lang"), col("lang"),
+        col("psq"), col("tf"),
+        (floor(-log(
+          (coalesce(col("cntAll") - ownCnt, lit(0L)) + 1L).cast("double") /
           (col("tot") + col("v")).cast("double")) * grid) / grid).as("sq"))
-      .groupBy("doc_id", "true_lang", "lang")
+      .groupBy(col("res"), col("doc_id"), col("true_lang"), col("lang"),
+        col("psq"))
       .agg(sum(col("tf").cast("double") * col("sq")).as("llsum"))
-      .join(broadcast(prior), "lang")
-      .select(col("doc_id"), col("true_lang"), col("lang"),
+      .select(col("res"), col("doc_id"), col("true_lang"), col("lang"),
         (col("psq") + col("llsum")).as("nll"))
   }
 

@@ -8,15 +8,16 @@ class PlanSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
-  /** Parquet scans of a query plan, unwrapping the AQE leaf wrapper. */
-  private def scansOf(name: String): Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
-    val p = SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
-    val unwrapped = p match {
+  /** A query's executed plan, unwrapping the AQE leaf wrapper. */
+  private def executed(name: String): org.apache.spark.sql.execution.SparkPlan =
+    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
       case o => o
     }
-    unwrapped.collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-  }
+
+  /** Parquet scans of a query plan, unwrapping the AQE leaf wrapper. */
+  private def scansOf(name: String): Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+    executed(name).collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
 
   test("filters are pushed down to the parquet scan") {
     val p = plan("rel_scan_filter_project")
@@ -410,7 +411,20 @@ class PlanSpec extends SparkSpec {
   }
 
   test("naive Bayes broadcasts the tiny class tables; tf-weight join is an equi-join") {
-    val p = plan("ml_naive_bayes")
+    // the NB chain runs once per (session, dir, fold), when its scoring
+    // leaf is staged, so this pins the plans of that build's actions,
+    // caught by a listener on a fresh session (fresh memo keys)
+    val fresh = spark.newSession()
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    fresh.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = built.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    })
+    cluster.Classify.nbNlls(fresh, sf)
+    org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
+    val p = built.toArray.mkString("\n")
     assert(p.contains("BroadcastExchange"), s"class totals/priors must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), s"no products:\n$p")
   }
@@ -745,6 +759,18 @@ class PlanSpec extends SparkSpec {
     // δ(1) = (1/1)(1 + 0.5) + (1/2)(1 + 1.0), folded in successor order
     assert(contrib.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq ==
       Seq((1L, 1L, 1.5 + 1.0)))
+  }
+
+  test("the fold-0 NB queries plan over the staged scoring leaf, not the corpus") {
+    // the first query stages the leaf; every plan after it reads only that
+    ClassifySpec.nbQueries.foreach { q =>
+      val docScans = scansOf(q).filter(
+        _.relation.location.rootPaths.exists(_.getName == "documents.parquet"))
+      assert(docScans.isEmpty, s"$q scans documents.parquet:\n${executed(q)}")
+    }
+    val gens = executed("ml_reliability_bins")
+      .collect { case g: org.apache.spark.sql.execution.GenerateExec => g }
+    assert(gens.isEmpty, "ml_reliability_bins must not tokenize")
   }
 }
 

@@ -75,28 +75,6 @@ class Round11Spec extends SparkSpec {
     }
   }
 
-  test("reliability bins: positive rate falls as the score bin rises") {
-    val rows = SparkEntry.queries("ml_reliability_bins")(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
-    assert(rows.nonEmpty)
-    // bins tile the test set
-    // lower NLL = more 'en'-like. Individual bins hold 5-13 docs at
-    // sf0.001, so per-bin rates are noisy — the robust claim is the
-    // halves: the bottom-half score range must be decisively more
-    // positive than the top half
-    val (lo, hi) = rows.partition(_._1 < 5)
-    val loRate = lo.map(_._3).sum.toDouble / lo.map(_._2).sum
-    val hiRate = hi.map(_._3).sum.toDouble / hi.map(_._2).sum
-    assert(loRate > hiRate,
-      s"bottom-half rate $loRate must exceed top-half rate $hiRate")
-    rows.zip(rows.drop(1)).foreach { case (a, b) =>
-      assert(a._5 < b._5, s"mean_nll must increase with bin: $a vs $b")
-    }
-    rows.foreach { case (_, n, np, rate, _) =>
-      assert(np <= n && rate == np.toDouble / n.toDouble)
-    }
-  }
-
   test("seasonal Holt-Winters is BIT-exactly the 7-slot recurrence") {
     val rows = SparkEntry.queries("evt_holt_winters_seasonal")(spark, sf).collect()
       .map(r => (r.get(0).toString, r.getDouble(1), r.getDouble(2), r.getDouble(3),
@@ -170,20 +148,6 @@ class Round11Spec extends SparkSpec {
     assert(ins === Set(1L, 2L, 3L))                       // nothing feeds the core
     // IN ∩ OUT = core exactly (mutual reachability with the core IS core)
     assert((ins intersect outs) === Set(1L, 2L, 3L))
-  }
-
-  test("PR curve: recall monotone to 1.0, precision ties to the cumulative ratio") {
-    val rows = SparkEntry.queries("ml_pr_curve")(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
-    assert(rows.length == 10)
-    rows.sliding(2).foreach { case Array(a, b) =>
-      assert(a._2 < b._2 && a._3 <= b._3, "cumulative counts must grow")
-      assert(a._5 <= b._5, "recall must be monotone in the cut")
-    }
-    assert(rows.last._5 == 1.0, "the loosest cut must recall every positive")
-    rows.foreach { case (_, n, tp, prec, _) =>
-      assert(prec == tp.toDouble / n.toDouble)
-    }
   }
 
   test("RFM: quintile scores balance and the code packs the three digits") {

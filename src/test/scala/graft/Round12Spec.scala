@@ -94,68 +94,6 @@ class Round12Spec extends SparkSpec {
     }
   }
 
-  test("isotonic calibration equals a driver PAV pooling replay and is antitonic") {
-    val rows = SparkEntry.queries("ml_isotonic_calibration")(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(4)))
-      .sortBy(_._1)
-    assert(rows.nonEmpty)
-    // pool-adjacent-violators, non-increasing direction: merge whenever a
-    // later block's mean EXCEEDS the previous block's (a violation)
-    var blocks = List.empty[(Long, Long)] // (n, np), head = latest
-    rows.foreach { case (_, n, np, _) =>
-      blocks = (n, np) :: blocks
-      def mean(b: (Long, Long)) = b._2.toDouble / b._1.toDouble
-      while (blocks.lengthCompare(2) >= 0 && mean(blocks.head) > mean(blocks(1))) {
-        val a = blocks.head; val b = blocks(1)
-        blocks = (a._1 + b._1, a._2 + b._2) :: blocks.drop(2)
-      }
-    }
-    // expand block means back onto bins: each block covers consecutive bins
-    // whose n-sum equals the block n — replay by walking bins
-    val fittedByBin = {
-      val out = Array.fill(rows.length)(0.0)
-      var bi = 0
-      blocks.reverse.foreach { case (bn, bnp) =>
-        var acc = 0L
-        val m = bnp.toDouble / bn.toDouble
-        while (acc < bn) { acc += rows(bi)._2; out(bi) = m; bi += 1 }
-        assert(acc == bn, "block boundary must align with bin boundaries")
-      }
-      out
-    }
-    rows.zipWithIndex.foreach { case ((bin, _, _, fitted), i) =>
-      assert(fitted == fittedByBin(i),
-        s"bin $bin: minimax fit $fitted != PAV replay ${fittedByBin(i)}")
-    }
-    rows.map(_._4).zip(rows.map(_._4).drop(1)).foreach { case (a, b) =>
-      assert(b <= a, "fitted curve must be non-increasing")
-    }
-  }
-
-  test("KS statistic equals a driver replay over the raw quantized scores") {
-    val r = SparkEntry.queries("ml_ks_test")(spark, sf).collect()(0)
-    val (nPos, nNeg, thr, ksNum, ksStat) =
-      (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3), r.getDouble(4))
-    val en = graft.cluster.Classify.nbNlls(spark, sf)
-      .filter(col("lang") === "en")
-      .select(floor(col("nll") * 1048576.0).cast("long").as("s"),
-        (col("true_lang") === "en").cast("long").as("p"))
-      .collect().map(x => (x.getLong(0), x.getLong(1)))
-    val np = en.count(_._2 == 1L).toLong
-    val nn = en.length - np
-    assert(nPos == np && nNeg == nn)
-    var cp = 0L; var cn = 0L; var best = BigInt(0); var bestS = Long.MaxValue
-    en.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (s2, xs) =>
-      cp += xs.count(_._2 == 1L); cn += xs.count(_._2 == 0L)
-      val d2 = (BigInt(cp) * nn - BigInt(cn) * np).abs
-      if (d2 > best || (d2 == best && s2 < bestS)) { best = d2; bestS = s2 }
-    }
-    assert(ksNum == best.toLong)
-    assert(thr == bestS.toDouble / 1048576.0)
-    assert(ksStat == best.toDouble / (np.toDouble * nn.toDouble))
-    assert(ksStat >= 0.0 && ksStat <= 1.0)
-  }
-
   test("power analysis reproduces the textbook two-proportion formula") {
     val r = SparkEntry.queries("evt_power_analysis")(spark, sf).collect()(0)
     val (n0, c0, nReq, nCeil) =
